@@ -170,7 +170,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       else None
     fromSidecar.orElse {
       GraftObjectTable.listObjects(dir.getPath).headOption
-        .map(ObjectFormat.readSchema)
+        .map(ObjectFormat.headerSchema)
     }.getOrElse(throw new NoSuchTableException(ident))
   }
 
@@ -201,7 +201,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       s"graft catalog: VERSION AS OF wants <k> or '<a>..<b>', got $version")
     val snap = s"${dir.getPath}@v$version"
     val schema = GraftObjectTable.listObjects(snap).headOption
-      .map(ObjectFormat.readSchema)
+      .map(ObjectFormat.headerSchema)
       .getOrElse(resolveSchema(ident, dir))
     new GraftObjectTable(schema, snap)
   }
