@@ -20,6 +20,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import com.github.luben.zstd.{Zstd, ZstdCompressCtx, ZstdDecompressCtx, ZstdException}
+
 /** Custom-storage object layout + DataSource V2 read path (SURVEY §1.1,
   * §4.2(3) — the reference's data model made real on Spark).
   *
@@ -105,7 +107,18 @@ object ObjectFormat {
   // row-major bodies are byte-identical to v5's. v≤5 objects still
   // read; mixed v5/v6 tables scan fine (layout decisions are
   // per-object-version).
-  val Version = 6
+  // v7: every columnar SEGMENT is stored zstd-compressed (one fixed
+  // level, [[ZstdLevel]], frames carry the content checksum) when that
+  // is smaller than the v6 segment, else raw — the bytes that leave
+  // storage are the scan's cost (SURVEY §3.1–3.2), and Arrow IPC
+  // compresses each body buffer on its own the same way. The segment
+  // directory gives TWO ints per column: the stored length (what
+  // tiles the body and what a read fetches) and the decoded length;
+  // stored == decoded means raw, stored > decoded is corrupt. A
+  // decoded segment is byte-identical to the v6 one, so both readers
+  // keep one v6 segment decoder. Row-major bodies are unchanged.
+  // v≤6 objects still read.
+  val Version = 7
   val MinVersion = 2
   val LayoutRow = 0
   val LayoutColumnar = 1
@@ -114,6 +127,28 @@ object ObjectFormat {
     * vectorized read path. Row-major stays a write option (and every
     * v≤4 object still reads). */
   val DefaultColumnar = true
+
+  /** The one zstd level of v7 segments. On the sf0.1 lineitem, level 2
+    * stores 10% fewer bytes than level 1 (l_extendedprice: 0.52 of raw
+    * vs 0.77) for 7% more decode time; level 3 stores more than 2. */
+  val ZstdLevel = 2
+  // one context per thread: a context owns its native match tables,
+  // too dear to build per segment
+  private val zstdOut = ThreadLocal.withInitial[ZstdCompressCtx](() =>
+    new ZstdCompressCtx().setLevel(ZstdLevel).setChecksum(true))
+  private val zstdIn = ThreadLocal.withInitial[ZstdDecompressCtx](() =>
+    new ZstdDecompressCtx())
+
+  /** A v6 segment as v7 stores it: its zstd frame when that is
+    * smaller, else the segment itself (stored raw). */
+  private[sources] def packSegment(seg: Array[Byte]): Array[Byte] = {
+    val z = zstdOut.get().compress(seg)
+    if (z.length < seg.length) z else seg
+  }
+  /** Decode one zstd frame into `out`; the bytes decoded. A bad frame
+    * or checksum throws `ZstdException`. */
+  private[sources] def unpackSegment(stored: Array[Byte], out: Array[Byte]): Int =
+    zstdIn.get().decompressByteArray(out, 0, out.length, stored, 0, stored.length)
 
   /** KMV sketch size: exact NDV up to k; ±1/sqrt(k) ≈ 6% beyond.
     * 2 KB per column per object — noise against ~128 MB object
@@ -221,12 +256,14 @@ object ObjectFormat {
     * sites stay 3-ary: `ndvSketch` holds each column's sorted KMV hash
     * array (empty pre-v3 / no-stat kinds); `strLen` holds (byte-length
     * sum, max) for string columns; `colIndex` the v4 membership
-    * index. */
+    * index. `decodedSize` is the object's size with every v7 segment
+    * decoded (the file size for raw bodies): what the planner sizes
+    * the object by. */
   final case class Footer(rowCount: Int, stats: Map[String, ColStats],
       ndvSketch: Map[String, Array[Long]] = Map.empty,
       strLen: Map[String, (Long, Int)] = Map.empty,
       colIndex: Map[String, ColIndex] = Map.empty,
-      columnar: Boolean = false)
+      columnar: Boolean = false, decodedSize: Long)
 
   /** Exact 3-valued compare across JVM numeric widths. Integral pairs
     * compare as longs; an integral×floating pair compares through
@@ -777,47 +814,47 @@ object ObjectFormat {
 
     def finish(path: String): Int = {
       out.flush()
-      val bodyBytes: Array[Byte] =
+      // the body in pieces, written (and CRC'd) one after another
+      val bodyParts: Seq[Array[Byte]] =
         if (!columnar) {
           // layout byte 0 + the row-major stream (the v≤4 body)
-          val raw = body.toByteArray
-          val b = new Array[Byte](raw.length + 1)
-          b(0) = LayoutRow.toByte
-          System.arraycopy(raw, 0, b, 1, raw.length)
-          b
+          Seq(Array(LayoutRow.toByte), body.toByteArray)
         } else {
-          // layout 1 + rowCount + per-column segment directory +
-          // v6 segments ([nullCount][presence bytes IF nullCount>0]
-          // [values]); readers seek by the directory, so unprojected
-          // columns cost zero decode, and null-free columns carry no
-          // presence bytes at all
+          // layout 1 + rowCount + per-column segment directory of
+          // (stored, decoded) lengths + the stored segments. A decoded
+          // segment is v6's ([nullCount][presence bytes IF
+          // nullCount>0][values]); readers seek by the directory, so
+          // unprojected columns cost zero reads, and null-free columns
+          // carry no presence bytes at all
           colValues.foreach(_.flush())
-          val assembled = new ByteArrayOutputStream(1 << 20)
-          val d = new DataOutputStream(assembled)
+          // (decoded length, stored bytes) per column
+          val segs = Array.tabulate(n) { i =>
+            val presBytes = if (nullCounts(i) > 0) colPresence(i).size() else 0
+            val seg = new ByteArrayOutputStream(4 + presBytes + colValuesRaw(i).size())
+            val s = new DataOutputStream(seg)
+            s.writeInt(nullCounts(i))
+            if (nullCounts(i) > 0) colPresence(i).writeTo(s)
+            colValuesRaw(i).writeTo(s)
+            s.flush()
+            (seg.size(), packSegment(seg.toByteArray))
+          }
+          val dir = new ByteArrayOutputStream(9 + 8 * n)
+          val d = new DataOutputStream(dir)
           d.writeByte(LayoutColumnar)
           d.writeInt(count)
           d.writeInt(n)
-          var i = 0
-          while (i < n) {
-            val presBytes = if (nullCounts(i) > 0) colPresence(i).size() else 0
-            d.writeInt(4 + presBytes + colValuesRaw(i).size())
-            i += 1
-          }
-          i = 0
-          while (i < n) {
-            d.writeInt(nullCounts(i))
-            if (nullCounts(i) > 0) colPresence(i).writeTo(d)
-            colValuesRaw(i).writeTo(d)
-            i += 1
+          segs.foreach { case (decoded, stored) =>
+            d.writeInt(stored.length); d.writeInt(decoded)
           }
           d.flush()
-          assembled.toByteArray
+          dir.toByteArray +: segs.map(_._2).toSeq
         }
-      val file = new DataOutputStream(new FileOutputStream(path))
+      val file = new DataOutputStream(new java.io.BufferedOutputStream(
+        new FileOutputStream(path), 1 << 16))
       file.writeInt(Magic); file.writeInt(Version)
       file.writeUTF(schema.toDDL)
-      file.writeInt(bodyBytes.length)
-      file.write(bodyBytes)
+      file.writeInt(bodyParts.map(_.length).sum)
+      bodyParts.foreach(file.write)
       file.writeInt(count)
       // min: plain prefix (a prefix sorts ≤ the value — valid lower
       // bound); max: prefix with the last non-0xFF byte incremented
@@ -876,7 +913,7 @@ object ObjectFormat {
       }
       // body CRC32 — verified by verifyObject (scrub), not at planning
       val crc = new java.util.zip.CRC32()
-      crc.update(bodyBytes)
+      bodyParts.foreach(crc.update(_))
       file.writeLong(crc.getValue)
       file.close()
       count
@@ -1299,13 +1336,18 @@ object ObjectFormat {
   *    needs is never read, and each run of adjacent needed segments is
   *    one scattering read into per-segment arrays (never one whole-body
   *    array — a 128 MB body as one byte[] is a G1 humongous allocation,
-  *    measured 3× slower under 32 concurrent scan tasks).
+  *    measured 3× slower under 32 concurrent scan tasks). v7 segments
+  *    are stored zstd-compressed: a read fetches the stored bytes and
+  *    decodes each compressed segment into an array of exactly its
+  *    decoded length, so callers always see v6-shaped segments.
   *  - A row-major body (the v≤4 layout) is streamed sequentially.
   *
   * Every read checks the length it got back, and the header, body
   * length, directory and footer must agree with the file's size: a
   * truncated object fails with an error naming its path and never
-  * decodes to short or wrong rows. */
+  * decodes to short or wrong rows. A compressed segment that fails its
+  * zstd checksum, or decodes to any length but the directory's, fails
+  * the same way, naming the segment. */
 final class ObjectFile private (val path: String,
     ch: java.nio.channels.FileChannel) extends AutoCloseable {
   import ObjectFormat._
@@ -1319,8 +1361,8 @@ final class ObjectFile private (val path: String,
   private def truncated(what: String): Nothing =
     throw new java.io.EOFException(
       s"$path: truncated graft object: $what is cut short ($size bytes)")
-  private def corrupt(what: String): Nothing =
-    throw new java.io.IOException(s"$path: corrupt graft object: $what")
+  private def corrupt(what: String, cause: Throwable = null): Nothing =
+    throw new java.io.IOException(s"$path: corrupt graft object: $what", cause)
 
   /** Exactly `len` bytes at `pos`, or an error naming the object. */
   private def readAt(pos: Long, len: Int, what: String): Array[Byte] = {
@@ -1375,6 +1417,8 @@ final class ObjectFile private (val path: String,
       catch { case _: java.nio.BufferUnderflowException => truncated("footer") }
     if (tail.remaining() < 8) truncated("body CRC")
     if (tail.remaining() > 8) corrupt(s"${tail.remaining() - 8} bytes after the body CRC")
+    if (columnar && directory.rows != f.rowCount)
+      corrupt(s"directory row count ${directory.rows} != footer row count ${f.rowCount}")
     (f, tail.getLong())
   }
   /** The footer: row count, per-column stats, sketches, membership
@@ -1427,32 +1471,50 @@ final class ObjectFile private (val path: String,
         }
       }
     }
+    val decodedSize =
+      if (!columnar) size
+      else size + directory.decoded.indices.map(i =>
+        directory.decoded(i).toLong - directory.stored(i)).sum
     Footer(count, stats.result(), sketches.result(), lens.result(),
-      indexes.result(), columnar)
+      indexes.result(), columnar, decodedSize)
   }
 
   /** Columnar directory: row count, then each segment's absolute
-    * offset and length. It must tile the body exactly and agree with
-    * the footer's row count. */
-  private lazy val (dirRows, segOff, segLen) = {
+    * offset, stored length and decoded length (one length per segment
+    * before v7: stored raw). The stored lengths must tile the body
+    * exactly, and no segment stores more bytes than it decodes to; the
+    * footer parse checks the row count. */
+  private lazy val directory: ObjectFile.Directory = {
     require(columnar, s"$path: segment read of a row-major body")
     val d = headTo(bodyOff + 9, "segment directory")
     val rows = d.getInt(bodyOff.toInt + 1)
     val n = d.getInt(bodyOff.toInt + 5)
     if (n != schema.length) corrupt(s"column directory $n != schema ${schema.length}")
-    val dir = headTo(bodyOff + 9 + 4L * n, "segment directory")
-    val lens = Array.tabulate(n)(i => dir.getInt(bodyOff.toInt + 9 + 4 * i))
-    val offs = lens.scanLeft(bodyOff + 9 + 4L * n)(_ + _)
-    if (lens.exists(_ < 0) || offs(n) != footerOff)
+    val entry = if (version >= 7) 8 else 4
+    val dirEnd = bodyOff + 9 + entry.toLong * n
+    val dir = headTo(dirEnd, "segment directory")
+    val stored = Array.tabulate(n)(i => dir.getInt(bodyOff.toInt + 9 + entry * i))
+    val decoded =
+      if (version >= 7) Array.tabulate(n)(i => dir.getInt(bodyOff.toInt + 13 + entry * i))
+      else stored
+    val offs = stored.scanLeft(dirEnd)(_ + _)
+    if (stored.exists(_ < 0) || offs(n) != footerOff)
       corrupt("segment directory does not tile the body")
-    if (rows != footer.rowCount)
-      corrupt(s"directory row count $rows != footer row count ${footer.rowCount}")
-    (rows, offs, lens)
+    (0 until n).foreach { i =>
+      if (stored(i) > decoded(i))
+        corrupt(s"segment $i stores ${stored(i)} bytes, more than its ${decoded(i)} decoded")
+    }
+    ObjectFile.Directory(rows, offs, stored, decoded)
   }
+  // every directory read first checks the directory against the footer
+  private lazy val ObjectFile.Directory(_, segOff, segLen, decLen) = { footer; directory }
   /** Rows in a columnar body. */
-  def rowCount: Int = dirRows
-  /** Directory entry `i`: the segment's absolute (offset, length). */
+  def rowCount: Int = footer.rowCount
+  /** Directory entry `i`: the segment's absolute (offset, stored length). */
   def segment(i: Int): (Long, Int) = (segOff(i), segLen(i))
+  /** Directory entry `i`'s decoded length: the stored length when the
+    * segment is stored raw. */
+  def decodedLength(i: Int): Int = decLen(i)
 
   /** Column index by name in this object's own schema. */
   lazy val fieldIdx: Map[String, Int] = schema.fieldNames.zipWithIndex.toMap
@@ -1489,8 +1551,9 @@ final class ObjectFile private (val path: String,
   def ranges(needed: Array[Boolean]): Seq[(Long, Long)] =
     runs(needed).map { case (a, b) => (segOff(a), segOff(b) - segOff(a)) }
 
-  /** The needed segments' bytes, one array per segment (null where not
-    * needed), each run of adjacent segments one scattering read. */
+  /** The needed segments' decoded bytes, one array per segment (null
+    * where not needed), each run of adjacent stored segments one
+    * scattering read. */
   def segments(needed: Array[Boolean]): Array[Array[Byte]] = {
     val out = new Array[Array[Byte]](segLen.length)
     runs(needed).foreach { case (a, b) =>
@@ -1504,8 +1567,25 @@ final class ObjectFile private (val path: String,
         if (r < 0) truncated(s"segments $a..${b - 1}")
         left -= r; nRead += r
       }
+      (a until b).foreach(i => if (segLen(i) < decLen(i)) out(i) = decode(i, out(i)))
     }
     out
+  }
+
+  /** Segment `i`'s zstd frame, decoded to exactly its directory length
+    * (checked against the frame's own content size before allocating). */
+  private def decode(i: Int, stored: Array[Byte]): Array[Byte] = {
+    def bad(what: String, cause: Throwable = null): Nothing =
+      corrupt(s"segment $i: $what", cause)
+    try {
+      val framed = Zstd.getFrameContentSize(stored)
+      if (framed != decLen(i))
+        bad(s"zstd frame holds $framed bytes, the directory says ${decLen(i)}")
+      val seg = new Array[Byte](decLen(i))
+      val got = unpackSegment(stored, seg)
+      if (got != seg.length) bad(s"decodes to $got bytes, the directory says ${seg.length}")
+      seg
+    } catch { case e: ZstdException => bad(s"zstd: ${e.getMessage}", e) }
   }
 
   /** A row-major body's row stream (after the v5 layout byte). */
@@ -1545,8 +1625,13 @@ final class ObjectFile private (val path: String,
 
 object ObjectFile {
   /** Bytes of the first read: the header and a columnar directory of
-    * every fixture table fit (lineitem's end at byte 272). */
+    * every fixture table fit (lineitem's end at byte 316). */
   val HeadProbe = 512
+
+  /** A columnar body's segment directory: the row count, and per
+    * segment its absolute offset, stored length and decoded length. */
+  private final case class Directory(rows: Int, offsets: Array[Long],
+      stored: Array[Int], decoded: Array[Int])
 
   def open(path: String): ObjectFile = {
     val ch = java.nio.channels.FileChannel.open(Paths.get(path),
@@ -3791,7 +3876,7 @@ class GraftObjectScan(fullSchema: StructType, readSchema_ : StructType,
     private val perObject = selected.map { case (p, f) =>
       val frac = pushed.foldLeft(1.0)((s, flt) =>
         s * ObjectFormat.selectivity(flt, f))
-      (new File(p).length(), f.rowCount.toLong, frac)
+      (f.decodedSize, f.rowCount.toLong, frac)
     }
     private val bytes = math.max(1L,
       perObject.map { case (b, _, fr) => math.round(b * fr) }.sum)

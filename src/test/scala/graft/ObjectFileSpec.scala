@@ -3,6 +3,7 @@ package graft
 import java.io.File
 import java.nio.file.{Files, Paths}
 
+import com.github.luben.zstd.Zstd
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources._
@@ -13,8 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.{DeleteVectors, GraftColumnarReader, GraftObjectReader, ObjectFile, ObjectFormat}
 
 /** The positional object read path: header, directory, footer and
-  * exactly the needed column segments, through one helper shared by
-  * both readers and the footer read. */
+  * exactly the needed column segments (decoded from their stored zstd
+  * frames), through one helper shared by both readers and the footer
+  * read. */
 class ObjectFileSpec extends AnyFunSuite {
 
   private val schema = StructType.fromDDL(
@@ -94,14 +96,21 @@ class ObjectFileSpec extends AnyFunSuite {
       assert(o.ranges(o.needed(StructType(Seq(StructField("_object", StringType))),
         Array.empty)).isEmpty)
 
-      // the read fetches those bytes and nothing else
+      // the read fetches those stored bytes and nothing else, and
+      // hands back each segment decoded
       val before = o.bytesRead
       val segs = o.segments(need)
       assert(o.bytesRead - before == o.ranges(need).map(_._2).sum)
       val file = Files.readAllBytes(Paths.get(p))
       segs.zipWithIndex.foreach { case (b, i) =>
         if (!need(i)) assert(b == null, s"segment $i read but not needed")
-        else assert(b.toSeq == file.slice(seg(i)._1.toInt, (seg(i)._1 + seg(i)._2).toInt).toSeq)
+        else {
+          val stored = file.slice(seg(i)._1.toInt, (seg(i)._1 + seg(i)._2).toInt)
+          assert(b.length == o.decodedLength(i))
+          val decoded =
+            if (stored.length == b.length) stored else Zstd.decompress(stored, b.length)
+          assert(b.toSeq == decoded.toSeq)
+        }
       }
     }
   }
@@ -192,5 +201,93 @@ class ObjectFileSpec extends AnyFunSuite {
           failsNaming(p, s"$label: columnar reader")(columnarRead(p, proj, Array.empty))
       }
     }
+  }
+
+  private def patchedCopy(src: String, tag: String)(patch: java.nio.ByteBuffer => Unit): String = {
+    val dst = Files.createTempDirectory(s"graft-patch-$tag").resolve("t.0")
+    val bytes = Files.readAllBytes(Paths.get(src))
+    patch(java.nio.ByteBuffer.wrap(bytes))
+    Files.write(dst, bytes)
+    dst.toString
+  }
+
+  /** Every read of `p` through `proj`: a typed error naming the object
+    * (and `mention`, when given) on both readers. */
+  private def readsFail(p: String, label: String, proj: StructType, mention: String): Unit = {
+    def typed(what: String)(body: => Any): Unit = {
+      val e = intercept[java.io.IOException](body)
+      assert(e.getMessage.contains(p), s"$label: $what: ${e.getMessage} does not name $p")
+      assert(e.getMessage.contains(mention), s"$label: $what: ${e.getMessage} lacks '$mention'")
+    }
+    typed("row reader")(rowRead(p, proj, Array.empty))
+    typed("row reader, filtered")(rowRead(p, proj, Array(GreaterThan("v", 10L))))
+    typed("columnar reader")(columnarRead(p, proj, Array.empty))
+  }
+
+  test("a damaged compressed segment fails loudly on both readers, never with wrong rows") {
+    val p = fixture("zstd")
+    val n = schema.length
+    val (segs, decoded) = ObjectFile.using(p) { o =>
+      ((0 until n).map(o.segment), (0 until n).map(o.decodedLength))
+    }
+    // id (a sequence) is stored compressed; the directory pairs sit
+    // just before the first segment
+    val (off, stored) = segs(0)
+    assert(stored < decoded(0))
+    val dirStart = segs(0)._1 - 8L * n
+    val narrow = project("id", "s")
+    val expected = rowRead(p, schema, Array.empty)
+    assert(expected.size == 2000 && columnarRead(p, schema, Array.empty) == expected)
+
+    // truncated inside the compressed segment
+    val cut = truncatedCopy(p, off + stored / 2, "zstd-cut")
+    readsFail(cut, "cut in a compressed segment", narrow, "truncated")
+    failsNaming(cut, "cut in a compressed segment: readFooter")(ObjectFormat.readFooter(cut))
+
+    // one byte flipped in the middle of the frame: the content checksum
+    // (or the frame itself) rejects it, naming the segment
+    val flipped = patchedCopy(p, "zstd-flip") { b =>
+      val at = (off + stored / 2).toInt
+      b.put(at, (b.get(at) ^ 0x5a).toByte)
+    }
+    readsFail(flipped, "flipped byte", narrow, "segment 0")
+    readsFail(flipped, "flipped byte", schema, "segment 0")
+    // a read that does not need the damaged segment is untouched
+    val other = project("v", "s")
+    assert(rowRead(flipped, other, Array.empty) == rowRead(p, other, Array.empty))
+    assert(columnarRead(flipped, other, Array.empty) == rowRead(p, other, Array.empty))
+
+    // a flip anywhere in the frame, header and checksum included,
+    // gives a typed error or the exact rows, never different rows
+    (0 until stored by math.max(1, stored / 64)).foreach { k =>
+      val q = patchedCopy(p, s"zstd-flip-$k") { b =>
+        val at = (off + k).toInt
+        b.put(at, (b.get(at) ^ 0x01).toByte)
+      }
+      Seq[(String, (String, StructType, Array[Filter]) => Seq[Seq[Any]])](
+        "row reader" -> rowRead, "columnar reader" -> columnarRead).foreach { case (what, read) =>
+        try assert(read(q, schema, Array.empty) == expected, s"$what: byte $k flipped: wrong rows")
+        catch {
+          case e: java.io.IOException =>
+            assert(e.getMessage.contains(q), s"$what: byte $k flipped: ${e.getMessage}")
+        }
+      }
+    }
+
+    // a directory whose stored length exceeds the decoded one
+    val inflated = patchedCopy(p, "zstd-dir") { b =>
+      b.putInt((dirStart + 4).toInt, stored - 1)
+    }
+    readsFail(inflated, "stored > decoded", narrow, "segment 0")
+    failsNaming(inflated, "stored > decoded: readFooter")(ObjectFormat.readFooter(inflated))
+
+    // a decoded length that differs from what the frame holds
+    val longer = patchedCopy(p, "zstd-len") { b =>
+      b.putInt((dirStart + 4).toInt, decoded(0) + 8)
+    }
+    readsFail(longer, "decoded length off", narrow, "segment 0")
+    // a decoded length far past the frame's fails before any allocation
+    val huge = patchedCopy(p, "zstd-huge") { b => b.putInt((dirStart + 4).toInt, Int.MaxValue) }
+    readsFail(huge, "2 GB decoded length", narrow, "segment 0")
   }
 }

@@ -212,9 +212,13 @@ class ObjectStoreSpec extends SparkSpec {
     val corrupt = java.nio.file.Files.createTempDirectory("graft-scrub")
       .resolve("nation.0")
     java.nio.file.Files.copy(java.nio.file.Paths.get(objs.head), corrupt)
+    val mid = graft.sources.ObjectFile.using(objs.head) { o =>
+      val last = o.segment(o.schema.length - 1)
+      (o.segment(0)._1 + last._1 + last._2) / 2
+    }
     val raf = new java.io.RandomAccessFile(corrupt.toFile, "rw")
-    raf.seek(raf.length() / 2)
-    val b = raf.read(); raf.seek(raf.length() / 2); raf.write(b ^ 0xff)
+    raf.seek(mid)
+    val b = raf.read(); raf.seek(mid); raf.write(b ^ 0xff)
     raf.close()
     assert(!graft.sources.ObjectFormat.verifyObject(corrupt.toString),
       "corrupted body must fail the scrub")

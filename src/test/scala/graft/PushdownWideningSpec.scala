@@ -3,7 +3,7 @@ package graft
 import java.io.File
 import java.sql.Timestamp
 
-import graft.sources.ObjectFormat
+import graft.sources.{ObjectFile, ObjectFormat}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -20,10 +20,16 @@ class PushdownWideningSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  // flips the byte in the middle of the column segments; the header,
+  // directory and footer stay intact, so planning still reads them
   private def corruptBody(path: String): Unit = {
+    val mid = ObjectFile.using(path) { o =>
+      val last = o.segment(o.schema.length - 1)
+      (o.segment(0)._1 + last._1 + last._2) / 2
+    }
     val raf = new java.io.RandomAccessFile(path, "rw")
-    raf.seek(raf.length() / 2)
-    val b = raf.read(); raf.seek(raf.length() / 2); raf.write(b ^ 0xff)
+    raf.seek(mid)
+    val b = raf.read(); raf.seek(mid); raf.write(b ^ 0xff)
     raf.close()
   }
 
