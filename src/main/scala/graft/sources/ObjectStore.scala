@@ -1,6 +1,7 @@
 package graft.sources
 
 import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream, File, FileOutputStream}
+import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 import java.util
 
@@ -31,10 +32,12 @@ import com.github.luben.zstd.{Zstd, ZstdCompressCtx, ZstdDecompressCtx, ZstdExce
   * the storage node so only matching bytes travel to the client. This
   * module is that architecture as a Spark DSv2 source:
   *
-  *  - an object = one `<table>.<seq>` file: header (magic + schema DDL),
-  *    row-major encoded rows (the analog of the reference's flatbuffer
-  *    rows), and a footer with row count + per-column min/max stats and
-  *    null counts (the analog of the reference's object-level index);
+  *  - an object = one `<table>.<seq>` file: header (magic, version,
+  *    schema DDL), a column-major body of one segment per column (the
+  *    analog of the reference's Arrow tables), and a footer with row
+  *    count, per-column min/max, null counts, distinct-count sketches
+  *    and membership indexes (the analog of the reference's
+  *    object-level index);
   *  - `GraftObjectSource` (`format("graft-objects")`) implements
   *    `TableProvider` → `SupportsRead` → `ScanBuilder` with
   *    `SupportsPushDownFilters`, `SupportsPushDownRequiredColumns` AND
@@ -53,80 +56,38 @@ import com.github.luben.zstd.{Zstd, ZstdCompressCtx, ZstdDecompressCtx, ZstdExce
   *
   * 100 TB posture: `planInputPartitions` lists objects and reads ONLY
   * footers (driver-side metadata, ~bytes per object); all row work is
-  * executor-side, one object per task, embarrassingly parallel. Row
-  * decode is allocation-light (single pass over a byte buffer).
-  * Column pruning here cuts deserialization + downstream width (the
-  * layout is row-major like the reference's fbx rows — the reference
-  * also projects inside the storage server rather than laying data
-  * out columnar).
+  * executor-side, one object per task, embarrassingly parallel. A read
+  * fetches only the segments of the columns it projects or filters on.
+  * Two readers share one segment decoder and one row-fate mask and
+  * differ only in their output: `GraftColumnarReader` fills Spark
+  * `ColumnarBatch`es for whole-stage codegen, `GraftObjectReader`
+  * emits rows (nested output, DELETE survivors, merge-on-read
+  * ordinals, pushed LIMIT).
   */
 object ObjectFormat {
   val Magic = 0x474F424A // "GOBJ"
-  // v2: footer stats in the column's NATIVE width (exact longs for
-  // integral columns — doubles collapse BIGINTs above 2^53 and a
-  // rounded-up min could prune an object that holds the queried key)
-  // + an exact per-column null count (feeds COUNT(col) pushdown and
-  // IsNull/IsNotNull pruning).
-  // v3: + per-column KMV distinct-count sketch (k smallest 64-bit
-  // value hashes — exact below k, mergeable across objects by keeping
-  // the k smallest of the union) and string byte-length stats
-  // (sum + max), both feeding DSv2 column statistics → Catalyst CBO
-  // (the reference's runstats analog computed AT WRITE, per object).
-  // v2 objects still read (sketch maps come back empty).
-  // v4: + per-column membership index — the object-local value index
-  // for point lookups where min/max ranges cannot prune (high-NDV
-  // keys scattered across objects). Two tiers: when a column's KMV
-  // sketch never overflowed, the sketch IS the complete distinct-hash
-  // set and membership is EXACT (zero extra bytes); columns opted in
-  // via `.option("bloomFilterColumns", ...)` additionally carry a
-  // bloom filter sized at finish() for the observed NDV (no false
-  // negatives — a miss proves absence, so EqualTo/IN/<=> skip the
-  // object without reading its body). Older versions still read.
-  // v5: + COLUMN-MAJOR body layout (the reference's union-col/Arrow
-  // analog, SURVEY §1.1 Format row) — the body opens with a layout
-  // byte (0 = row-major, the v≤4 stream unchanged; 1 = columnar),
-  // and the columnar form stores a per-column segment directory
-  // (lengths) followed by each column's [presence bytes][values]
-  // segment. Readers prune columns by reading only the needed segments
-  // (row-major must decode every field of every row to skip it), and
-  // the scan path serves Spark `ColumnarBatch`es directly so
-  // whole-stage codegen runs its vectorized loop. Row-major writes
-  // remain supported via `.option("bodyLayout", "row")`; v≤4 objects
-  // still read.
-  // v6: columnar SEGMENTS get a 4-byte null-count header, presence
-  // bytes are written ONLY when the column has nulls (TPC-H-shaped
-  // data is overwhelmingly null-free — that is 1 byte/row/column of
-  // body and a per-value branch gone), and top-level FIXED-WIDTH
-  // values are little-endian so the vectorized reader can bulk-copy
-  // whole null-free segments into `OnHeapColumnVector`s with
-  // `putLongsLittleEndian`-family memcpys — the same plain-encoding
-  // fast path parquet's vectorized reader uses, closing the
-  // per-value-loop decode constant the sf10 factor-8 scan rows
-  // measured (r8 verdict #6). Var-length types (string/binary/
-  // decimal/nested) keep the v5 big-endian recursive encoding, and
-  // row-major bodies are byte-identical to v5's. v≤5 objects still
-  // read; mixed v5/v6 tables scan fine (layout decisions are
-  // per-object-version).
-  // v7: every columnar SEGMENT is stored zstd-compressed (one fixed
-  // level, [[ZstdLevel]], frames carry the content checksum) when that
-  // is smaller than the v6 segment, else raw — the bytes that leave
-  // storage are the scan's cost (SURVEY §3.1–3.2), and Arrow IPC
-  // compresses each body buffer on its own the same way. The segment
-  // directory gives TWO ints per column: the stored length (what
-  // tiles the body and what a read fetches) and the decoded length;
-  // stored == decoded means raw, stored > decoded is corrupt. A
-  // decoded segment is byte-identical to the v6 one, so both readers
-  // keep one v6 segment decoder. Row-major bodies are unchanged.
-  // v≤6 objects still read.
+  // Codec v7, the one object format. After the header comes the body:
+  //  - a layout byte, always [[LayoutColumnar]] (any other value is
+  //    corrupt), the row count and the column count;
+  //  - a segment directory of two ints per column: the stored length
+  //    (what tiles the body and what a read fetches) and the decoded
+  //    length. Equal means stored raw; stored > decoded is corrupt;
+  //  - each column's segment, stored as a zstd frame (one fixed level,
+  //    [[ZstdLevel]], with the content checksum) when that is smaller,
+  //    else raw. A decoded segment is [null count][presence bytes, one
+  //    per row, only when the null count is above 0][values]. Top-level
+  //    fixed-width values are little-endian, so the vectorized reader
+  //    bulk-copies null-free segments into column vectors the way
+  //    parquet's plain encoding does. Every other value, and every value
+  //    nested in an array, struct or map, is big-endian and recursive.
+  // The footer holds per column: min/max in the column's native width
+  // (exact longs for integral columns), an exact null count, a KMV
+  // distinct-count sketch (the k smallest 64-bit value hashes), string
+  // byte-length stats, and a membership index (the complete sketch, or
+  // an opt-in bloom filter via `.option("bloomFilterColumns", ...)`).
+  // A CRC32 of the body closes the object.
   val Version = 7
-  val MinVersion = 2
-  val LayoutRow = 0
   val LayoutColumnar = 1
-  /** New objects write column-major by default — the scan is the
-    * 100 TB workload, and the columnar body is what feeds the
-    * vectorized read path. Row-major stays a write option (and every
-    * v≤4 object still reads). */
-  val DefaultColumnar = true
 
   /** The one zstd level of v7 segments. On the sf0.1 lineitem, level 2
     * stores 10% fewer bytes than level 1 (l_extendedprice: 0.52 of raw
@@ -139,8 +100,8 @@ object ObjectFormat {
   private val zstdIn = ThreadLocal.withInitial[ZstdDecompressCtx](() =>
     new ZstdDecompressCtx())
 
-  /** A v6 segment as v7 stores it: its zstd frame when that is
-    * smaller, else the segment itself (stored raw). */
+  /** A decoded segment as the body stores it: its zstd frame when
+    * that is smaller, else the segment itself (stored raw). */
   private[sources] def packSegment(seg: Array[Byte]): Array[Byte] = {
     val z = zstdOut.get().compress(seg)
     if (z.length < seg.length) z else seg
@@ -243,7 +204,7 @@ object ObjectFormat {
   final case class ColStats(min: Any, max: Any, nullCount: Int) {
     def hasNull: Boolean = nullCount > 0
   }
-  /** v4 per-column membership index: `kind` is the column's statKind
+  /** Per-column membership index: `kind` is the column's statKind
     * at write time (guards hash-discipline consistency on the read
     * side), `complete` means the KMV sketch never overflowed — it
     * holds EVERY distinct non-null value hash, so a binary-search miss
@@ -252,18 +213,18 @@ object ObjectFormat {
   final case class ColIndex(kind: Int, complete: Boolean,
       bloomK: Int, bloomBits: Array[Long])
 
-  /** v3+ additions ride as separate maps so ColStats pattern-match
-    * sites stay 3-ary: `ndvSketch` holds each column's sorted KMV hash
-    * array (empty pre-v3 / no-stat kinds); `strLen` holds (byte-length
-    * sum, max) for string columns; `colIndex` the v4 membership
-    * index. `decodedSize` is the object's size with every v7 segment
-    * decoded (the file size for raw bodies): what the planner sizes
+  /** Sketches and indexes ride as separate maps so ColStats
+    * pattern-match sites stay 3-ary: `ndvSketch` holds each column's
+    * sorted KMV hash array (absent for no-stat kinds and all-null
+    * columns); `strLen` holds (byte-length sum, max) for string
+    * columns; `colIndex` the membership index. `decodedSize` is the
+    * object's size with every segment decoded: what the planner sizes
     * the object by. */
   final case class Footer(rowCount: Int, stats: Map[String, ColStats],
       ndvSketch: Map[String, Array[Long]] = Map.empty,
       strLen: Map[String, (Long, Int)] = Map.empty,
       colIndex: Map[String, ColIndex] = Map.empty,
-      columnar: Boolean = false, decodedSize: Long)
+      decodedSize: Long)
 
   /** Exact 3-valued compare across JVM numeric widths. Integral pairs
     * compare as longs; an integral×floating pair compares through
@@ -380,7 +341,7 @@ object ObjectFormat {
     case _ => false
   }
 
-  /** Types whose v6 columnar segments store values little-endian
+  /** Types whose segments store top-level values little-endian
     * (fixed-width — the bulk-fill contract). Booleans are single
     * bytes (endianness-free) and keep the shared encoding; var-length
     * and nested types keep the big-endian recursive codec. */
@@ -397,9 +358,9 @@ object ObjectFormat {
     * conjunction is TRUE; the negated (DELETE) mode keeps rows whose
     * conjunction is FALSE **or** UNKNOWN. Genuine 3VL (not a collapse
     * of unknown to false) is required the moment NOT is pushable:
-    * NOT(unknown) must stay unknown, not become true. Shared by the
-    * row reader and the vectorized columnar reader — one semantics,
-    * two decode shapes. */
+    * NOT(unknown) must stay unknown, not become true. This is the
+    * reference semantics; both readers run its compiled form,
+    * [[compileMask]], through [[rowFate]]. */
   def eval3Filter(f: Filter, fieldVal: String => Any): Option[Boolean] = {
     def eval3(g: Filter): Option[Boolean] = eval3Filter(g, fieldVal)
     f match {
@@ -448,8 +409,8 @@ object ObjectFormat {
     }
   }
 
-  /** COMPILED per-row 3VL mask over decoded column arrays — the
-    * vectorized reader's filter path. [[eval3Filter]] is the
+  /** COMPILED per-row 3VL mask over decoded column arrays — both
+    * readers' filter path. [[eval3Filter]] is the
     * semantics; this is the same Kleene logic with every per-row cost
     * hoisted: literals normalize ONCE (normExternal of a Timestamp is
     * a timezone computation — per-row it dominated the filtered-scan
@@ -577,6 +538,111 @@ object ObjectFormat {
       ok }
   }
 
+  /** The row-fate mask of one object, shared by both readers:
+    * `keep(r)` is false where the deletion vector drops row r (in every
+    * mode), else whether the conjunction of `pushed` is TRUE there —
+    * or, `negated` (DELETE's survivors), whether it is not: SQL deletes
+    * only where the predicate is TRUE, so FALSE and UNKNOWN rows stay.
+    * `colArr` gives a filter column's boxed values (null: the object
+    * lacks the column) and is asked once per column. */
+  def rowFate(rowCount: Int, dv: Option[util.BitSet], pushed: Array[Filter],
+      negated: Boolean, colType: String => Option[DataType],
+      colArr: String => Array[Any]): Array[Boolean] = {
+    val keep = new Array[Boolean](rowCount)
+    util.Arrays.fill(keep, true)
+    dv.foreach { bs =>
+      var r = bs.nextSetBit(0)
+      while (r >= 0 && r < rowCount) { keep(r) = false; r = bs.nextSetBit(r + 1) }
+    }
+    if (pushed.nonEmpty || negated) {
+      val cols = scala.collection.mutable.HashMap.empty[String, Array[Any]]
+      val mask = compileMask(pushed, colType, a => cols.getOrElseUpdate(a, colArr(a)))
+      var r = 0
+      while (r < rowCount) {
+        if (keep(r)) keep(r) = mask(r) != negated
+        r += 1
+      }
+    }
+    keep
+  }
+
+  /** One decoded column segment: [null count][presence bytes, one per
+    * row, when the count is above 0][values]. `bb` reads the values in
+    * their encoding — little-endian for top-level fixed-width types,
+    * big-endian otherwise. */
+  final class Segment(bytes: Array[Byte], rowCount: Int, dt: DataType) {
+    val hasPres: Boolean = ByteBuffer.wrap(bytes).getInt(0) > 0
+    val valOff: Int = 4 + (if (hasPres) rowCount else 0)
+    val le: Boolean = fixedWidthLE(dt)
+    val bb: ByteBuffer = ByteBuffer.wrap(bytes).order(
+      if (le) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
+    @inline def presentAt(r: Int): Boolean = !hasPres || bytes(4 + r) != 0
+
+    /** Every row's value in its Catalyst form, boxed (null where
+      * absent): the one value decoder of both readers. */
+    def boxed(): Array[Any] = {
+      val in = ByteBuffer.wrap(bytes).order(bb.order())
+      in.position(valOff)
+      val out = new Array[Any](rowCount)
+      var r = 0
+      while (r < rowCount) {
+        if (presentAt(r)) out(r) = readValue(in, dt)
+        r += 1
+      }
+      out
+    }
+  }
+
+  // a length or count read from a segment never claims more bytes than
+  // the segment has left (each counted item takes at least one)
+  private def count(in: ByteBuffer): Int = {
+    val k = in.getInt()
+    if (k < 0 || k > in.remaining()) throw new java.nio.BufferUnderflowException
+    k
+  }
+  private def lengthPrefixed(in: ByteBuffer): Array[Byte] = {
+    val b = new Array[Byte](count(in)); in.get(b); b
+  }
+
+  /** The [[ObjectEncoder]] value codec read back, walking `in` in its
+    * own byte order (nested values are always big-endian). */
+  private def readValue(in: ByteBuffer, dt: DataType): Any = dt match {
+    case LongType | TimestampType | TimestampNTZType => Long.box(in.getLong())
+    case IntegerType | DateType => Int.box(in.getInt())
+    case DoubleType => Double.box(in.getDouble())
+    case FloatType => Float.box(in.getFloat())
+    case BooleanType => Boolean.box(in.get() != 0)
+    case StringType => UTF8String.fromBytes(lengthPrefixed(in))
+    case BinaryType => lengthPrefixed(in)
+    case d: DecimalType =>
+      Decimal(new java.math.BigDecimal(
+        new java.math.BigInteger(lengthPrefixed(in)), d.scale), d.precision, d.scale)
+    case ArrayType(et, _) =>
+      val a = new Array[Any](count(in))
+      var j = 0
+      while (j < a.length) {
+        a(j) = if (in.get() != 0) readValue(in, et) else null
+        j += 1
+      }
+      new GenericArrayData(a)
+    case st: StructType =>
+      val present = Array.fill(st.length)(in.get() != 0)
+      val vals = new Array[Any](st.length)
+      var j = 0
+      while (j < st.length) {
+        if (present(j)) vals(j) = readValue(in, st(j).dataType)
+        j += 1
+      }
+      new GenericInternalRow(vals)
+    case MapType(kt, vt, _) =>
+      val len = count(in)
+      val ks = Array.fill[Any](len)(readValue(in, kt))
+      val vs = Array.fill[Any](len)(if (in.get() != 0) readValue(in, vt) else null)
+      new ArrayBasedMapData(new GenericArrayData(ks), new GenericArrayData(vs))
+    case other => throw new UnsupportedOperationException(
+      s"graft-objects codec: unsupported type $other")
+  }
+
   /** Streaming encoder: add rows (external Row from ingest, or
     * InternalRow from the DSv2 writer), then `finish(path)` writes
     * header + body + stats footer. Values are encoded recursively from
@@ -585,21 +651,14 @@ object ObjectFormat {
     * arrays of any element, nested structs and maps (SURVEY §1.2's
     * DATE and BLOB analogs included). */
   final class ObjectEncoder(schema: StructType,
-      bloomCols: Set[String] = Set.empty, bloomFpp: Double = 0.01,
-      columnar: Boolean = DefaultColumnar) {
-    // row-major stream (layout 0) — the v≤4 body unchanged
-    private val body = new ByteArrayOutputStream(if (columnar) 16 else 1 << 20)
-    private val out = new DataOutputStream(body)
+      bloomCols: Set[String] = Set.empty, bloomFpp: Double = 0.01) {
     private val n = schema.length
-    // column-major buffers (layout 1): per column, presence bytes and
-    // a values stream; finish() lays them out as length-directoried
-    // segments so readers SEEK past unread columns
-    private val colPresence: Array[ByteArrayOutputStream] =
-      if (columnar) Array.fill(n)(new ByteArrayOutputStream(4096)) else null
-    private val colValuesRaw: Array[ByteArrayOutputStream] =
-      if (columnar) Array.fill(n)(new ByteArrayOutputStream(4096)) else null
-    private val colValues: Array[DataOutputStream] =
-      if (columnar) colValuesRaw.map(new DataOutputStream(_)) else null
+    // per column, presence bytes and a values stream; finish() lays
+    // them out as length-directoried segments so readers SEEK past
+    // unread columns
+    private val colPresence = Array.fill(n)(new ByteArrayOutputStream(4096))
+    private val colValuesRaw = Array.fill(n)(new ByteArrayOutputStream(4096))
+    private val colValues = colValuesRaw.map(new DataOutputStream(_))
     private val kinds = schema.fields.map(f => statKind(f.dataType))
     private val minsL = Array.fill(n)(Long.MaxValue)
     private val maxsL = Array.fill(n)(Long.MinValue)
@@ -673,10 +732,9 @@ object ObjectFormat {
       } else if (!s.contains(h)) kmvOverflow(i) = true
     }
 
-    /** Recursive value codec (Catalyst-level values). Nested nulls get
-      * a presence byte; map keys are non-null by Spark's contract.
-      * `o` is the row stream (row-major) or the column's own values
-      * stream (columnar) — byte-identical encoding either way. */
+    /** Recursive value codec (Catalyst-level values) into the column's
+      * values stream `o`. Nested nulls get a presence byte; map keys
+      * are non-null by Spark's contract. */
     private def writeValue(o: DataOutputStream, dt: DataType,
         value: Any): Unit = dt match {
       case LongType | TimestampType | TimestampNTZType =>
@@ -756,17 +814,16 @@ object ObjectFormat {
           statB(i, b); sketch(i, hashBytes(b))
         case _ =>
       }
-      if (columnar) writeColumnarTop(colValues(i), dt, value)
-      else writeValue(out, dt, value)
+      writeTop(colValues(i), dt, value)
     }
 
-    /** v6 columnar segments store TOP-LEVEL fixed-width values
-      * little-endian so the vectorized reader can memcpy null-free
-      * segments (`putLongsLittleEndian` et al.). Everything else —
-      * var-length types, and every value nested inside an
-      * array/struct/map — keeps the shared big-endian [[writeValue]]
-      * encoding (those decode value-at-a-time regardless). */
-    private def writeColumnarTop(o: DataOutputStream, dt: DataType,
+    /** Segments store TOP-LEVEL fixed-width values little-endian so the
+      * vectorized reader can memcpy null-free segments
+      * (`putLongsLittleEndian` et al.). Everything else — var-length
+      * types, and every value nested inside an array/struct/map —
+      * keeps the big-endian [[writeValue]] encoding (those decode
+      * value-at-a-time regardless). */
+    private def writeTop(o: DataOutputStream, dt: DataType,
         value: Any): Unit = dt match {
       case LongType | TimestampType | TimestampNTZType =>
         o.writeLong(java.lang.Long.reverseBytes(value.asInstanceOf[Long]))
@@ -782,19 +839,15 @@ object ObjectFormat {
     }
 
     /** presence flags (1 byte/field; a packed bitmap is the obvious
-      * compaction, skipped for codec readability). Columnar mode
-      * routes each field to its own column buffers — presence bytes
-      * and values land contiguous per column. */
+      * compaction, skipped for codec readability). Each field goes to
+      * its own column buffers — presence bytes and values land
+      * contiguous per column. */
     def addInternal(row: InternalRow): Unit = {
       var i = 0
-      if (!columnar) {
-        while (i < n) { out.writeBoolean(!row.isNullAt(i)); i += 1 }
-        i = 0
-      }
       while (i < n) {
         val dt = schema(i).dataType
         val isNull = row.isNullAt(i)
-        if (columnar) colPresence(i).write(if (isNull) 0 else 1)
+        colPresence(i).write(if (isNull) 0 else 1)
         if (!isNull) put(i, dt, row.get(i, dt))
         else nullCounts(i) += 1
         i += 1
@@ -813,42 +866,34 @@ object ObjectFormat {
       addInternal(toCatalyst(row).asInstanceOf[InternalRow])
 
     def finish(path: String): Int = {
-      out.flush()
-      // the body in pieces, written (and CRC'd) one after another
-      val bodyParts: Seq[Array[Byte]] =
-        if (!columnar) {
-          // layout byte 0 + the row-major stream (the v≤4 body)
-          Seq(Array(LayoutRow.toByte), body.toByteArray)
-        } else {
-          // layout 1 + rowCount + per-column segment directory of
-          // (stored, decoded) lengths + the stored segments. A decoded
-          // segment is v6's ([nullCount][presence bytes IF
-          // nullCount>0][values]); readers seek by the directory, so
-          // unprojected columns cost zero reads, and null-free columns
-          // carry no presence bytes at all
-          colValues.foreach(_.flush())
-          // (decoded length, stored bytes) per column
-          val segs = Array.tabulate(n) { i =>
-            val presBytes = if (nullCounts(i) > 0) colPresence(i).size() else 0
-            val seg = new ByteArrayOutputStream(4 + presBytes + colValuesRaw(i).size())
-            val s = new DataOutputStream(seg)
-            s.writeInt(nullCounts(i))
-            if (nullCounts(i) > 0) colPresence(i).writeTo(s)
-            colValuesRaw(i).writeTo(s)
-            s.flush()
-            (seg.size(), packSegment(seg.toByteArray))
-          }
-          val dir = new ByteArrayOutputStream(9 + 8 * n)
-          val d = new DataOutputStream(dir)
-          d.writeByte(LayoutColumnar)
-          d.writeInt(count)
-          d.writeInt(n)
-          segs.foreach { case (decoded, stored) =>
-            d.writeInt(stored.length); d.writeInt(decoded)
-          }
-          d.flush()
-          dir.toByteArray +: segs.map(_._2).toSeq
-        }
+      // the body in pieces, written (and CRC'd) one after another:
+      // layout byte + rowCount + per-column segment directory of
+      // (stored, decoded) lengths + the stored segments. A decoded
+      // segment is [nullCount][presence bytes IF nullCount>0][values];
+      // readers seek by the directory, so unprojected columns cost zero
+      // reads, and null-free columns carry no presence bytes at all
+      colValues.foreach(_.flush())
+      // (decoded length, stored bytes) per column
+      val segs = Array.tabulate(n) { i =>
+        val presBytes = if (nullCounts(i) > 0) colPresence(i).size() else 0
+        val seg = new ByteArrayOutputStream(4 + presBytes + colValuesRaw(i).size())
+        val s = new DataOutputStream(seg)
+        s.writeInt(nullCounts(i))
+        if (nullCounts(i) > 0) colPresence(i).writeTo(s)
+        colValuesRaw(i).writeTo(s)
+        s.flush()
+        (seg.size(), packSegment(seg.toByteArray))
+      }
+      val dir = new ByteArrayOutputStream(9 + 8 * n)
+      val d = new DataOutputStream(dir)
+      d.writeByte(LayoutColumnar)
+      d.writeInt(count)
+      d.writeInt(n)
+      segs.foreach { case (decoded, stored) =>
+        d.writeInt(stored.length); d.writeInt(decoded)
+      }
+      d.flush()
+      val bodyParts = dir.toByteArray +: segs.map(_._2).toSeq
       val file = new DataOutputStream(new java.io.BufferedOutputStream(
         new FileOutputStream(path), 1 << 16))
       file.writeInt(Magic); file.writeInt(Version)
@@ -887,7 +932,7 @@ object ObjectFormat {
           case _ => file.writeBoolean(false)
         }
         file.writeInt(nullCounts(i))
-        // v3 block: KMV sketch (ascending unsigned), string len stats
+        // KMV sketch (ascending unsigned), string len stats
         val s = kmv(i)
         file.writeInt(s.size)
         val it = s.iterator()
@@ -895,7 +940,7 @@ object ObjectFormat {
         if (kinds(i) == 3) {
           file.writeLong(sumLenB(i)); file.writeInt(maxLenB(i))
         }
-        // v4 block: membership index — stat kind (hash-discipline
+        // membership index — stat kind (hash-discipline
         // guard), sketch-completeness flag, optional bloom
         file.writeByte(kinds(i))
         file.writeBoolean(!kmvOverflow(i))
@@ -1009,7 +1054,7 @@ object ObjectFormat {
     }
   }
 
-  /** Membership probe against the v4 column index: false ⇔ the footer
+  /** Membership probe against the column's index: false ⇔ the footer
     * PROVES value `v` absent from column `a` (complete-sketch binary
     * search miss, or bloom miss — neither has false negatives). The
     * hash discipline must match the writer's, which hashed the
@@ -1142,7 +1187,7 @@ object ObjectFormat {
     * FULL-ACCEPT dual of [[mightMatch]]'s none-match prune. When it
     * holds, a reader may drop the filter from row-level evaluation
     * for the whole object (and skip decoding filter-only columns),
-    * which is what keeps the v6 bulk fill engaged on broad range
+    * which is what keeps the bulk fill engaged on broad range
     * scans: a `l_shipdate <= cutoff` that keeps 99% of rows would
     * otherwise force every object through the per-row path just to
     * drop the trailing 1% that lives in ONE boundary object.
@@ -1312,7 +1357,7 @@ object ObjectFormat {
         val out = new DataOutputStream(new java.io.BufferedOutputStream(
           Files.newOutputStream(staged.toPath), 1 << 16))
         try {
-          out.writeInt(Magic); out.writeInt(o.version); out.writeUTF(renamed.toDDL)
+          out.writeInt(Magic); out.writeInt(Version); out.writeUTF(renamed.toDDL)
           o.copyAfterSchema(out)
         } finally out.close()
         Files.move(staged.toPath, Paths.get(path),
@@ -1327,35 +1372,35 @@ object ObjectFormat {
   * bytes a read needs leave storage (SURVEY §3.1–3.2).
   *
   *  - The header (magic, version, schema DDL, body length, layout
-  *    byte) and a columnar body's segment directory come from one
-  *    positional read of the object's first [[ObjectFile.HeadProbe]]
-  *    bytes; a longer header costs one more read.
+  *    byte) and the segment directory come from one positional read of
+  *    the object's first [[ObjectFile.HeadProbe]] bytes; a longer
+  *    header costs one more read.
   *  - The footer and body CRC are one positional read of the object's
   *    tail, parsed in memory.
   *  - Column segments are read by exact position: a segment no read
   *    needs is never read, and each run of adjacent needed segments is
   *    one scattering read into per-segment arrays (never one whole-body
   *    array — a 128 MB body as one byte[] is a G1 humongous allocation,
-  *    measured 3× slower under 32 concurrent scan tasks). v7 segments
-  *    are stored zstd-compressed: a read fetches the stored bytes and
-  *    decodes each compressed segment into an array of exactly its
-  *    decoded length, so callers always see v6-shaped segments.
-  *  - A row-major body (the v≤4 layout) is streamed sequentially.
+  *    measured 3× slower under 32 concurrent scan tasks). A read
+  *    fetches the stored bytes and decodes each zstd-compressed segment
+  *    into an array of exactly its decoded length.
   *
-  * Every read checks the length it got back, and the header, body
-  * length, directory and footer must agree with the file's size: a
-  * truncated object fails with an error naming its path and never
-  * decodes to short or wrong rows. A compressed segment that fails its
-  * zstd checksum, or decodes to any length but the directory's, fails
-  * the same way, naming the segment. */
+  * A wrong magic, a version other than [[ObjectFormat.Version]] or a
+  * layout byte other than columnar fails with an `IOException` naming
+  * the object and the value found. Every read checks the length it got
+  * back, and the header, body length, directory and footer must agree
+  * with the file's size: a truncated object fails with an error naming
+  * its path and never decodes to short or wrong rows. A compressed
+  * segment that fails its zstd checksum, decodes to any length but the
+  * directory's, or holds values that overrun it fails the same way,
+  * naming the segment. */
 final class ObjectFile private (val path: String,
     ch: java.nio.channels.FileChannel) extends AutoCloseable {
   import ObjectFormat._
-  import java.nio.ByteBuffer
 
   val size: Long = ch.size()
   private var nRead = 0L
-  /** Bytes this handle has read from the object (row streams excluded). */
+  /** Bytes this handle has read from the object. */
   def bytesRead: Long = nRead
 
   private def truncated(what: String): Nothing =
@@ -1388,10 +1433,13 @@ final class ObjectFile private (val path: String,
     ByteBuffer.wrap(head)
   }
 
-  require(headTo(8, "header").getInt(0) == Magic, s"$path: not a graft object")
-  val version: Int = headTo(8, "header").getInt(4)
-  require(version >= MinVersion && version <= Version,
-    s"$path: bad version $version")
+  locally {
+    val h = headTo(8, "header")
+    if (h.getInt(0) != Magic) throw new java.io.IOException(
+      f"$path: not a graft object: magic 0x${h.getInt(0)}%08x, expected 0x$Magic%08x")
+    if (h.getInt(4) != Version) throw new java.io.IOException(
+      s"$path: unsupported graft object version ${h.getInt(4)}, expected $Version")
+  }
   private val ddlLen = headTo(10, "header").getShort(8) & 0xffff
   /** The schema EMBEDDED in this object's header: its generation's
     * layout, which bodies are positional in. */
@@ -1403,10 +1451,13 @@ final class ObjectFile private (val path: String,
   private val footerOff = bodyOff + bodyLen
   // the footer holds at least the row count and the body CRC
   if (bodyLen < 0 || footerOff + 12 > size) truncated("body")
-  /** v5 bodies lead with a layout byte; v≤4 bodies are the bare
-    * row-major stream. */
-  val columnar: Boolean = version >= 5 && bodyLen > 0 &&
-    headTo(bodyOff + 1, "layout byte").get(bodyOff.toInt) == LayoutColumnar
+  // a body opens with the layout byte, the row count and the column count
+  if (bodyLen < 9) corrupt(s"a $bodyLen-byte body holds no segment directory")
+  locally {
+    val layout = headTo(bodyOff + 1, "layout byte").get(bodyOff.toInt)
+    if (layout != LayoutColumnar)
+      corrupt(s"layout byte $layout, expected $LayoutColumnar (columnar)")
+  }
 
   private lazy val (parsedFooter, storedCrc) = {
     val tail =
@@ -1417,12 +1468,12 @@ final class ObjectFile private (val path: String,
       catch { case _: java.nio.BufferUnderflowException => truncated("footer") }
     if (tail.remaining() < 8) truncated("body CRC")
     if (tail.remaining() > 8) corrupt(s"${tail.remaining() - 8} bytes after the body CRC")
-    if (columnar && directory.rows != f.rowCount)
+    if (directory.rows != f.rowCount)
       corrupt(s"directory row count ${directory.rows} != footer row count ${f.rowCount}")
     (f, tail.getLong())
   }
-  /** The footer: row count, per-column stats, sketches, membership
-    * index and the layout flag — parsed from one tail read. */
+  /** The footer: row count, per-column stats, sketches and membership
+    * index — parsed from one tail read. */
   def footer: Footer = parsedFooter
 
   private def parseFooter(in: ByteBuffer): Footer = {
@@ -1457,46 +1508,35 @@ final class ObjectFile private (val path: String,
         case _ => mn = Double.box(in.getDouble()); mx = Double.box(in.getDouble())
       }
       stats += f.name -> ColStats(mn, mx, in.getInt())
-      if (version >= 3) {
-        val sketch = longs(len(8))
-        if (sketch.nonEmpty) sketches += f.name -> sketch
-        if (statKind(f.dataType) == 3) lens += f.name -> (in.getLong(), in.getInt())
-        if (version >= 4) {
-          val kind = in.get().toInt
-          val complete = in.get() != 0
-          val m = in.getInt()
-          val (bk, bits) =
-            if (m == 0) (0, Array.emptyLongArray) else (in.getInt(), longs(m >>> 6))
-          if (kind != 0) indexes += f.name -> ColIndex(kind, complete, bk, bits)
-        }
-      }
+      val sketch = longs(len(8))
+      if (sketch.nonEmpty) sketches += f.name -> sketch
+      if (statKind(f.dataType) == 3) lens += f.name -> (in.getLong(), in.getInt())
+      val kind = in.get().toInt
+      val complete = in.get() != 0
+      val m = in.getInt()
+      val (bk, bits) =
+        if (m == 0) (0, Array.emptyLongArray) else (in.getInt(), longs(m >>> 6))
+      if (kind != 0) indexes += f.name -> ColIndex(kind, complete, bk, bits)
     }
-    val decodedSize =
-      if (!columnar) size
-      else size + directory.decoded.indices.map(i =>
-        directory.decoded(i).toLong - directory.stored(i)).sum
+    val decodedSize = size + directory.decoded.indices.map(i =>
+      directory.decoded(i).toLong - directory.stored(i)).sum
     Footer(count, stats.result(), sketches.result(), lens.result(),
-      indexes.result(), columnar, decodedSize)
+      indexes.result(), decodedSize)
   }
 
-  /** Columnar directory: row count, then each segment's absolute
-    * offset, stored length and decoded length (one length per segment
-    * before v7: stored raw). The stored lengths must tile the body
-    * exactly, and no segment stores more bytes than it decodes to; the
-    * footer parse checks the row count. */
+  /** The segment directory: row count, then each segment's absolute
+    * offset, stored length and decoded length. The stored lengths must
+    * tile the body exactly, and no segment stores more bytes than it
+    * decodes to; the footer parse checks the row count. */
   private lazy val directory: ObjectFile.Directory = {
-    require(columnar, s"$path: segment read of a row-major body")
     val d = headTo(bodyOff + 9, "segment directory")
     val rows = d.getInt(bodyOff.toInt + 1)
     val n = d.getInt(bodyOff.toInt + 5)
     if (n != schema.length) corrupt(s"column directory $n != schema ${schema.length}")
-    val entry = if (version >= 7) 8 else 4
-    val dirEnd = bodyOff + 9 + entry.toLong * n
+    val dirEnd = bodyOff + 9 + 8L * n
     val dir = headTo(dirEnd, "segment directory")
-    val stored = Array.tabulate(n)(i => dir.getInt(bodyOff.toInt + 9 + entry * i))
-    val decoded =
-      if (version >= 7) Array.tabulate(n)(i => dir.getInt(bodyOff.toInt + 13 + entry * i))
-      else stored
+    val stored = Array.tabulate(n)(i => dir.getInt(bodyOff.toInt + 9 + 8 * i))
+    val decoded = Array.tabulate(n)(i => dir.getInt(bodyOff.toInt + 13 + 8 * i))
     val offs = stored.scanLeft(dirEnd)(_ + _)
     if (stored.exists(_ < 0) || offs(n) != footerOff)
       corrupt("segment directory does not tile the body")
@@ -1508,7 +1548,7 @@ final class ObjectFile private (val path: String,
   }
   // every directory read first checks the directory against the footer
   private lazy val ObjectFile.Directory(_, segOff, segLen, decLen) = { footer; directory }
-  /** Rows in a columnar body. */
+  /** Rows in the object. */
   def rowCount: Int = footer.rowCount
   /** Directory entry `i`: the segment's absolute (offset, stored length). */
   def segment(i: Int): (Long, Int) = (segOff(i), segLen(i))
@@ -1588,14 +1628,15 @@ final class ObjectFile private (val path: String,
     } catch { case e: ZstdException => bad(s"zstd: ${e.getMessage}", e) }
   }
 
-  /** A row-major body's row stream (after the v5 layout byte). */
-  def rowStream(): DataInputStream = {
-    require(!columnar, s"$path: row read of a columnar body")
-    footer // a short object fails here, before any row decodes
-    ch.position(bodyOff + (if (version >= 5 && bodyLen > 0) 1 else 0))
-    new DataInputStream(new java.io.BufferedInputStream(
-      java.nio.channels.Channels.newInputStream(ch), 1 << 20))
-  }
+  /** Column `i`'s values from its decoded segment `seg`, boxed
+    * ([[ObjectFormat.Segment.boxed]]). */
+  def boxed(i: Int, seg: Array[Byte]): Array[Any] =
+    try new Segment(seg, rowCount, schema(i).dataType).boxed()
+    catch {
+      case e @ (_: java.nio.BufferUnderflowException | _: IndexOutOfBoundsException |
+          _: IllegalArgumentException) =>
+        corrupt(s"segment $i: values overrun its ${seg.length} bytes", e)
+    }
 
   /** Recompute the body CRC32 (read in 512 KB chunks) and compare it
     * with the one stored after the footer. */
@@ -1624,12 +1665,12 @@ final class ObjectFile private (val path: String,
 }
 
 object ObjectFile {
-  /** Bytes of the first read: the header and a columnar directory of
+  /** Bytes of the first read: the header and the segment directory of
     * every fixture table fit (lineitem's end at byte 316). */
   val HeadProbe = 512
 
-  /** A columnar body's segment directory: the row count, and per
-    * segment its absolute offset, stored length and decoded length. */
+  /** The segment directory: the row count, and per segment its
+    * absolute offset, stored length and decoded length. */
   private final case class Directory(rows: Int, offsets: Array[Long],
       stored: Array[Int], decoded: Array[Int])
 
@@ -2398,10 +2439,7 @@ class GraftObjectTable(tableSchema: StructType, path: String,
       Option(opts.get("commitMode")).contains("optimistic"),
       GraftChecks.compile(info.schema(), GraftChecks.fromOptions(opts)),
       Option(opts.get("maxObjectsPerTask")).map(_.toInt)
-        .getOrElse(GraftWriterFactory.MaxIdentityClusterObjectsPerTask),
-      // v5 layout choice: columnar by default; `.option("bodyLayout",
-      // "row")` keeps the v≤4 row-major body (compat surface)
-      !Option(opts.get("bodyLayout")).contains("row"))
+        .getOrElse(GraftWriterFactory.MaxIdentityClusterObjectsPerTask))
   }
 
   /** `DELETE FROM … WHERE p` as an OBJECT-LEVEL operation — the
@@ -2700,8 +2738,7 @@ class GraftWriteBuilder(writeSchema: StructType, path: String,
     clusterWidth: Option[Long] = None,
     optimistic: Boolean = false,
     checks: Seq[GraftCheck] = Nil,
-    maxObjectsPerTask: Int = GraftWriterFactory.MaxIdentityClusterObjectsPerTask,
-    columnarBody: Boolean = ObjectFormat.DefaultColumnar)
+    maxObjectsPerTask: Int = GraftWriterFactory.MaxIdentityClusterObjectsPerTask)
     extends WriteBuilder with SupportsTruncate {
   private var doTruncate = false
   override def truncate(): WriteBuilder = { doTruncate = true; this }
@@ -2709,7 +2746,7 @@ class GraftWriteBuilder(writeSchema: StructType, path: String,
     override def toBatch: BatchWrite =
       new GraftBatchWrite(writeSchema, path, doTruncate, clusterBy,
         bloomCols, bloomFpp, clusterWidth, optimistic, checks,
-        maxObjectsPerTask, columnarBody)
+        maxObjectsPerTask)
     /** Streaming write: each micro-batch epoch commits its staged
       * objects onto the tail of the `<table>.<seq>` sequence — which is
       * exactly what makes the table readable as a stream (offset =
@@ -2740,8 +2777,7 @@ class GraftBatchWrite(writeSchema: StructType, path: String, truncate: Boolean,
     clusterWidth: Option[Long] = None,
     optimistic: Boolean = false,
     checks: Seq[GraftCheck] = Nil,
-    maxObjectsPerTask: Int = GraftWriterFactory.MaxIdentityClusterObjectsPerTask,
-    columnarBody: Boolean = ObjectFormat.DefaultColumnar)
+    maxObjectsPerTask: Int = GraftWriterFactory.MaxIdentityClusterObjectsPerTask)
     extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     new File(path).mkdirs()
@@ -2767,8 +2803,7 @@ class GraftBatchWrite(writeSchema: StructType, path: String, truncate: Boolean,
       }
     }
     new GraftWriterFactory(writeSchema, path, "b", clusterBy,
-      bloomCols, bloomFpp, clusterWidth, checks, maxObjectsPerTask,
-      columnarBody)
+      bloomCols, bloomFpp, clusterWidth, checks, maxObjectsPerTask)
   }
   /** `.option("commitMode", "optimistic")` — the LOCK-FREE append for
     * writers that do not share `_lock`'s advisory semantics (separate
@@ -2998,8 +3033,7 @@ class GraftWriterFactory(writeSchema: StructType, path: String, tag: String,
     bloomCols: Set[String] = Set.empty, bloomFpp: Double = 0.01,
     clusterWidth: Option[Long] = None,
     checks: Seq[GraftCheck] = Nil,
-    maxObjectsPerTask: Int = GraftWriterFactory.MaxIdentityClusterObjectsPerTask,
-    columnarBody: Boolean = ObjectFormat.DefaultColumnar)
+    maxObjectsPerTask: Int = GraftWriterFactory.MaxIdentityClusterObjectsPerTask)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     clusterBy match {
@@ -3007,8 +3041,7 @@ class GraftWriterFactory(writeSchema: StructType, path: String, tag: String,
         private val staged = s"$path/_staged_$tag${partitionId}_$taskId"
         private val check = GraftChecks.enforcer(checks)
         private val enc =
-          new ObjectFormat.ObjectEncoder(writeSchema, bloomCols, bloomFpp,
-            columnarBody)
+          new ObjectFormat.ObjectEncoder(writeSchema, bloomCols, bloomFpp)
         override def write(row: InternalRow): Unit = {
           check(row); enc.addInternal(row)
         }
@@ -3048,8 +3081,7 @@ class GraftWriterFactory(writeSchema: StructType, path: String, tag: String,
                 ", cluster on a lower-cardinality column, or raise " +
                 """.option("maxObjectsPerTask", N)""" +
                 " if the object count is intended.")
-          enc = new ObjectFormat.ObjectEncoder(writeSchema, bloomCols,
-            bloomFpp, columnarBody)
+          enc = new ObjectFormat.ObjectEncoder(writeSchema, bloomCols, bloomFpp)
           open = true
         }
         // `clusterWidth`=W coarsens the rotation key to floorDiv(k, W):
@@ -3824,13 +3856,12 @@ class GraftObjectScan(fullSchema: StructType, readSchema_ : StructType,
       // rows (valid with filters too — the cap counts post-filter
       // rows). TopN must surface every candidate row, so no cap there.
       rowLimit = if (topN.isEmpty) limit else None,
-      // vectorized route: every selected object is v5-columnar and
-      // every projected type has a vector fill; pushed-LIMIT scans
-      // stay on the row route (the early-exit cap is row-granular).
-      // `selected` is the runtime-prune SUPERSET, so the flag agrees
-      // across every partition Spark ever asks about.
+      // vectorized route: every projected type has a vector fill;
+      // pushed-LIMIT scans stay on the row route (the early-exit cap
+      // is row-granular). `selected` is the runtime-prune SUPERSET,
+      // so the flag agrees across every partition Spark ever asks
+      // about.
       columnar = limit.isEmpty && selected.nonEmpty &&
-        selected.forall(_._2.columnar) &&
         readSchema_.fields.forall(f =>
           ObjectFormat.vectorizable(f.dataType)))
 
@@ -3855,7 +3886,7 @@ class GraftObjectScan(fullSchema: StructType, readSchema_ : StructType,
     * the post-filter one or downstream join planning would see
     * pre-filter sizes forever.
     *
-    * v3 footers additionally carry per-column write-time stats — the
+    * Footers additionally carry per-column write-time stats — the
     * full runstats analog, computed per object AT INGEST, never by a
     * table scan: null counts (exact sums), min/max (exact merges,
     * narrowed to the column's Catalyst type), string byte lengths, and
@@ -4156,16 +4187,19 @@ class GraftReaderFactory(fullSchema: StructType, readSchema: StructType,
     }
 }
 
-/** Streams one object: decode row → evaluate pushed filters → project
-  * required columns. The select+project happens HERE, storage-side —
-  * the reference's in-storage processing. Values decode directly into
-  * their Catalyst representation (nested structs/arrays/maps
-  * included), so projection is a plain array copy. */
+/** Reads one object as rows: decode the needed segments → the row-fate
+  * mask → project the kept rows. The select+project happens HERE,
+  * storage-side — the reference's in-storage processing. Values decode
+  * directly into their Catalyst representation (nested structs/arrays/
+  * maps included), so projection is a plain array copy. The scan takes
+  * this route for nested output and pushed LIMIT; DELETE's survivors
+  * (`negated`) and merge-on-read ordinals (`currentOrdinal`) come only
+  * from here. */
 class GraftObjectReader(path: String, fullSchema: StructType,
     readSchema: StructType, pushed: Array[Filter],
-    negated: Boolean = false, // true: emit rows FAILING the conjunction
-    rowLimit: Int = Int.MaxValue) // pushed LIMIT: stop decoding after
-    extends PartitionReader[InternalRow] {         // (DELETE's survivors)
+    negated: Boolean = false, // emit rows FAILING the conjunction (DELETE's survivors)
+    rowLimit: Int = Int.MaxValue) // pushed LIMIT: stop after this many rows
+    extends PartitionReader[InternalRow] {
 
   private var emitted = 0
 
@@ -4179,9 +4213,6 @@ class GraftObjectReader(path: String, fullSchema: StructType,
     * own header schema. Columns are then matched to the table schema
     * BY NAME — a column this object predates reads as null. */
   private val objSchema = obj.schema
-  private val columnarBody = obj.columnar
-
-  private val n = objSchema.length
   private val fieldIdx = obj.fieldIdx
   /** -1 marks the `_object` metadata column (not stored in the body —
     * synthesized from the object file name, the reference's object
@@ -4204,17 +4235,6 @@ class GraftObjectReader(path: String, fullSchema: StructType,
       else ObjectFormat.widenConverter(objSchema(i).dataType, f.dataType)
     }
   }
-  /** Merge-on-read: the valid deletion vector for this object, if any.
-    * Archive copies never carry one (DVs live only under the table
-    * root's `_dv/`), so snapshot reads of pre-delete state stay full. */
-  private val dv: Option[util.BitSet] = DeleteVectors.read(path)
-  /** Physical ordinal of the row currently held in `values` (counts
-    * every decoded row, including DV-deleted and filtered ones). */
-  private var ord = -1
-  def currentOrdinal: Int = ord
-  private val present = Array.ofDim[Boolean](n)
-  private val values = Array.ofDim[Any](n) // Catalyst-level values
-  private var current: InternalRow = _
 
   /** Zone-map full-accept (see [[ObjectFormat.provenForAll]]): pushed
     * filters the footer proves TRUE for every row are dropped from
@@ -4224,181 +4244,60 @@ class GraftObjectReader(path: String, fullSchema: StructType,
   private val effPushed: Array[Filter] =
     if (negated) pushed else guarded(obj.residual(pushed))
 
-  /** The footer's row count bounds the row-major stream (the codec has
-    * no per-row length prefix); a columnar directory must agree. */
-  private val rowCount = guarded(obj.footer.rowCount)
-  private val in: DataInputStream =
-    if (columnarBody) null else guarded(obj.rowStream())
-
-  /** Columnar bodies: decode ONLY the columns this read touches
-    * (projection ∪ filter references) — every other segment is never
-    * read. Row-major bodies must decode every field of every row just
-    * to find the next row; this skip is the v5 layout's point. */
-  private val colData: Array[Array[Any]] =
-    if (!columnarBody) null
-    else guarded {
-      val segs = obj.segments(obj.needed(readSchema, effPushed))
-      Array.tabulate(n) { i =>
-        if (segs(i) == null) null
-        else {
-          val s = new DataInputStream(new java.io.ByteArrayInputStream(segs(i)))
-          val dt = objSchema(i).dataType
-          val arr = Array.ofDim[Any](rowCount)
-          // v6 segment: [nullCount][presence IF nullCount>0][values,
-          // top-level fixed-width little-endian]; v5: [presence][values]
-          val v6 = obj.version >= 6
-          val pres: Array[Byte] =
-            if (v6 && s.readInt() == 0) null
-            else { val p = new Array[Byte](rowCount); s.readFully(p); p }
-          var r = 0
-          while (r < rowCount) {
-            if (pres == null || pres(r) != 0)
-              arr(r) = if (v6) readValueLE(s, dt) else readValue(s, dt)
-            r += 1
-          }
-          arr
-        }
-      }
-    }
-  private var cursor = -1 // columnar row cursor (== physical ordinal)
-
-  private def readValue(in: DataInputStream, dt: DataType): Any = dt match {
-    case LongType | TimestampType | TimestampNTZType => Long.box(in.readLong())
-    case IntegerType | DateType => Int.box(in.readInt())
-    case DoubleType => Double.box(in.readDouble())
-    case FloatType => Float.box(in.readFloat())
-    case BooleanType => Boolean.box(in.readBoolean())
-    case StringType =>
-      val b = new Array[Byte](in.readInt()); in.readFully(b)
-      UTF8String.fromBytes(b)
-    case BinaryType =>
-      val b = new Array[Byte](in.readInt()); in.readFully(b)
-      b
-    case d: DecimalType =>
-      val b = new Array[Byte](in.readInt()); in.readFully(b)
-      Decimal(new java.math.BigDecimal(
-        new java.math.BigInteger(b), d.scale), d.precision, d.scale)
-    case ArrayType(et, _) =>
-      val len = in.readInt()
-      val a = new Array[Any](len)
-      var j = 0
-      while (j < len) {
-        a(j) = if (in.readBoolean()) readValue(in, et) else null
-        j += 1
-      }
-      new GenericArrayData(a)
-    case st: StructType =>
-      val flags = Array.ofDim[Boolean](st.length)
-      var j = 0
-      while (j < st.length) { flags(j) = in.readBoolean(); j += 1 }
-      val vals = new Array[Any](st.length)
-      j = 0
-      while (j < st.length) {
-        if (flags(j)) vals(j) = readValue(in, st(j).dataType)
-        j += 1
-      }
-      new GenericInternalRow(vals)
-    case MapType(kt, vt, _) =>
-      val len = in.readInt()
-      val ks = new Array[Any](len)
-      var j = 0
-      while (j < len) { ks(j) = readValue(in, kt); j += 1 }
-      val vs = new Array[Any](len)
-      j = 0
-      while (j < len) {
-        vs(j) = if (in.readBoolean()) readValue(in, vt) else null
-        j += 1
-      }
-      new ArrayBasedMapData(new GenericArrayData(ks), new GenericArrayData(vs))
-    case other => throw new UnsupportedOperationException(other.toString)
+  /** The columns this read touches (projection ∪ filter references),
+    * decoded boxed; every other segment is never read. */
+  private val colData: Array[Array[Any]] = guarded {
+    val segs = obj.segments(obj.needed(readSchema, effPushed))
+    Array.tabulate(segs.length)(i => if (segs(i) == null) null else obj.boxed(i, segs(i)))
   }
-
-  /** v6 columnar top-level values: fixed-width types are
-    * little-endian (the bulk-fill contract); everything else shares
-    * the big-endian [[readValue]] encoding. */
-  private def readValueLE(in: DataInputStream, dt: DataType): Any = dt match {
-    case LongType | TimestampType | TimestampNTZType =>
-      Long.box(java.lang.Long.reverseBytes(in.readLong()))
-    case IntegerType | DateType =>
-      Int.box(Integer.reverseBytes(in.readInt()))
-    case DoubleType => Double.box(java.lang.Double.longBitsToDouble(
-      java.lang.Long.reverseBytes(in.readLong())))
-    case FloatType => Float.box(java.lang.Float.intBitsToFloat(
-      Integer.reverseBytes(in.readInt())))
-    case other => readValue(in, other)
+  /** Merge-on-read: the valid deletion vector drops rows in every mode
+    * (reads, negated CoW-DELETE survivor scans, feeds alike). Archive
+    * copies never carry one (DVs live only under the table root's
+    * `_dv/`), so snapshot reads of pre-delete state stay full. */
+  private val keep: Array[Boolean] = guarded {
+    ObjectFormat.rowFate(obj.rowCount, DeleteVectors.read(path), effPushed, negated,
+      a => fieldIdx.get(a).map(objSchema(_).dataType),
+      a => fieldIdx.get(a).map(colData(_)).orNull)
   }
-
-  private def readRow(): Boolean = {
-    if (ord + 1 >= rowCount) return false
-    var i = 0
-    while (i < n) { present(i) = in.readBoolean(); i += 1 }
-    i = 0
-    while (i < n) {
-      values(i) = if (present(i)) readValue(in, objSchema(i).dataType) else null
-      i += 1
-    }
-    true
-  }
-
-  private def valueAt(i: Int): Any =
-    if (columnarBody) colData(i)(cursor) else values(i)
-
-  private def fieldVal(a: String): Any =
-    fieldIdx.get(a) match { // absent column (evolution) -> null
-      case Some(i) => valueAt(i) // UTF8String stays raw: cmpExact compares
-      case None => null // it against String filter values in binary order
-    }
-
-  private def eval3(f: Filter): Option[Boolean] =
-    ObjectFormat.eval3Filter(f, fieldVal)
-
-  private def advance(): Boolean =
-    if (columnarBody) { cursor += 1; ord = cursor; cursor < rowCount }
-    else { val more = readRow(); if (more) ord += 1; more }
+  /** Physical ordinal of the row last emitted: kept rows come out in
+    * ordinal order. */
+  private var ord = -1
+  def currentOrdinal: Int = ord
+  private var current: InternalRow = _
 
   override def next(): Boolean = {
     if (emitted >= rowLimit) return false // pushed-LIMIT early exit
-    while (advance()) {
-      // merge-on-read: a DV-deleted ordinal is logically gone in EVERY
-      // mode (reads, negated CoW-DELETE survivor scans, feeds alike)
-      if (dv.exists(_.get(ord))) {
-        // skip
+    ord += 1
+    while (ord < keep.length && !keep(ord)) ord += 1
+    if (ord >= keep.length) return false
+    val out = new Array[Any](outIdx.length)
+    var k = 0
+    while (k < outIdx.length) {
+      out(k) = outIdx(k) match {
+        case -1 => objName // _object metadata column
+        case -2 => null    // column newer than this object
+        case i =>
+          val c = widen(k)
+          if (c == null) colData(i)(ord) else c(colData(i)(ord))
       }
-      // TRUE-or-not decides row fate: a read emits only TRUE rows; a
-      // negated DELETE keeps FALSE and UNKNOWN rows (SQL deletes only
-      // where the predicate is TRUE)
-      else if (effPushed.forall(eval3(_).contains(true)) != negated) {
-        val out = new Array[Any](outIdx.length)
-        var k = 0
-        while (k < outIdx.length) {
-          out(k) = outIdx(k) match {
-            case -1 => objName // _object metadata column
-            case -2 => null    // column newer than this object
-            case i =>
-              val c = widen(k)
-              if (c == null) valueAt(i) else c(valueAt(i))
-          }
-          k += 1
-        }
-        current = new GenericInternalRow(out)
-        emitted += 1
-        return true
-      }
+      k += 1
     }
-    false
+    current = new GenericInternalRow(out)
+    emitted += 1
+    true
   }
 
   override def get(): InternalRow = current
   override def close(): Unit = obj.close()
 }
 
-/** Vectorized read of v5 COLUMNAR objects — the scan fast path: one
+/** Vectorized read of objects — the scan fast path: one
   * `ColumnarBatch` per object, filled column-at-a-time with tight
-  * typed loops straight off the body bytes (no per-row InternalRow,
+  * typed loops straight off the segment bytes (no per-row InternalRow,
   * no boxing for fixed-width types), feeding Spark's columnar
-  * whole-stage codegen. Pushed filters and the object's deletion
-  * vector are applied HERE (same 3VL semantics as the row reader, via
-  * ObjectFormat.eval3Filter): the emitted batch contains exactly the
+  * whole-stage codegen. The object's row-fate mask (deletion vector
+  * and pushed filters, [[ObjectFormat.rowFate]] over the boxed filter
+  * columns) is the row reader's: the emitted batch contains exactly the
   * qualifying rows, so the pushdown contract is identical to the row
   * route. Unprojected, unfiltered columns are never read: the segment
   * directory places each needed segment, and [[ObjectFile]] reads
@@ -4413,6 +4312,7 @@ class GraftColumnarReader(paths: Seq[String], fullSchema: StructType,
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.ColumnarBatch
+  import ObjectFormat.Segment
 
   private val it = paths.iterator
   private var batch: ColumnarBatch = _
@@ -4432,9 +4332,7 @@ class GraftColumnarReader(paths: Seq[String], fullSchema: StructType,
   private def readObject(path: String): ColumnarBatch = {
     val obj = ObjectFile.open(path)
     try {
-      require(obj.columnar, s"$path: columnar read of a row-major body")
       val objSchema = obj.schema
-      val v6 = obj.version >= 6
       val rowCount = obj.rowCount
       val fieldIdx = obj.fieldIdx
       // Zone-map full-accept (provenForAll): pushed filters the
@@ -4448,52 +4346,10 @@ class GraftColumnarReader(paths: Seq[String], fullSchema: StructType,
       // filter-referenced columns: every other segment's bytes are
       // never read, and each needed one lands in its own array.
       val bytes = obj.segments(obj.needed(readSchema, residual))
-      val segs = Array.tabulate(bytes.length) { i =>
-        if (bytes(i) == null) null
-        else {
-          val bb = java.nio.ByteBuffer.wrap(bytes(i))
-            .order(java.nio.ByteOrder.BIG_ENDIAN)
-          if (!v6) new Seg(bb, hasPres = true, presOff = 0,
-            valOff = rowCount, le = false)
-          else {
-            // v6: [nullCount BE][presence IF nullCount>0][values];
-            // fixed-width value bytes are little-endian
-            val nullCount = bb.getInt(0)
-            val hasPres = nullCount > 0
-            val le = ObjectFormat.fixedWidthLE(objSchema(i).dataType)
-            if (le) bb.order(java.nio.ByteOrder.LITTLE_ENDIAN)
-            new Seg(bb, hasPres = hasPres, presOff = 4,
-              valOff = 4 + (if (hasPres) rowCount else 0), le = le)
-          }
-        }
-      }
-
-      // row fate: DV + pushed-filter conjunction (3VL), exactly the
-      // row reader's semantics — filter columns decode boxed, once
-      val dv = DeleteVectors.read(path)
-      val keep = Array.fill(rowCount)(true)
-      dv.foreach { bs =>
-        var r = bs.nextSetBit(0)
-        while (r >= 0 && r < rowCount) { keep(r) = false; r = bs.nextSetBit(r + 1) }
-      }
-      if (residual.nonEmpty) {
-        val refNames = residual.flatMap(_.references).distinct
-        val refCols: Map[String, Array[Any]] = refNames.flatMap { a =>
-          fieldIdx.get(a).map { i =>
-            a -> decodeBoxed(segs(i), rowCount, objSchema(i).dataType)
-          }
-        }.toMap
-        // compiled 3VL mask: literal normalization + comparator
-        // dispatch hoisted out of the row loop (eval3-identical)
-        val mask = ObjectFormat.compileMask(residual,
-          a => fieldIdx.get(a).map(objSchema(_).dataType),
-          a => refCols.getOrElse(a, null))
-        var r = 0
-        while (r < rowCount) {
-          if (keep(r)) keep(r) = mask(r)
-          r += 1
-        }
-      }
+      // row fate: filter columns decode boxed, once
+      val keep = ObjectFormat.rowFate(rowCount, DeleteVectors.read(path), residual,
+        negated = false, a => fieldIdx.get(a).map(objSchema(_).dataType),
+        a => fieldIdx.get(a).map(i => obj.boxed(i, bytes(i))).orNull)
       var kept = 0
       locally { var r = 0; while (r < rowCount) { if (keep(r)) kept += 1; r += 1 } }
       if (kept == 0) return null
@@ -4503,8 +4359,9 @@ class GraftColumnarReader(paths: Seq[String], fullSchema: StructType,
         val v = new OnHeapColumnVector(kept, f.dataType)
         fieldIdx.get(f.name) match {
           case Some(i) =>
-            fillVector(v, segs(i), rowCount, keep, kept,
-              objSchema(i).dataType, f.dataType)
+            val dt = objSchema(i).dataType
+            fillVector(v, new Segment(bytes(i), rowCount, dt), rowCount, keep, kept,
+              dt, f.dataType)
           case None if f.name == "_object" =>
             var r = 0
             while (r < kept) { v.putByteArray(r, objName.getBytes); r += 1 }
@@ -4516,59 +4373,6 @@ class GraftColumnarReader(paths: Seq[String], fullSchema: StructType,
     } finally obj.close()
   }
 
-  /** One needed column's segment: the wrapped bytes plus where the
-    * presence bytes (if any) and the values start, and whether the
-    * fixed-width values are little-endian (v6). The buffer's order is
-    * pre-set to match the VALUE encoding; the v6 header int is parsed
-    * before the order is flipped. */
-  private final class Seg(val bb: java.nio.ByteBuffer, val hasPres: Boolean,
-      val presOff: Int, val valOff: Int, val le: Boolean) {
-    @inline def presentAt(row: Int): Boolean =
-      !hasPres || bb.get(presOff + row) != 0
-  }
-
-  /** Boxed single-column decode (filter columns only). */
-  private def decodeBoxed(seg: Seg, rowCount: Int,
-      dt: DataType): Array[Any] = {
-    val bb = seg.bb
-    val out = Array.ofDim[Any](rowCount)
-    var p = seg.valOff
-    var r = 0
-    while (r < rowCount) {
-      if (seg.presentAt(r)) {
-        dt match {
-          case LongType | TimestampType | TimestampNTZType =>
-            out(r) = Long.box(bb.getLong(p)); p += 8
-          case IntegerType | DateType =>
-            out(r) = Int.box(bb.getInt(p)); p += 4
-          case DoubleType => out(r) = Double.box(bb.getDouble(p)); p += 8
-          case FloatType => out(r) = Float.box(bb.getFloat(p)); p += 4
-          case BooleanType => out(r) = Boolean.box(bb.get(p) != 0); p += 1
-          case StringType =>
-            val len = bb.getInt(p); p += 4
-            val b = new Array[Byte](len)
-            bb.get(p, b); p += len
-            out(r) = UTF8String.fromBytes(b)
-          case BinaryType =>
-            val len = bb.getInt(p); p += 4
-            val b = new Array[Byte](len)
-            bb.get(p, b); p += len
-            out(r) = b
-          case d: DecimalType =>
-            val len = bb.getInt(p); p += 4
-            val b = new Array[Byte](len)
-            bb.get(p, b); p += len
-            out(r) = Decimal(new java.math.BigDecimal(
-              new java.math.BigInteger(b), d.scale), d.precision, d.scale)
-          case other => throw new UnsupportedOperationException(
-            s"columnar filter decode: $other")
-        }
-      }
-      r += 1
-    }
-    out
-  }
-
   /** Tight typed fill: walk the presence bytes once, copying kept
     * present values into the vector and nulling kept absent ones;
     * skipped rows only advance the value cursor. `segDt` is the
@@ -4576,7 +4380,7 @@ class GraftColumnarReader(paths: Seq[String], fullSchema: StructType,
     * for type-widened columns (int→bigint, float→double), which get
     * their own upcast arms. */
   private def fillVector(v: org.apache.spark.sql.execution.vectorized.OnHeapColumnVector,
-      seg: Seg, rowCount: Int,
+      seg: Segment, rowCount: Int,
       keep: Array[Boolean], kept: Int, segDt: DataType,
       vecDt: DataType): Unit = {
     val bb = seg.bb
@@ -4584,7 +4388,7 @@ class GraftColumnarReader(paths: Seq[String], fullSchema: StructType,
     var r = 0
     var o = 0
     @inline def presentAt(row: Int): Boolean = seg.presentAt(row)
-    // v6 bulk fast path — the common 100 TB scan shape: a null-free
+    // bulk fast path — the common 100 TB scan shape: a null-free
     // little-endian fixed-width segment with no filter/DV drops
     // memcpys straight into the vector's backing array (the same
     // plain-encoding fill parquet's vectorized reader does), no

@@ -1,6 +1,6 @@
 package graft
 
-import java.io.{DataInputStream, DataOutputStream, FileOutputStream}
+import java.io.DataInputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 
@@ -17,9 +17,8 @@ import graft.sources.{GraftObjectTable, ObjectFormat}
   * Codec v7 stores each of those segments zstd-compressed when that is
   * smaller, with a (stored, decoded) length pair per column in the
   * directory. These tests pin the on-disk layout, the null/filter/DV
-  * slow paths, raw storage of incompressible segments, the planner's
-  * decoded sizes, and genuine-v5/v6 back-compat (hand-built v5 and v6
-  * bodies must still read through both routes). */
+  * slow paths, raw storage of incompressible segments and the
+  * planner's decoded sizes. */
 class CodecV6Spec extends SparkSpec {
 
   private def fresh(tag: String): String =
@@ -179,163 +178,5 @@ class CodecV6Spec extends SparkSpec {
     // pushed comparison on a bulk-eligible column after the DV
     assert(after.filter(col("d") > 100.0).count() ==
       expAfter.filter(col("d") > 100.0).count())
-  }
-
-  test("a genuine v5 columnar body (presence-always, big-endian) still reads") {
-    val dir = fresh("v5")
-    sparse.select("id", "d", "s").coalesce(1)
-      .write.format("graft-objects").mode("overwrite").save(dir)
-    val obj = GraftObjectTable.listObjects(dir).head
-    rewriteToV6(obj)
-    val before = Files.size(Paths.get(obj))
-    // Transform the v6 object into the exact v5 on-disk shape:
-    // re-add presence bytes, flip fixed-width values to big-endian,
-    // version byte 5; footer bytes (layout-independent) copied as-is.
-    rewriteToV5(obj)
-    assert(Files.size(Paths.get(obj)) > before,
-      "v5 re-added presence bytes for the null-free columns")
-    // vectorized route (all-primitive projection) over the v5 object
-    val got = spark.read.format("graft-objects").load(dir)
-    val exp = sparse.select("id", "d", "s")
-    assert(got.exceptAll(exp).count() == 0 && exp.exceptAll(got).count() == 0)
-    // row route too (nested-free but force it through a pushed LIMIT)
-    val lim = spark.read.format("graft-objects").load(dir).limit(2000)
-    assert(lim.exceptAll(exp).count() == 0)
-  }
-
-  test("a genuine v6 columnar body (raw segments, one length each) still reads") {
-    val dir = fresh("v6")
-    sparse.coalesce(1).write.format("graft-objects").mode("overwrite").save(dir)
-    val obj = GraftObjectTable.listObjects(dir).head
-    val before = Files.size(Paths.get(obj))
-    rewriteToV6(obj)
-    assert(Files.size(Paths.get(obj)) > before, "v6 stores every segment raw")
-    val got = spark.read.format("graft-objects").load(dir)
-    assert(got.exceptAll(sparse).count() == 0 && sparse.exceptAll(got).count() == 0)
-    val lim = spark.read.format("graft-objects").load(dir).limit(2000)
-    assert(lim.exceptAll(sparse).count() == 0 && sparse.exceptAll(lim).count() == 0)
-  }
-
-  test("mixed v5/v6/v7 objects in one table scan exactly") {
-    val dir = fresh("mixed3")
-    val frame = sparse.select("id", "d", "s")
-    def shifted(k: Int) = frame.selectExpr(s"id + ${k * 10000} AS id", "d", "s")
-    (0 until 3).foreach { k =>
-      shifted(k).coalesce(1).write.format("graft-objects")
-        .mode(if (k == 0) "overwrite" else "append").save(dir)
-    }
-    val objs = GraftObjectTable.listObjects(dir)
-    assert(objs.size == 3)
-    rewriteToV6(objs(0)); rewriteToV5(objs(0))
-    rewriteToV6(objs(1))
-    val versions = objs.map { o =>
-      val in = new DataInputStream(Files.newInputStream(Paths.get(o)))
-      try { in.readInt(); in.readInt() } finally in.close()
-    }
-    assert(versions.sorted == Seq(5, 6, 7))
-    val exp = shifted(0).unionAll(shifted(1)).unionAll(shifted(2))
-    val got = spark.read.format("graft-objects").load(dir)
-    assert(got.count() == 6000)
-    assert(got.exceptAll(exp).count() == 0 && exp.exceptAll(got).count() == 0)
-    val lim = spark.read.format("graft-objects").load(dir).limit(6000)
-    assert(lim.exceptAll(exp).count() == 0 && exp.exceptAll(lim).count() == 0)
-  }
-
-  test("mixed v5/v6 objects in one table scan exactly") {
-    val dir = fresh("mixed")
-    sparse.select("id", "d", "s").coalesce(1)
-      .write.format("graft-objects").mode("overwrite").save(dir)
-    // second object appended at v6; first rewritten to v5 by the same
-    // transform as above, exercised through the public read only
-    val first = GraftObjectTable.listObjects(dir).head
-    rewriteToV6(first); rewriteToV5(first)
-    sparse.select("id", "d", "s").selectExpr(
-      "id + 10000 AS id", "d", "s").coalesce(1)
-      .write.format("graft-objects").mode("append").save(dir)
-    val got = spark.read.format("graft-objects").load(dir)
-    val exp = sparse.select("id", "d", "s").unionAll(
-      sparse.selectExpr("id + 10000 AS id", "d", "s"))
-    assert(got.count() == 4000)
-    assert(got.exceptAll(exp).count() == 0 && exp.exceptAll(got).count() == 0)
-  }
-
-  /** The v7→v6 transform: every segment decoded and stored raw under
-    * a directory of one length per column, version 6; footer bytes
-    * copied as-is. */
-  private def rewriteToV6(obj: String): Unit = {
-    val v7 = readV7(obj)
-    val segs = v7.dir.indices.map(v7.decoded)
-    val out = new DataOutputStream(new java.io.BufferedOutputStream(new FileOutputStream(obj)))
-    out.writeInt(ObjectFormat.Magic); out.writeInt(6)
-    out.writeUTF(v7.ddl)
-    out.writeInt(9 + 4 * segs.size + segs.map(_.length).sum)
-    out.writeByte(ObjectFormat.LayoutColumnar)
-    out.writeInt(v7.rows); out.writeInt(segs.size)
-    segs.foreach(s => out.writeInt(s.length))
-    segs.foreach(out.write)
-    out.write(v7.tail)
-    out.close()
-  }
-
-  /** The v6→v5 transform from the back-compat test, reusable. */
-  private def rewriteToV5(obj: String): Unit = {
-    val bytes = Files.readAllBytes(Paths.get(obj))
-    val in = new DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    require(in.readInt() == ObjectFormat.Magic)
-    require(in.readInt() == 6)
-    val ddl = in.readUTF()
-    in.readInt()
-    require(in.readByte().toInt == ObjectFormat.LayoutColumnar)
-    val rows = in.readInt()
-    val nCols = in.readInt()
-    val lens = Array.fill(nCols)(in.readInt())
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-    val segs = Array.tabulate(nCols) { c =>
-      val nullCount = in.readInt()
-      val pres =
-        if (nullCount > 0) { val p = new Array[Byte](rows); in.readFully(p); p }
-        else Array.fill[Byte](rows)(1)
-      val valBytes = new Array[Byte](
-        lens(c) - 4 - (if (nullCount > 0) rows else 0))
-      in.readFully(valBytes)
-      val w = schema(c).dataType match {
-        case org.apache.spark.sql.types.LongType |
-             org.apache.spark.sql.types.DoubleType |
-             org.apache.spark.sql.types.TimestampType => 8
-        case org.apache.spark.sql.types.IntegerType |
-             org.apache.spark.sql.types.FloatType |
-             org.apache.spark.sql.types.DateType => 4
-        case _ => -1
-      }
-      if (w > 0) {
-        var p = 0
-        while (p < valBytes.length) {
-          var a = 0; var b = w - 1
-          while (a < b) {
-            val t = valBytes(p + a)
-            valBytes(p + a) = valBytes(p + b); valBytes(p + b) = t
-            a += 1; b -= 1
-          }
-          p += w
-        }
-      }
-      (pres, valBytes)
-    }
-    val tail = new Array[Byte](in.available())
-    in.readFully(tail)
-    val bodyOut = new java.io.ByteArrayOutputStream()
-    val bo = new DataOutputStream(bodyOut)
-    bo.writeByte(ObjectFormat.LayoutColumnar)
-    bo.writeInt(rows); bo.writeInt(nCols)
-    segs.foreach { case (p, v) => bo.writeInt(p.length + v.length) }
-    segs.foreach { case (p, v) => bo.write(p); bo.write(v) }
-    bo.flush()
-    val out = new DataOutputStream(new FileOutputStream(obj))
-    out.writeInt(ObjectFormat.Magic); out.writeInt(5)
-    out.writeUTF(ddl)
-    out.writeInt(bodyOut.size())
-    bodyOut.writeTo(out)
-    out.write(tail)
-    out.close()
   }
 }

@@ -1,17 +1,17 @@
 package graft
 
-import java.io.{DataInputStream, DataOutputStream, File, FileOutputStream}
+import java.io.File
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.LessThanOrEqual
 
-import graft.sources.{GraftObjectTable, ObjectFormat, ObjectStoreMaintenance}
+import graft.sources.{GraftObjectTable, ObjectFile, ObjectStoreMaintenance}
 
-/** Codec v5: column-major object bodies + the vectorized read path.
-  * Row-major stays writable (`bodyLayout=row`) and v≤4 objects still
-  * read; the full operator sweep runs through the columnar route
-  * because columnar is now the write default. */
+/** Column-major object bodies and the two read routes over them: the
+  * vectorized route (ColumnarBatch) for primitive projections and the
+  * row route for nested output and pushed LIMIT. */
 class ColumnarCodecSpec extends SparkSpec {
 
   private def fresh(tag: String): String =
@@ -27,20 +27,25 @@ class ColumnarCodecSpec extends SparkSpec {
     "array(id, id + 1) AS arr")
 
   test("columnar and row-major bodies round-trip identically") {
-    val cd = fresh("rt-col"); val rd = fresh("rt-row")
+    // one body layout; both read routes must give back the source frame
+    val dir = fresh("rt")
     sample.repartition(4).write.format("graft-objects")
-      .mode("overwrite").save(cd)
-    sample.repartition(4).write.format("graft-objects")
-      .option("bodyLayout", "row").mode("overwrite").save(rd)
-    // footers agree on the layout flag
-    assert(GraftObjectTable.listObjects(cd)
-      .forall(ObjectFormat.readFooter(_).columnar))
-    assert(GraftObjectTable.listObjects(rd)
-      .forall(!ObjectFormat.readFooter(_).columnar))
-    val a = spark.read.format("graft-objects").load(cd)
-    val b = spark.read.format("graft-objects").load(rd)
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
-    assert(a.count() == 1000)
+      .mode("overwrite").save(dir)
+    def same(got: DataFrame, exp: DataFrame, route: String): Unit = {
+      val vectorized = got.queryExecution.executedPlan.toString.contains("ColumnarToRow")
+      assert(vectorized == (route == "columnar"), s"$route route expected")
+      assert(got.count() == 1000, route)
+      assert(got.exceptAll(exp).count() == 0 && exp.exceptAll(got).count() == 0, route)
+    }
+    val all = spark.read.format("graft-objects").load(dir)
+    // nested `arr` in the projection takes the row route
+    same(all, sample, "row")
+    same(all.drop("arr"), sample.drop("arr"), "columnar")
+    // a pushed LIMIT takes the row route for primitive columns too
+    same(all.drop("arr").limit(1000), sample.drop("arr"), "row")
+    // the nulls survive both routes
+    assert(all.filter(col("v").isNull).count() == 143)
+    assert(all.drop("arr").filter(col("s").isNull).count() == 200)
   }
 
   test("vectorized route fires on primitive projections, declines on nested") {
@@ -105,57 +110,6 @@ class ColumnarCodecSpec extends SparkSpec {
       .map(new File(_).getName).toSet)
   }
 
-  test("a v4 row-major object (no layout byte) still reads") {
-    val dir = fresh("v4")
-    sample.drop("arr").coalesce(1).write.format("graft-objects")
-      .option("bodyLayout", "row").mode("overwrite").save(dir)
-    val obj = GraftObjectTable.listObjects(dir).head
-    // rewrite the file as codec v4: version=4, body without the
-    // leading layout byte (exactly the pre-v5 on-disk shape)
-    val bytes = Files.readAllBytes(Paths.get(obj))
-    val in = new DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    require(in.readInt() == ObjectFormat.Magic)
-    require(in.readInt() == ObjectFormat.Version)
-    val ddl = in.readUTF()
-    val bodyLen = in.readInt()
-    val body = new Array[Byte](bodyLen)
-    in.readFully(body)
-    require(body(0).toInt == ObjectFormat.LayoutRow)
-    val rest = new Array[Byte](in.available())
-    in.readFully(rest)
-    val outF = new DataOutputStream(new FileOutputStream(obj))
-    outF.writeInt(ObjectFormat.Magic); outF.writeInt(4)
-    outF.writeUTF(ddl)
-    outF.writeInt(bodyLen - 1)
-    outF.write(body, 1, bodyLen - 1)
-    outF.write(rest)
-    outF.close()
-    val got = spark.read.format("graft-objects").load(dir)
-    assert(got.count() == 1000)
-    assert(got.filter(col("id") === 37L).select(col("s"))
-      .collect().head.getString(0) == "s11")
-  }
-
-  test("mixed-layout table: scan falls back to the row route, stays exact") {
-    val dir = fresh("mixed")
-    sample.drop("arr").repartition(2).write.format("graft-objects")
-      .mode("overwrite").save(dir)
-    sample.drop("arr").selectExpr("id + 1000 AS id", "v", "i", "d", "s", "b")
-      .repartition(1).write.format("graft-objects")
-      .option("bodyLayout", "row").mode("append").save(dir)
-    val footers = GraftObjectTable.listObjects(dir)
-      .map(ObjectFormat.readFooter)
-    assert(footers.exists(_.columnar) && footers.exists(!_.columnar),
-      "fixture must genuinely mix layouts")
-    val got = spark.read.format("graft-objects").load(dir)
-      .select(col("id"), col("v"))
-    // one row-major object ⇒ the whole scan declines columnar (Spark
-    // forbids mixing batch and row partitions in one scan)
-    assert(!got.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-    assert(got.count() == 2000)
-    assert(got.filter(col("id") >= 1000L).count() == 1000)
-  }
-
   test("evolution-added column reads as nulls through the columnar route") {
     val dir = fresh("evo")
     sample.drop("arr").repartition(2).write.format("graft-objects")
@@ -181,24 +135,13 @@ class ColumnarCodecSpec extends SparkSpec {
       .mode("overwrite").save(dir)
     // a projection of one column must not touch the others: prove it
     // semantically by corrupting a NON-projected column's segment
-    // bytes in place and reading the projected one unharmed. (In the
-    // row-major layout every row decode walks all fields, so this
-    // corruption would explode.)
+    // bytes in place and reading the projected one unharmed
     val obj = GraftObjectTable.listObjects(dir).head
     val bytes = Files.readAllBytes(Paths.get(obj))
-    val in = new DataInputStream(new java.io.ByteArrayInputStream(bytes))
-    in.readInt(); in.readInt(); in.readUTF()
-    val headerLen = bytes.length - in.available()
-    in.readInt() // bodyLen
-    require(in.readByte().toInt == ObjectFormat.LayoutColumnar)
-    val rowCount = in.readInt()
-    val nCols = in.readInt()
-    val lens = Array.fill(nCols)(in.readInt())
-    // corrupt the middle of the 's' column's VALUES region
+    // corrupt the middle of the 's' column's stored segment
     val sIdx = 4 // id, v, i, d, s, b, arr
-    val segOff = headerLen + 4 + 1 + 4 + 4 + 4 * nCols +
-      lens.take(sIdx).sum
-    bytes(segOff + rowCount + lens(sIdx) / 2) = 0x7f.toByte
+    val (segOff, segLen) = ObjectFile.using(obj)(_.segment(sIdx))
+    bytes((segOff + segLen / 2).toInt) = 0x7f.toByte
     Files.write(Paths.get(obj), bytes)
     val ids = spark.read.format("graft-objects").load(dir)
       .select(col("id")).collect().map(_.getLong(0)).sorted

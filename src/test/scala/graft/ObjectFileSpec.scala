@@ -1,6 +1,5 @@
 package graft
 
-import java.io.File
 import java.nio.file.{Files, Paths}
 
 import com.github.luben.zstd.Zstd
@@ -34,9 +33,9 @@ class ObjectFileSpec extends AnyFunSuite {
   }
 
   /** A fresh object `t.0` in its own directory. */
-  private def fixture(tag: String, columnar: Boolean = true): String = {
+  private def fixture(tag: String): String = {
     val p = Files.createTempDirectory(s"graft-objfile-$tag").resolve("t.0").toString
-    val enc = new ObjectFormat.ObjectEncoder(schema, columnar = columnar)
+    val enc = new ObjectFormat.ObjectEncoder(schema)
     rows(2000).foreach(enc.addExternal)
     enc.finish(p)
     p
@@ -73,7 +72,7 @@ class ObjectFileSpec extends AnyFunSuite {
   test("planned reads cover exactly the needed segments, adjacent ones merged") {
     val p = fixture("ranges")
     ObjectFile.using(p) { o =>
-      assert(o.columnar && o.rowCount == 2000)
+      assert(o.rowCount == 2000)
       // the directory tiles the body: each segment starts where the last ends
       (1 until schema.length).foreach { i =>
         assert(o.segment(i)._1 == o.segment(i - 1)._1 + o.segment(i - 1)._2)
@@ -119,7 +118,7 @@ class ObjectFileSpec extends AnyFunSuite {
     val p = fixture("footer")
     ObjectFile.using(p) { o =>
       val f = o.footer
-      assert(f.rowCount == 2000 && f.columnar && f.stats("v").nullCount == 286)
+      assert(f.rowCount == 2000 && f.stats("v").nullCount == 286)
       // the head probe plus the tail from the footer's start; no body byte
       val bodyStart = o.segment(0)._1
       val footerStart = o.segment(schema.length - 1)._1 + o.segment(schema.length - 1)._2
@@ -172,33 +171,29 @@ class ObjectFileSpec extends AnyFunSuite {
   }
 
   test("a truncated object fails loudly, naming the object, on every read path") {
-    val col = fixture("trunc-col")
-    val row = fixture("trunc-row", columnar = false)
-    val (dirStart, segs, size) = ObjectFile.using(col) { o =>
-      (o.segment(0)._1 - 4L * schema.length, (0 until schema.length).map(o.segment), o.size)
+    val src = fixture("trunc")
+    // each directory entry is a (stored, decoded) pair of ints
+    val (dirStart, segs, size) = ObjectFile.using(src) { o =>
+      (o.segment(0)._1 - 8L * schema.length, (0 until schema.length).map(o.segment), o.size)
     }
-    val rowSize = new File(row).length()
-    val cuts: Seq[(String, String, Long)] = Seq(
-      (col, "mid-header", 20L),
-      (col, "mid-directory", dirStart + 6),
-      (col, "mid-segment", segs(2)._1 + segs(2)._2 / 2),
-      (col, "last segment", segs.last._1 + 1),
-      (col, "mid-footer", size - 200),
-      (col, "mid-CRC", size - 3),
-      (row, "mid-body", rowSize / 2),
-      (row, "mid-footer", rowSize - 200))
+    val cuts: Seq[(String, Long)] = Seq(
+      ("mid-header", 20L),
+      ("mid-directory", dirStart + 6),
+      ("mid-segment", segs(2)._1 + segs(2)._2 / 2),
+      ("last segment", segs.last._1 + 1),
+      ("mid-footer", size - 200),
+      ("mid-CRC", size - 3))
     val narrow = project("id", "s")
-    cuts.foreach { case (src, where, at) =>
+    cuts.foreach { case (where, at) =>
       val p = truncatedCopy(src, at, where.replace(' ', '-'))
-      val label = s"${if (src == col) "columnar" else "row-major"} object cut $where"
+      val label = s"object cut $where"
       failsNaming(p, s"$label: readFooter")(ObjectFormat.readFooter(p))
       assert(!ObjectFormat.verifyObject(p), s"$label: scrub passed")
       Seq(narrow, schema).foreach { proj =>
         failsNaming(p, s"$label: row reader")(rowRead(p, proj, Array.empty))
         failsNaming(p, s"$label: row reader, filtered")(
           rowRead(p, proj, Array(GreaterThan("v", 10L))))
-        if (src == col)
-          failsNaming(p, s"$label: columnar reader")(columnarRead(p, proj, Array.empty))
+        failsNaming(p, s"$label: columnar reader")(columnarRead(p, proj, Array.empty))
       }
     }
   }
@@ -222,6 +217,28 @@ class ObjectFileSpec extends AnyFunSuite {
     typed("row reader")(rowRead(p, proj, Array.empty))
     typed("row reader, filtered")(rowRead(p, proj, Array(GreaterThan("v", 10L))))
     typed("columnar reader")(columnarRead(p, proj, Array.empty))
+  }
+
+  test("a wrong magic, version or layout byte is a typed error naming the object and the value") {
+    val p = fixture("format")
+    // the layout byte leads the body, just before the row and column
+    // counts and the directory
+    val layoutAt = ObjectFile.using(p)(o => o.segment(0)._1 - 8L * schema.length - 9).toInt
+    assert(Files.readAllBytes(Paths.get(p))(layoutAt) == ObjectFormat.LayoutColumnar)
+    val cases: Seq[(String, String, java.nio.ByteBuffer => Unit)] = Seq(
+      ("version 6", "version 6", _.putInt(4, 6)),
+      ("version 8", "version 8", _.putInt(4, 8)),
+      ("layout byte 0", "layout byte 0", _.put(layoutAt, 0.toByte)),
+      ("magic", "magic 0x12345678", _.putInt(0, 0x12345678)))
+    cases.foreach { case (label, mention, patch) =>
+      val q = patchedCopy(p, label.replace(' ', '-'))(patch)
+      readsFail(q, label, schema, mention)
+      readsFail(q, label, project("id"), mention)
+      val e = intercept[java.io.IOException](ObjectFormat.readFooter(q))
+      assert(e.getMessage.contains(q) && e.getMessage.contains(mention),
+        s"$label: readFooter: ${e.getMessage}")
+      assert(!ObjectFormat.verifyObject(q), s"$label: scrub passed")
+    }
   }
 
   test("a damaged compressed segment fails loudly on both readers, never with wrong rows") {
