@@ -101,13 +101,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftFunctions.cosineSimDescriptor)
-    ext.injectFunction(GraftFunctions.rhpBucketDescriptor)
-    ext.injectFunction(GraftFunctions.zorderDescriptor)
-    ext.injectFunction(GraftFunctions.zorderPrefixDescriptor)
-    ext.injectFunction(GraftFunctions.zorderNormDescriptor)
-    ext.injectFunction(GraftFunctions.freqItemsDescriptor)
-    ext.injectFunction(GraftFunctions.quantileSketchDescriptor)
+    GraftFunctions.all.foreach(ext.injectFunction)
     // SURVEY §4.2(b): conf-gated ANN top-k rewrite (see AnnTopKRewrite)
     ext.injectOptimizerRule(_ => graft.plans.AnnTopKRewrite)
     // SURVEY §4.2(c): conf-gated bounded-heap top-k-per-group operator
@@ -280,15 +274,19 @@ object GraftFunctions {
       CosineArgmaxCell(args.head, args.last)
     })
 
-  /** Idempotent runtime registration into an existing session. */
-  def register(spark: SparkSession): Unit =
+  /** Every native function — the one list both registration paths
+    * walk. */
+  val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
     Seq(cosineSimDescriptor, rhpBucketDescriptor, zorderDescriptor,
       zorderPrefixDescriptor, zorderNormDescriptor,
       freqItemsDescriptor, quantileSketchDescriptor,
       pqEncodeDescriptor, pqAdcDescriptor, cellArgmaxDescriptor,
       trigramHitsDescriptor, trigramCountsDescriptor,
-      intL2SqDescriptor).foreach {
-      case (id, info, builder) =>
-        spark.sessionState.functionRegistry.registerFunction(id, info, builder)
+      intL2SqDescriptor)
+
+  /** Idempotent runtime registration into an existing session. */
+  def register(spark: SparkSession): Unit =
+    all.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder)
     }
 }

@@ -157,22 +157,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def functionExists(ident: Identifier): Boolean =
     ident.name() == GraftBucketFunction.name()
 
-  /** Sidecar first: once ALTER TABLE has run, the sidecar is the
-    * authoritative (evolved) schema and older objects' headers are
-    * just their own generation's layout; without a sidecar the first
-    * object speaks for the table. */
-  private def resolveSchema(ident: Identifier, dir: File): StructType = {
-    val sc = schemaSidecar(dir)
-    val fromSidecar =
-      if (sc.isFile)
-        Some(StructType.fromDDL(
-          new String(Files.readAllBytes(sc.toPath), StandardCharsets.UTF_8)))
-      else None
-    fromSidecar.orElse {
-      GraftObjectTable.listObjects(dir.getPath).headOption
-        .map(ObjectFormat.headerSchema)
-    }.getOrElse(throw new NoSuchTableException(ident))
-  }
+  /** The live schema (`GraftObjectTable.liveSchema`: sidecar first,
+    * else the first object's header). */
+  private def resolveSchema(ident: Identifier, dir: File): StructType =
+    GraftObjectTable.liveSchema(dir.getPath)
+      .getOrElse(throw new NoSuchTableException(ident))
 
   override def tableExists(ident: Identifier): Boolean =
     tableDir(ident).isDirectory

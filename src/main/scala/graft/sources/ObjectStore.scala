@@ -1723,38 +1723,46 @@ object ObjectStoreIngest {
   * objects. */
 object ObjectStoreMaintenance {
 
-  // ---- MoR crash-safety journal (round 7 — r6 verdict #6) ----------
+  // ---- crash-safety journal -----------------------------------------
   //
-  // The MoR ops mutate MULTIPLE files before their single commit line
-  // (per object: archive pre-image, DV sidecar; then for updates one
-  // replacement object; then `record`). Live reads are directory-
-  // listed, not log-gated, so a crash mid-op leaves torn state the
-  // comments used to merely argue about — worst case updateMoR's
-  // window between a DV write and the replacement-object write, where
-  // matched rows are hidden with their updates not yet on disk.
+  // Every mutation here changes MULTIPLE files before its single
+  // commit line, and live reads are directory-listed, not log-gated,
+  // so a crash mid-op would leave torn state visible. The journaled
+  // paths, all through [[journaled]]:
+  //  - the batch write commit (append and overwrite): staged→live
+  //    renames, plus for overwrite the archive moves and the sidecar;
+  //  - the UPDATE/MERGE replace commit: fresh tail renames, then
+  //    archive moves of the affected generation;
+  //  - copy-on-write DELETE (`deleteWhere`): archive moves and
+  //    archive-copy + in-place rewrites;
+  //  - TRUNCATE TABLE: archive moves;
+  //  - the merge-on-read ops (deleteMoR, updateMoR, updateMoRExpr):
+  //    per object an archive pre-image and a DV sidecar, then for the
+  //    updates one replacement object.
   //
   // The journal makes every window recoverable with pieces the ops
   // already produce: a `_txn_v<v>` intent marker (the version + the
-  // planned replacement-object names) written BEFORE the first
-  // mutation, deleted AFTER `record`. `record` is the commit point:
+  // planned new live names) written BEFORE the first mutation,
+  // deleted AFTER `record`. `record` is the commit point:
   //   marker present ∧ log has v      → crashed after commit: roll
   //     FORWARD (delete the marker; all artifacts are legitimate);
   //   marker present ∧ log lacks v    → crashed mid-op: roll BACK —
   //     every archive pre-image `X@v<v>` moves back over its live
   //     name (covering both the copy and the full-delete move), its
-  //     DV drops, planned-but-uncommitted replacement objects delete.
-  // Every MoR op runs recovery on entry (under the same table lock),
-  // so the torn window lasts at most until the next maintenance
-  // touch; CrashInjectionSpec drives every boundary via FaultPoints.
+  //     DV drops, planned-but-uncommitted new objects delete.
+  // Every journaled commit runs recovery on entry (under the same
+  // table lock), so the torn window lasts at most until the next
+  // write; CrashInjectionSpec and WriteCrashSpec drive the boundaries
+  // via FaultPoints.
 
   private def txnFile(dir: String, v: Int) = new File(dir, s"_txn_v$v")
 
-  private[sources] def beginTxn(dir: String, v: Int, adds: Seq[String]): Unit = {
-    // Atomic publish (r7 advice): the marker guards against crashes,
-    // so its OWN write must not be tearable — a direct Files.write
-    // interrupted mid-write leaves a truncated marker that recovery
-    // would then choke on forever. Stage to a temp name and move it
-    // into place (same-directory rename — atomic on POSIX).
+  private def beginTxn(dir: String, v: Int, adds: Seq[String]): Unit = {
+    // Atomic publish: the marker guards against crashes, so its OWN
+    // write must not be tearable — a direct Files.write interrupted
+    // mid-write leaves a truncated marker that recovery would then
+    // choke on forever. Stage to a temp name and move it into place
+    // (same-directory rename — atomic on POSIX).
     val tgt = txnFile(dir, v).toPath
     val tmp = new File(dir, s"._txn_v$v.tmp").toPath
     Files.write(tmp, (v.toString +: adds).mkString("\n")
@@ -1766,12 +1774,31 @@ object ObjectStoreMaintenance {
     }
   }
 
-  private[sources] def endTxn(dir: String, v: Int): Unit =
-    Files.deleteIfExists(txnFile(dir, v).toPath)
+  /** A planned commit: the new live object names it will add (the
+    * rollback list) and its body, which receives the commit's version
+    * and makes every file change plus the `record` line. */
+  private[sources] final case class Txn[T](adds: Seq[String])(val run: Int => T)
 
-  /** Recover a crashed MoR op, if any; returns a description of what
-    * was done. Called under the table lock by every MoR entry point;
-    * also reachable directly (tests, explicit repair). */
+  /** The one journaled commit: under the table lock, recover a torn
+    * predecessor, `plan` (which sees the recovered table), take the
+    * next version, publish the intent marker, run the body, clear the
+    * marker. A body that throws leaves its marker for the next
+    * writer's recovery to roll back. */
+  private[sources] def journaled[T](dir: String)(plan: => Txn[T]): T =
+    GraftVersions.withTableLock(dir) {
+      recoverTxn(dir)
+      val txn = plan
+      val v = GraftVersions.nextVersion(dir)
+      beginTxn(dir, v, txn.adds)
+      val out = txn.run(v)
+      Files.deleteIfExists(txnFile(dir, v).toPath)
+      out
+    }
+
+  /** Recover a crashed journaled commit, if any; returns a description
+    * of what was done. Called under the table lock on entry to every
+    * journaled commit; also reachable directly (tests, explicit
+    * repair). */
   def recoverTxn(dir: String): Option[String] = {
     val markers = Option(new File(dir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.matches("_txn_v\\d+"))
@@ -1883,144 +1910,34 @@ object ObjectStoreMaintenance {
     *
     * Returns (#objects fully removed, #objects DV'd, #rows deleted). */
   def deleteMoR(dir: String, filters: Array[Filter]): (Int, Int, Long) =
-    GraftVersions.withTableLock(dir) {
-      recoverTxn(dir)
-      val schema0 = {
-        val sidecar = new File(dir, "_schema.ddl")
-        if (sidecar.isFile)
-          StructType.fromDDL(new String(Files.readAllBytes(sidecar.toPath),
-            java.nio.charset.StandardCharsets.UTF_8))
-        else ObjectFormat.headerSchema(
-          GraftObjectTable.listObjects(dir).head)
+    journaled(dir) {
+      val schema = morSchema(dir, "deleteMoR", filters,
+        " (same contract as canDeleteWhere)")
+      Txn(Nil) { v =>
+        val w = morWalk(dir, v, schema, filters, "delete")(_ => ())
+        if (w.removed.nonEmpty || w.dvd.nonEmpty)
+          GraftVersions.record(dir, v, Nil, w.removed, w.dvd)
+        FaultPoints.hit("mor.delete.recorded")
+        (w.removed.size, w.dvd.size, w.rows)
       }
-      val schema = schema0
-      require(filters.forall(ObjectFormat.storageEvaluable(schema, _)),
-        "deleteMoR: every predicate must be storage-evaluable " +
-          "(same contract as canDeleteWhere)")
-      val v = GraftVersions.nextVersion(dir)
-      beginTxn(dir, v, Nil)
-      val removed = Seq.newBuilder[String]
-      val dvd = Seq.newBuilder[String]
-      var deletedRows = 0L
-      GraftObjectTable.listObjects(dir).foreach { obj =>
-        val footer = ObjectFormat.readFooter(obj)
-        val mayMatch = footer.rowCount > 0 &&
-          filters.forall(ObjectFormat.mightMatch(_, footer))
-        if (mayMatch) {
-          // fold an existing DV first: one DV generation per object
-          if (DeleteVectors.read(obj).isDefined) foldDeleteVector(obj, schema)
-          val reader = new GraftObjectReader(obj, schema, schema, filters)
-          val ords = Array.newBuilder[Int]
-          try {
-            while (reader.next()) ords += reader.currentOrdinal
-          } finally reader.close()
-          val hit = ords.result()
-          if (hit.nonEmpty) {
-            val objFile = new File(obj)
-            deletedRows += hit.length
-            val physical = ObjectFormat.readFooter(obj).rowCount
-            if (hit.length == physical) {
-              GraftVersions.archiveMove(dir, objFile, v)
-              FaultPoints.hit("mor.delete.moved")
-              removed += objFile.getName
-            } else {
-              GraftVersions.archiveCopy(dir, objFile, v)
-              FaultPoints.hit("mor.delete.archived")
-              DeleteVectors.write(obj, hit)
-              FaultPoints.hit("mor.delete.dv")
-              dvd += objFile.getName
-            }
-          }
-        }
-      }
-      val (del, dv) = (removed.result(), dvd.result())
-      if (del.nonEmpty || dv.nonEmpty)
-        GraftVersions.record(dir, v, Nil, del, dv)
-      FaultPoints.hit("mor.delete.recorded")
-      endTxn(dir, v)
-      (del.size, dv.size, deletedRows)
     }
 
   /** Merge-on-read UPDATE, the DV discipline extended with a write:
     * matched rows are DV-deleted in place (data objects untouched)
     * and re-appended WITH the constant assignments applied as one new
     * object — the Iceberg MoR-update shape (delete file + data file,
-    * one commit). Scope: SET col = constant only (the
-    * redaction/backfill maintenance form); computed updates go
-    * through SQL UPDATE's copy-on-write row-level path.
+    * one commit). Scope: SET col = constant (the redaction/backfill
+    * maintenance form); computed assignments are [[updateMoRExpr]],
+    * which shares this body.
     *
     * Returns (#rows updated, the new object's name, or null when no
     * row matched). */
   def updateMoR(dir: String, filters: Array[Filter],
       set: Map[String, Any]): (Long, String) =
-    GraftVersions.withTableLock(dir) {
-      recoverTxn(dir)
-      val schema = {
-        val sidecar = new File(dir, "_schema.ddl")
-        if (sidecar.isFile)
-          StructType.fromDDL(new String(Files.readAllBytes(sidecar.toPath),
-            java.nio.charset.StandardCharsets.UTF_8))
-        else ObjectFormat.headerSchema(
-          GraftObjectTable.listObjects(dir).head)
-      }
-      require(filters.forall(ObjectFormat.storageEvaluable(schema, _)),
-        "updateMoR: every predicate must be storage-evaluable")
-      val setIdx = set.map { case (c, v) =>
-        val i = schema.fieldIndex(c)
-        i -> CatalystTypeConverters.convertToCatalyst(v)
-      }
-      val v = GraftVersions.nextVersion(dir)
-      val live = GraftObjectTable.listObjects(dir)
-      val table = new File(dir).getName
-      val nextSeq = live.map(p =>
-        new File(p).getName.substring(table.length + 1).toInt).max + 1
-      val newName = s"$table.$nextSeq"
-      beginTxn(dir, v, Seq(newName))
-      val enc = new ObjectFormat.ObjectEncoder(schema)
-      val dvd = Seq.newBuilder[String]
-      var updated = 0L
-      live.foreach { obj =>
-        val footer = ObjectFormat.readFooter(obj)
-        val mayMatch = footer.rowCount > 0 &&
-          filters.forall(ObjectFormat.mightMatch(_, footer))
-        if (mayMatch) {
-          if (DeleteVectors.read(obj).isDefined) foldDeleteVector(obj, schema)
-          val reader = new GraftObjectReader(obj, schema, schema, filters)
-          val ords = Array.newBuilder[Int]
-          try {
-            while (reader.next()) {
-              ords += reader.currentOrdinal
-              val row = reader.get()
-              val out = new Array[Any](schema.length)
-              var i = 0
-              while (i < schema.length) {
-                out(i) = setIdx.getOrElse(i,
-                  row.get(i, schema(i).dataType))
-                i += 1
-              }
-              enc.addInternal(new GenericInternalRow(out))
-              updated += 1
-            }
-          } finally reader.close()
-          val hit = ords.result()
-          if (hit.nonEmpty) {
-            val objFile = new File(obj)
-            GraftVersions.archiveCopy(dir, objFile, v)
-            FaultPoints.hit("mor.update.archived")
-            DeleteVectors.write(obj, hit)
-            FaultPoints.hit("mor.update.dv")
-            dvd += objFile.getName
-          }
-        }
-      }
-      if (updated == 0) { endTxn(dir, v); (0L, null) }
-      else {
-        enc.finish(new File(dir, newName).getPath)
-        FaultPoints.hit("mor.update.objwritten")
-        GraftVersions.record(dir, v, Seq(newName), Nil, dvd.result())
-        FaultPoints.hit("mor.update.recorded")
-        endTxn(dir, v)
-        (updated, newName)
+    morUpdate(dir, filters, "updateMoR") { schema =>
+      set.map { case (c, v) =>
+        val x = CatalystTypeConverters.convertToCatalyst(v)
+        schema.fieldIndex(c) -> ((_: InternalRow) => x)
       }
     }
 
@@ -2038,23 +1955,12 @@ object ObjectStoreMaintenance {
     * Returns (#rows updated, the new object's name or null). */
   def updateMoRExpr(spark: SparkSession, dir: String,
       filters: Array[Filter], set: Map[String, String]): (Long, String) =
-    GraftVersions.withTableLock(dir) {
-      recoverTxn(dir)
-      import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Cast, Expression}
+    morUpdate(dir, filters, "updateMoRExpr") { schema =>
+      import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Cast}
       import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
-      val schema = {
-        val sidecar = new File(dir, "_schema.ddl")
-        if (sidecar.isFile)
-          StructType.fromDDL(new String(Files.readAllBytes(sidecar.toPath),
-            java.nio.charset.StandardCharsets.UTF_8))
-        else ObjectFormat.headerSchema(
-          GraftObjectTable.listObjects(dir).head)
-      }
-      require(filters.forall(ObjectFormat.storageEvaluable(schema, _)),
-        "updateMoRExpr: every predicate must be storage-evaluable")
       val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils
         .toAttributes(schema)
-      val setIdx: Map[Int, Expression] = set.map { case (c, exprSql) =>
+      set.map { case (c, exprSql) =>
         val i = schema.fieldIndex(c)
         val parsed = spark.sessionState.sqlParser.parseExpression(exprSql)
         val analyzed = spark.sessionState.analyzer.execute(
@@ -2066,64 +1972,108 @@ object ObjectStoreMaintenance {
           if (analyzed.dataType == schema(i).dataType) analyzed
           else Cast(analyzed, schema(i).dataType,
             Some(spark.sessionState.conf.sessionLocalTimeZone))
-        i -> BindReferences.bindReference(coerced, attrs)
+        val bound = BindReferences.bindReference(coerced, attrs)
+        i -> ((row: InternalRow) => bound.eval(row))
       }
-      val v = GraftVersions.nextVersion(dir)
-      val live = GraftObjectTable.listObjects(dir)
-      val table = new File(dir).getName
-      val nextSeq = live.map(p =>
-        new File(p).getName.substring(table.length + 1).toInt).max + 1
-      val newName = s"$table.$nextSeq"
-      beginTxn(dir, v, Seq(newName))
-      val enc = new ObjectFormat.ObjectEncoder(schema)
-      val dvd = Seq.newBuilder[String]
-      var updated = 0L
-      live.foreach { obj =>
-        val footer = ObjectFormat.readFooter(obj)
-        val mayMatch = footer.rowCount > 0 &&
-          filters.forall(ObjectFormat.mightMatch(_, footer))
-        if (mayMatch) {
-          if (DeleteVectors.read(obj).isDefined) foldDeleteVector(obj, schema)
-          val reader = new GraftObjectReader(obj, schema, schema, filters)
-          val ords = Array.newBuilder[Int]
-          try {
-            while (reader.next()) {
-              ords += reader.currentOrdinal
-              val row = reader.get()
-              val out = new Array[Any](schema.length)
-              var i = 0
-              while (i < schema.length) {
-                out(i) = setIdx.get(i) match {
-                  case Some(e) => e.eval(row)
-                  case None => row.get(i, schema(i).dataType)
-                }
-                i += 1
-              }
-              enc.addInternal(new GenericInternalRow(out))
-              updated += 1
+    }
+
+  /** The table schema a MoR op folds and reads with, under the same
+    * storage-evaluable contract for its predicates. */
+  private def morSchema(dir: String, op: String, filters: Array[Filter],
+      contract: String = ""): StructType = {
+    val schema = GraftObjectTable.liveSchema(dir).getOrElse(
+      throw new IllegalArgumentException(
+        s"$op: table $dir has no objects and no schema sidecar"))
+    require(filters.forall(ObjectFormat.storageEvaluable(schema, _)),
+      s"$op: every predicate must be storage-evaluable$contract")
+    schema
+  }
+
+  /** Both MoR updates: `assign` maps a column index to the function
+    * computing its new value from the matched row's pre-image (a
+    * constant is a constant function). Matched rows are DV'd in place
+    * and re-appended, assigned, as the one new object. */
+  private def morUpdate(dir: String, filters: Array[Filter], op: String)(
+      assign: StructType => Map[Int, InternalRow => Any]): (Long, String) =
+    journaled(dir) {
+      val schema = morSchema(dir, op, filters)
+      val setIdx = assign(schema)
+      val newName = s"${new File(dir).getName}.${GraftVersions.nextSeq(dir)}"
+      Txn(Seq(newName)) { v =>
+        val enc = new ObjectFormat.ObjectEncoder(schema)
+        val w = morWalk(dir, v, schema, filters, "update") { row =>
+          val out = new Array[Any](schema.length)
+          var i = 0
+          while (i < schema.length) {
+            out(i) = setIdx.get(i) match {
+              case Some(f) => f(row)
+              case None => row.get(i, schema(i).dataType)
             }
-          } finally reader.close()
-          val hit = ords.result()
-          if (hit.nonEmpty) {
-            val objFile = new File(obj)
+            i += 1
+          }
+          enc.addInternal(new GenericInternalRow(out))
+        }
+        if (w.rows == 0) (0L, null)
+        else {
+          enc.finish(new File(dir, newName).getPath)
+          FaultPoints.hit("mor.update.objwritten")
+          GraftVersions.record(dir, v, Seq(newName), Nil, w.dvd)
+          FaultPoints.hit("mor.update.recorded")
+          (w.rows, newName)
+        }
+      }
+    }
+
+  /** What a MoR walk did: objects moved whole to the archive, objects
+    * given a DV, rows matched. */
+  private final case class MorWalk(removed: Seq[String], dvd: Seq[String],
+      rows: Long)
+
+  /** The per-object step every MoR op shares, over the candidate
+    * objects of `filters`: fold an existing DV (one DV generation per
+    * object), read the matching rows' ordinals (each matched row also
+    * goes to `onRow`), then archive a copy of the pre-image and write
+    * the DV. A `delete` that matches every row of an object moves the
+    * object to the archive instead. `kind` names the fault points. */
+  private def morWalk(dir: String, v: Int, schema: StructType,
+      filters: Array[Filter], kind: String)(
+      onRow: InternalRow => Unit): MorWalk = {
+    val removed = Seq.newBuilder[String]
+    val dvd = Seq.newBuilder[String]
+    var rows = 0L
+    GraftObjectTable.candidates(GraftObjectTable.listObjects(dir), filters)
+      .foreach { case (obj, footer) =>
+        val folded = DeleteVectors.read(obj).isDefined
+        if (folded) foldDeleteVector(obj, schema)
+        val reader = new GraftObjectReader(obj, schema, schema, filters)
+        val ords = Array.newBuilder[Int]
+        try {
+          while (reader.next()) {
+            ords += reader.currentOrdinal
+            onRow(reader.get())
+          }
+        } finally reader.close()
+        val hit = ords.result()
+        if (hit.nonEmpty) {
+          val objFile = new File(obj)
+          rows += hit.length
+          def physical =
+            if (folded) ObjectFormat.readFooter(obj).rowCount else footer.rowCount
+          if (kind == "delete" && hit.length == physical) {
+            GraftVersions.archiveMove(dir, objFile, v)
+            FaultPoints.hit("mor.delete.moved")
+            removed += objFile.getName
+          } else {
             GraftVersions.archiveCopy(dir, objFile, v)
-            FaultPoints.hit("mor.update.archived")
+            FaultPoints.hit(s"mor.$kind.archived")
             DeleteVectors.write(obj, hit)
-            FaultPoints.hit("mor.update.dv")
+            FaultPoints.hit(s"mor.$kind.dv")
             dvd += objFile.getName
           }
         }
       }
-      if (updated == 0) { endTxn(dir, v); (0L, null) }
-      else {
-        enc.finish(new File(dir, newName).getPath)
-        FaultPoints.hit("mor.update.objwritten")
-        GraftVersions.record(dir, v, Seq(newName), Nil, dvd.result())
-        FaultPoints.hit("mor.update.recorded")
-        endTxn(dir, v)
-        (updated, newName)
-      }
-    }
+    MorWalk(removed.result(), dvd.result(), rows)
+  }
 
   /** Rewrite a live object to its logical state (DV applied) and drop
     * the DV — a LOGICAL NO-OP (no version): the live file always
@@ -2248,19 +2198,8 @@ class GraftObjectSource extends TableProvider with DataSourceRegister {
   private def inferDataSchema(options: CaseInsensitiveStringMap): StructType = {
     val dir = pathOf(options)
     val (base, ref) = GraftVersions.split(dir)
-    // live sidecar first: authoritative after ALTER TABLE (older
-    // objects are earlier generations, name-mapped at read)
-    def liveSchema: StructType = {
-      val sidecar = new File(base, "_schema.ddl")
-      if (sidecar.isFile)
-        StructType.fromDDL(new String(Files.readAllBytes(sidecar.toPath),
-          java.nio.charset.StandardCharsets.UTF_8))
-      else {
-        val first = GraftObjectTable.listObjects(base).headOption
-          .getOrElse(throw new IllegalArgumentException(s"$base: no objects"))
-        ObjectFormat.headerSchema(first)
-      }
-    }
+    def liveSchema: StructType = GraftObjectTable.liveSchema(base)
+      .getOrElse(throw new IllegalArgumentException(s"$base: no objects"))
     if (ref.isDefined)
       // a versioned view speaks with its own generation's schema when
       // it has objects; an empty view (e.g. a no-change delta window)
@@ -2282,15 +2221,6 @@ class GraftObjectSource extends TableProvider with DataSourceRegister {
 }
 
 object GraftObjectTable {
-  /** `<table>.<seq>` files, seq-sorted — the object naming contract.
-    * Sidecar files (`_staged_*`, `_epoch_*`, `_log`, `_lock`,
-    * `_vacuum`, the `_archive/` dir) never match. A `dir@v<k>` path
-    * is a SNAPSHOT: the listing is version k's object set resolved
-    * from the table's version log (GraftVersions), with superseded
-    * content served from the archive — every scan path funnels
-    * through this one listing, so the full read surface (pruning,
-    * agg/limit pushdown, clustered reads) works on old versions
-    * unchanged. */
   /** Objects METADATA table — the Iceberg `table$files` / Delta
     * `DESCRIBE DETAIL` analog: one row per live object with its row
     * count, byte size, and per-column min/max/null-count rendered from
@@ -2328,6 +2258,37 @@ object GraftObjectTable {
     spark.createDataFrame(rows, schema)
   }
 
+  /** The table's schema now: the `_schema.ddl` sidecar when present
+    * (authoritative after ALTER TABLE; older objects are earlier
+    * generations, name-mapped at read), else the first live object's
+    * header; None when the directory has neither. */
+  def liveSchema(dir: String): Option[StructType] = {
+    val sidecar = new File(dir, "_schema.ddl")
+    if (sidecar.isFile)
+      Some(StructType.fromDDL(new String(Files.readAllBytes(sidecar.toPath),
+        java.nio.charset.StandardCharsets.UTF_8)))
+    else listObjects(dir).headOption.map(ObjectFormat.headerSchema)
+  }
+
+  /** The objects of `objs` a conjunction of `filters` can touch, with
+    * their footers — the reference's object-local index: an object is
+    * a candidate unless it is empty or its footer stats rule a match
+    * out. Reads each footer once, in listing order. */
+  def candidates(objs: Seq[String],
+      filters: Array[Filter]): Seq[(String, ObjectFormat.Footer)] =
+    objs.map(p => p -> ObjectFormat.readFooter(p)).filter { case (_, f) =>
+      f.rowCount > 0 && filters.forall(ObjectFormat.mightMatch(_, f))
+    }
+
+  /** `<table>.<seq>` files, seq-sorted — the object naming contract.
+    * Sidecar files (`_staged_*`, `_epoch_*`, `_log`, `_lock`,
+    * `_vacuum`, the `_archive/` dir) never match. A `dir@v<k>` path
+    * is a SNAPSHOT: the listing is version k's object set resolved
+    * from the table's version log (GraftVersions), with superseded
+    * content served from the archive — every scan path funnels
+    * through this one listing, so the full read surface (pruning,
+    * agg/limit pushdown, clustered reads) works on old versions
+    * unchanged. */
   def listObjects(dir: String): Seq[String] = GraftVersions.split(dir) match {
     case (base, Some(ref)) => GraftVersions.resolve(base, ref)
     case (d0, None) =>
@@ -2404,23 +2365,25 @@ class GraftObjectTable(tableSchema: StructType, path: String,
     * version (the pre-truncate state stays time-travelable and
     * VACUUM-able), and a removals-only commit line lands in the log.
     * The schema sidecar is written first so resolution survives the
-    * last object leaving. */
+    * last object leaving. Journaled: a crash mid-way rolls back to the
+    * pre-truncate table on the next write. */
   override def truncateTable(): Boolean = {
     requireWritable("TRUNCATE TABLE")
-    GraftVersions.withTableLock(path) {
-      val dir = new File(path)
-      val v = GraftVersions.nextVersion(path)
+    ObjectStoreMaintenance.journaled(path) {
       val existing = GraftObjectTable.listObjects(path)
-      val sidecar = new File(dir, "_schema.ddl")
-      if (!sidecar.isFile)
-        Files.write(sidecar.toPath, tableSchema.toDDL.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-      existing.foreach { p =>
-        ObjectStoreMaintenance.foldBeforeArchive(p)
-        GraftVersions.archiveMove(path, new File(p), v)
+      ObjectStoreMaintenance.Txn(Nil) { v =>
+        val sidecar = new File(path, "_schema.ddl")
+        if (!sidecar.isFile)
+          Files.write(sidecar.toPath, tableSchema.toDDL.getBytes(
+            java.nio.charset.StandardCharsets.UTF_8))
+        existing.zipWithIndex.foreach { case (p, i) =>
+          ObjectStoreMaintenance.foldBeforeArchive(p)
+          GraftVersions.archiveMove(path, new File(p), v)
+          if (i == 0) FaultPoints.hit("truncate.commit.archived")
+        }
+        GraftVersions.record(path, v, Nil,
+          existing.map(p => new File(p).getName))
       }
-      GraftVersions.record(path, v, Nil,
-        existing.map(p => new File(p).getName))
     }
     true
   }
@@ -2457,66 +2420,81 @@ class GraftObjectTable(tableSchema: StructType, path: String,
     * `p` is NULL survive (the reader's 3VL conjunction, negated).
     * Accepted predicates are exactly the storage-evaluable set — when
     * any conjunct falls outside it, `canDeleteWhere` refuses and Spark
-    * reports the DELETE unsupported rather than half-applying it. */
+    * reports the DELETE unsupported rather than half-applying it.
+    *
+    * Crash behaviour: the delete is one journaled commit. Every removed
+    * object moves to the archive and every rewritten one leaves an
+    * archive copy of its pre-image under the commit's version, so a
+    * crash before the log line lands is rolled back — every pre-image
+    * restored — by the next write's recovery; a crash after it rolls
+    * forward. */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     filters.forall(ObjectFormat.storageEvaluable(tableSchema, _))
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     requireWritable("DELETE")
-    GraftVersions.withTableLock(path) {
-      val v = GraftVersions.nextVersion(path)
-      val removed = Seq.newBuilder[String]
-      val rewritten = Seq.newBuilder[String]
-      GraftObjectTable.listObjects(path).foreach { obj =>
-        // Fold a pending DV before the copy-on-write pass touches the
-        // object: raw-footer mightMatch is conservative (raw stats ⊇
-        // logical content), and folding first means the archived
-        // pre-image below is the logical state — not raw bytes that
-        // would resurrect MoR-deleted rows under time travel.
-        var footer = ObjectFormat.readFooter(obj)
-        if (footer.rowCount > 0 &&
-            filters.forall(ObjectFormat.mightMatch(_, footer)) &&
-            DeleteVectors.hasValid(obj)) {
-          ObjectStoreMaintenance.foldBeforeArchive(obj)
-          footer = ObjectFormat.readFooter(obj)
+    ObjectStoreMaintenance.journaled(path) {
+      ObjectStoreMaintenance.Txn(Nil) { v =>
+        val removed = Seq.newBuilder[String]
+        val rewritten = Seq.newBuilder[String]
+        var changes = 0
+        def changed(): Unit = {
+          changes += 1
+          if (changes == 1) FaultPoints.hit("delete.commit.changed")
         }
-        val mayMatch = footer.rowCount > 0 &&
-          filters.forall(ObjectFormat.mightMatch(_, footer))
-        if (mayMatch) {
-          val reader = new GraftObjectReader(obj, tableSchema, tableSchema,
-            filters, negated = true)
-          val enc = new ObjectFormat.ObjectEncoder(tableSchema)
-          var survivors = 0
-          try {
-            while (reader.next()) { enc.addInternal(reader.get()); survivors += 1 }
-          } finally reader.close()
-          val objFile = new File(obj)
-          if (survivors == 0) {
-            GraftVersions.archiveMove(path, objFile, v)
-            removed += objFile.getName
-          } else if (survivors < footer.rowCount) {
-            // in-place rewrite keeps the name: archive the pre-image
-            // FIRST (a copy — the live file stays valid until the
-            // atomic replace), then swap content under the same seq
-            GraftVersions.archiveCopy(path, objFile, v)
-            val staged = new File(objFile.getParentFile,
-              s"_staged_delete_${objFile.getName}")
-            enc.finish(staged.getPath)
-            Files.move(staged.toPath, objFile.toPath,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            rewritten += objFile.getName
-          } // survivors == rowCount: stats conservative, nothing matched
-        }
+        GraftObjectTable.candidates(GraftObjectTable.listObjects(path), filters)
+          .foreach { case (obj, footer0) =>
+            // Fold a pending DV before the copy-on-write pass touches
+            // the object: raw-footer mightMatch is conservative (raw
+            // stats ⊇ logical content), and folding first means the
+            // archived pre-image below is the logical state — not raw
+            // bytes that would resurrect MoR-deleted rows under time
+            // travel. The folded object is pruned again on its new
+            // footer.
+            val cand =
+              if (!DeleteVectors.hasValid(obj)) Some(footer0)
+              else {
+                ObjectStoreMaintenance.foldBeforeArchive(obj)
+                GraftObjectTable.candidates(Seq(obj), filters).headOption.map(_._2)
+              }
+            cand.foreach { footer =>
+              val reader = new GraftObjectReader(obj, tableSchema, tableSchema,
+                filters, negated = true)
+              val enc = new ObjectFormat.ObjectEncoder(tableSchema)
+              var survivors = 0
+              try {
+                while (reader.next()) { enc.addInternal(reader.get()); survivors += 1 }
+              } finally reader.close()
+              val objFile = new File(obj)
+              if (survivors == 0) {
+                GraftVersions.archiveMove(path, objFile, v)
+                removed += objFile.getName
+                changed()
+              } else if (survivors < footer.rowCount) {
+                // in-place rewrite keeps the name: archive the pre-image
+                // FIRST (a copy — the live file stays valid until the
+                // atomic replace), then swap content under the same seq
+                GraftVersions.archiveCopy(path, objFile, v)
+                val staged = new File(objFile.getParentFile,
+                  s"_staged_delete_${objFile.getName}")
+                enc.finish(staged.getPath)
+                Files.move(staged.toPath, objFile.toPath,
+                  java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+                  java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+                rewritten += objFile.getName
+                changed()
+              } // survivors == rowCount: stats conservative, nothing matched
+            }
+          }
+        val (del, rw) = (removed.result(), rewritten.result())
+        if (del.nonEmpty || rw.nonEmpty)
+          GraftVersions.record(path, v, Nil, del, rw)
+        // a DELETE/TRUNCATE that empties the table must not strand it
+        // schema-less: persist the sidecar the catalog falls back to
+        if (GraftObjectTable.listObjects(path).isEmpty)
+          Files.write(Paths.get(path, "_schema.ddl"),
+            tableSchema.toDDL.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
-      val (del, rw) = (removed.result(), rewritten.result())
-      if (del.nonEmpty || rw.nonEmpty)
-        GraftVersions.record(path, v, Nil, del, rw)
-      // a DELETE/TRUNCATE that empties the table must not strand it
-      // schema-less: persist the sidecar the catalog falls back to
-      if (GraftObjectTable.listObjects(path).isEmpty)
-        Files.write(Paths.get(path, "_schema.ddl"),
-          tableSchema.toDDL.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
   }
 
@@ -2555,10 +2533,7 @@ class GraftObjectTable(tableSchema: StructType, path: String,
   * a delta-based encoding would be the SupportsDelta extension).
   *
   * Commit is staged-rename like every other write here, single-writer
-  * by the table contract; a crash between the rename loop and the
-  * unlink loop can briefly expose old+new generations (same
-  * non-transactional caveat as the batch append base — a manifest/CAS
-  * would close it on a real object store). */
+  * by the table contract, and journaled (see GraftReplaceDataWrite). */
 class GraftRowLevelOperation(schema: StructType, path: String,
     cmd: RowLevelOperation.Command,
     checkSqls: Map[String, String] = Map.empty) extends RowLevelOperation {
@@ -2629,11 +2604,8 @@ class GraftGroupScan(schema: StructType, pruning: Array[Filter],
       s"GroupPruning: [${pruning.mkString(", ")}] (copy-on-write groups)"
 
   private lazy val statsSelected: Seq[String] =
-    GraftObjectTable.listObjects(path).map { obj =>
-      obj -> ObjectFormat.readFooter(obj)
-    }.filter { case (_, footer) =>
-      footer.rowCount > 0 && pruning.forall(ObjectFormat.mightMatch(_, footer))
-    }.map(_._1)
+    GraftObjectTable.candidates(GraftObjectTable.listObjects(path), pruning)
+      .map(_._1)
 
   /** Runtime GROUP filtering (Spark's
     * RowLevelOperationRuntimeGroupFiltering): before the copy-on-write
@@ -2672,9 +2644,12 @@ class GraftGroupScan(schema: StructType, pruning: Array[Filter],
 
 /** ReplaceData commit: stage the rewritten content (one object per
   * write task, same encoder as every other write path), then rename
-  * staged objects onto FRESH tail sequence numbers and unlink the
+  * staged objects onto FRESH tail sequence numbers and archive the
   * affected generation. Sequence numbers never recycle, so a reader
-  * listing mid-commit sees well-formed objects either way. */
+  * listing mid-commit sees well-formed objects either way. The commit
+  * is journaled with the fresh tail names as its planned adds: a crash
+  * between the renames and the log line is rolled back (new objects
+  * deleted, archived ones restored) by the next write's recovery. */
 class GraftReplaceDataWrite(writeSchema: StructType, path: String,
     op: GraftRowLevelOperation,
     checks: Seq[GraftCheck] = Nil) extends BatchWrite {
@@ -2686,10 +2661,8 @@ class GraftReplaceDataWrite(writeSchema: StructType, path: String,
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    GraftVersions.withTableLock(path) {
-      val dir = new File(path)
-      val table = dir.getName
-      val v = GraftVersions.nextVersion(path)
+    ObjectStoreMaintenance.journaled(path) {
+      val table = new File(path).getName
       val affected = op.affectedObjects.toSet
       val base = GraftVersions.nextSeq(path)
       // An empty write partition (e.g. every group pruned, or a skewed
@@ -2701,21 +2674,24 @@ class GraftReplaceDataWrite(writeSchema: StructType, path: String,
         case GraftStagedObject(staged, _) =>
           new File(staged).delete(); null
       }.filter(_ != null)
-      val added = nonEmpty.zipWithIndex.map { case (staged, i) =>
-        val dst = new File(dir, s"$table.${base + i}")
-        if (!new File(staged).renameTo(dst))
-          throw new java.io.IOException(s"rename $staged -> $dst failed")
-        dst.getName
+      val planned = nonEmpty.indices.map(i => s"$table.${base + i}")
+      ObjectStoreMaintenance.Txn(planned) { v =>
+        nonEmpty.zip(planned).zipWithIndex.foreach { case ((staged, name), i) =>
+          val dst = new File(path, name)
+          if (!new File(staged).renameTo(dst))
+            throw new java.io.IOException(s"rename $staged -> $dst failed")
+          if (i == 0) FaultPoints.hit("replace.commit.renamed")
+        }
+        affected.foreach { obj =>
+          ObjectStoreMaintenance.foldBeforeArchive(obj)
+          GraftVersions.archiveMove(path, new File(obj), v)
+        }
+        GraftVersions.record(path, v, planned,
+          affected.toSeq.map(new File(_).getName).sorted)
+        if (GraftObjectTable.listObjects(path).isEmpty)
+          Files.write(Paths.get(path, "_schema.ddl"),
+            writeSchema.toDDL.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       }
-      affected.foreach { obj =>
-        ObjectStoreMaintenance.foldBeforeArchive(obj)
-        GraftVersions.archiveMove(path, new File(obj), v)
-      }
-      GraftVersions.record(path, v, added.toSeq,
-        affected.toSeq.map(new File(_).getName).sorted)
-      if (GraftObjectTable.listObjects(path).isEmpty)
-        Files.write(Paths.get(path, "_schema.ddl"),
-          writeSchema.toDDL.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -2781,25 +2757,15 @@ class GraftBatchWrite(writeSchema: StructType, path: String, truncate: Boolean,
     extends BatchWrite {
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     new File(path).mkdirs()
-    // APPEND must match the table's CURRENT schema — the sidecar when
-    // present (authoritative after ALTER TABLE; older objects are
-    // earlier generations, name-mapped at read), else the first
-    // object's header.
+    // APPEND must match the table's CURRENT schema
     if (!truncate) {
-      val sidecar = new File(path, "_schema.ddl")
-      val current =
-        if (sidecar.isFile)
-          Some(new String(Files.readAllBytes(sidecar.toPath),
-            java.nio.charset.StandardCharsets.UTF_8))
-        else GraftObjectTable.listObjects(path).headOption
-          .map(ObjectFormat.headerSchema(_).toDDL)
       // names + types must agree; nullability may differ (INSERT VALUES
       // plans arrive NOT NULL, the store treats every column nullable)
       def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
-      current.foreach { ddl =>
-        require(shape(StructType.fromDDL(ddl)) == shape(writeSchema),
+      GraftObjectTable.liveSchema(path).foreach { current =>
+        require(shape(current) == shape(writeSchema),
           s"graft-objects append schema mismatch: table has " +
-            s"[$ddl], write has [${writeSchema.toDDL}]")
+            s"[${current.toDDL}], write has [${writeSchema.toDDL}]")
       }
     }
     new GraftWriterFactory(writeSchema, path, "b", clusterBy,
@@ -2848,26 +2814,14 @@ class GraftBatchWrite(writeSchema: StructType, path: String, truncate: Boolean,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     if (optimistic) commitAppendOptimistic(messages)
-    else GraftVersions.withTableLock(path) {
-      // Write-path crash safety (r7 verdict #4): this critical section
-      // mutates multiple files before its single `record` commit line
-      // (truncate: N archive moves + a sidecar refresh; both modes: N
-      // staged→live renames), and live reads are directory-listed — a
-      // writer dying mid-section used to leave renamed-but-unrecorded
-      // objects VISIBLE. The MoR journal covers this path now: recover
-      // any predecessor's torn commit on entry (same lock), journal an
-      // intent marker with the planned live names before the first
-      // mutation, delete it after `record`. Crash below the marker →
-      // next writer rolls back (restores `@v` pre-images incl. the
-      // schema sidecar, deletes unrecorded adds); crash after `record`
-      // → rolls forward. Orphaned `_staged_*` task files are NOT
+    else ObjectStoreMaintenance.journaled(path) {
+      // The journal's planned adds are the live names the staged
+      // objects will take. Orphaned `_staged_*` task files are NOT
       // touched by recovery — a concurrent write's executors stage
       // outside this lock, so they're vacuum's job, and listing
       // already hides them from readers.
-      ObjectStoreMaintenance.recoverTxn(path)
       val dir = new File(path)
       val table = dir.getName
-      val v = GraftVersions.nextVersion(path)
       val existing = GraftObjectTable.listObjects(path)
       val staged = messages.flatMap {
         case GraftStagedObject(s, _) => Seq(s)
@@ -2878,42 +2832,42 @@ class GraftBatchWrite(writeSchema: StructType, path: String, truncate: Boolean,
       // gaps in the sequence
       val base = if (truncate) 0 else GraftVersions.nextSeq(path)
       val planned = staged.indices.map(i => s"$table.${base + i}")
-      ObjectStoreMaintenance.beginTxn(path, v, planned)
-      FaultPoints.hit("write.commit.begun")
-      if (truncate) {
-        val sidecar = new File(dir, "_schema.ddl")
-        val hadSidecar = sidecar.isFile
-        if (hadSidecar) {
-          // snapshot the sidecar as an @v pre-image first: rollback
-          // then restores the OLD schema alongside the OLD objects
-          // (log-driven snapshot reads never reference it — only
-          // recovery resolves `_archive/*@v$v` by suffix)
-          GraftVersions.archiveMove(path, sidecar, v)
+      ObjectStoreMaintenance.Txn(planned) { v =>
+        FaultPoints.hit("write.commit.begun")
+        if (truncate) {
+          val sidecar = new File(dir, "_schema.ddl")
+          val hadSidecar = sidecar.isFile
+          if (hadSidecar) {
+            // snapshot the sidecar as an @v pre-image first: rollback
+            // then restores the OLD schema alongside the OLD objects
+            // (log-driven snapshot reads never reference it — only
+            // recovery resolves `_archive/*@v$v` by suffix)
+            GraftVersions.archiveMove(path, sidecar, v)
+          }
+          // the old generation stays materializable: archive, not
+          // delete (folding first so a DV'd object archives its
+          // logical state)
+          existing.foreach { p =>
+            ObjectStoreMaintenance.foldBeforeArchive(p)
+            GraftVersions.archiveMove(path, new File(p), v)
+          }
+          FaultPoints.hit("write.commit.archived")
+          // an overwrite defines the schema anew; refresh any sidecar
+          // so sidecar-first resolution can't serve a stale generation
+          if (hadSidecar)
+            Files.write(sidecar.toPath, writeSchema.toDDL.getBytes(
+              java.nio.charset.StandardCharsets.UTF_8))
         }
-        // the old generation stays materializable: archive, not delete
-        // (folding first so a DV'd object archives its logical state)
-        existing.foreach { p =>
-          ObjectStoreMaintenance.foldBeforeArchive(p)
-          GraftVersions.archiveMove(path, new File(p), v)
+        staged.zipWithIndex.foreach { case (s, i) =>
+          val dst = new File(dir, planned(i))
+          if (!new File(s).renameTo(dst))
+            throw new java.io.IOException(s"rename $s -> $dst failed")
+          if (i == 0) FaultPoints.hit("write.commit.renamed")
         }
-        FaultPoints.hit("write.commit.archived")
-        // an overwrite defines the schema anew; refresh any sidecar so
-        // sidecar-first resolution can't serve a stale generation
-        if (hadSidecar)
-          Files.write(sidecar.toPath, writeSchema.toDDL.getBytes(
-            java.nio.charset.StandardCharsets.UTF_8))
+        GraftVersions.record(path, v, planned,
+          if (truncate) existing.map(p => new File(p).getName) else Nil)
+        FaultPoints.hit("write.commit.recorded")
       }
-      val added = staged.zipWithIndex.map { case (s, i) =>
-        val dst = new File(dir, planned(i))
-        if (!new File(s).renameTo(dst))
-          throw new java.io.IOException(s"rename $s -> $dst failed")
-        if (i == 0) FaultPoints.hit("write.commit.renamed")
-        dst.getName
-      }
-      GraftVersions.record(path, v, added.toSeq,
-        if (truncate) existing.map(p => new File(p).getName) else Nil)
-      FaultPoints.hit("write.commit.recorded")
-      ObjectStoreMaintenance.endTxn(path, v)
     }
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     messages.foreach {
@@ -3264,11 +3218,8 @@ class GraftScanBuilder(fullSchema: StructType, path: String,
     if (groups.nonEmpty) {
       val cOpt = Option(options.get("clusteredBy")).filter(groups.contains)
       if (cOpt.isDefined) {
-        val sel = GraftObjectTable.listObjects(path)
-          .map(p => p -> ObjectFormat.readFooter(p))
-          .filter { case (_, f) =>
-            f.rowCount > 0 && accepted.forall(ObjectFormat.mightMatch(_, f))
-          }
+        val sel = GraftObjectTable.candidates(
+          GraftObjectTable.listObjects(path), accepted)
         // same refusal for both layout modes: identity (one key per
         // object) and width-bucketed (r4) — a bucketed GROUP BY on the
         // cluster key also rides the KeyGroupedPartitioning
@@ -3384,14 +3335,31 @@ final case class PushedTopN(col: String, descending: Boolean,
 /** Footer-answerable aggregate, tagged with the column's Spark type so
   * the partial row surfaces values in the column's own width (footer
   * longs narrow back to int/date, doubles to float — both exact). */
-sealed trait FooterAgg
+sealed trait FooterAgg {
+  /** The partial-row column this aggregate fills. */
+  def field: StructField = this match {
+    case FooterAgg.MinOf(c, dt) => StructField(s"min($c)", dt)
+    case FooterAgg.MaxOf(c, dt) => StructField(s"max($c)", dt)
+    case FooterAgg.CountStar => StructField("count(*)", LongType, nullable = false)
+    case FooterAgg.CountOf(c) => StructField(s"count($c)", LongType, nullable = false)
+    case FooterAgg.SumOf(c) => StructField(s"sum($c)", LongType)
+  }
+  /** The column it reads; None for COUNT(*). */
+  def col: Option[String] = this match {
+    case FooterAgg.MinOf(c, _) => Some(c)
+    case FooterAgg.MaxOf(c, _) => Some(c)
+    case FooterAgg.CountOf(c) => Some(c)
+    case FooterAgg.SumOf(c) => Some(c)
+    case FooterAgg.CountStar => None
+  }
+}
 object FooterAgg {
-  final case class MinOf(col: String, dt: DataType) extends FooterAgg
-  final case class MaxOf(col: String, dt: DataType) extends FooterAgg
+  final case class MinOf(column: String, dt: DataType) extends FooterAgg
+  final case class MaxOf(column: String, dt: DataType) extends FooterAgg
   case object CountStar extends FooterAgg
-  final case class CountOf(col: String) extends FooterAgg
+  final case class CountOf(column: String) extends FooterAgg
   /** Reader tier only (footers carry no sums); integral input. */
-  final case class SumOf(col: String) extends FooterAgg
+  final case class SumOf(column: String) extends FooterAgg
 }
 
 /** One partial row per object, computed from footers ALREADY read at
@@ -3412,13 +3380,6 @@ class GraftFooterAggScan(aggs: Seq[FooterAgg],
     case (x, _) => x
   }
 
-  private def outField(a: FooterAgg): StructField = a match {
-    case FooterAgg.MinOf(c, dt) => StructField(s"min($c)", dt)
-    case FooterAgg.MaxOf(c, dt) => StructField(s"max($c)", dt)
-    case FooterAgg.CountStar => StructField("count(*)", LongType, nullable = false)
-    case FooterAgg.CountOf(c) => StructField(s"count($c)", LongType, nullable = false)
-  }
-
   private def partialRow(f: ObjectFormat.Footer): Array[Any] = aggs.map {
     case FooterAgg.MinOf(c, dt) => narrow(f.stats.get(c).map(_.min).orNull, dt)
     case FooterAgg.MaxOf(c, dt) => narrow(f.stats.get(c).map(_.max).orNull, dt)
@@ -3430,11 +3391,11 @@ class GraftFooterAggScan(aggs: Seq[FooterAgg],
         .getOrElse(0).toLong)
   }.toArray
 
-  override def readSchema(): StructType = StructType(aggs.map(outField))
+  override def readSchema(): StructType = StructType(aggs.map(_.field))
   override def toBatch: Batch = this
   override def description(): String =
     s"GraftFooterAggScan path=$path, " +
-      s"PushedAggregates: [${aggs.map(outField(_).name).mkString(", ")}] " +
+      s"PushedAggregates: [${aggs.map(_.field.name).mkString(", ")}] " +
       "(footer-only, zero rows decoded)"
 
   override def planInputPartitions(): Array[InputPartition] = {
@@ -3477,38 +3438,20 @@ class GraftPartialAggScan(fullSchema: StructType, pushed: Array[Filter],
     groups: Seq[String], aggs: Seq[FooterAgg], path: String)
     extends Scan with Batch {
 
-  private def aggField(a: FooterAgg): StructField = a match {
-    case FooterAgg.MinOf(c, dt) => StructField(s"min($c)", dt)
-    case FooterAgg.MaxOf(c, dt) => StructField(s"max($c)", dt)
-    case FooterAgg.CountStar => StructField("count(*)", LongType, nullable = false)
-    case FooterAgg.CountOf(c) => StructField(s"count($c)", LongType, nullable = false)
-    case FooterAgg.SumOf(c) => StructField(s"sum($c)", LongType)
-  }
-  private def aggCol(a: FooterAgg): Option[String] = a match {
-    case FooterAgg.MinOf(c, _) => Some(c)
-    case FooterAgg.MaxOf(c, _) => Some(c)
-    case FooterAgg.CountOf(c) => Some(c)
-    case FooterAgg.SumOf(c) => Some(c)
-    case FooterAgg.CountStar => None
-  }
-
   override def readSchema(): StructType =
     StructType(groups.map(c => fullSchema(fullSchema.fieldIndex(c))) ++
-      aggs.map(aggField))
+      aggs.map(_.field))
   override def toBatch: Batch = this
   override def description(): String =
     s"GraftPartialAggScan path=$path, " +
-      s"PushedAggregates: [${aggs.map(aggField(_).name).mkString(", ")}], " +
+      s"PushedAggregates: [${aggs.map(_.field.name).mkString(", ")}], " +
       s"PushedGroupBy: [${groups.mkString(", ")}], " +
       s"PushedFilters: [${pushed.mkString(", ")}] " +
       "(in-reader partials, one row per object per group)"
 
   override def planInputPartitions(): Array[InputPartition] =
-    GraftObjectTable.listObjects(path).map { obj =>
-      obj -> ObjectFormat.readFooter(obj)
-    }.filter { case (_, footer) =>
-      footer.rowCount > 0 && pushed.forall(ObjectFormat.mightMatch(_, footer))
-    }.map { case (p, _) => GraftObjectPartition(p) }.toArray
+    GraftObjectTable.candidates(GraftObjectTable.listObjects(path), pushed)
+      .map { case (p, _) => GraftObjectPartition(p) }.toArray
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftPartialAggReaderFactory(fullSchema, pushed, groups, aggs)
@@ -3518,17 +3461,9 @@ class GraftPartialAggReaderFactory(fullSchema: StructType,
     pushed: Array[Filter], groups: Seq[String], aggs: Seq[FooterAgg])
     extends PartitionReaderFactory {
 
-  private def aggCol(a: FooterAgg): Option[String] = a match {
-    case FooterAgg.MinOf(c, _) => Some(c)
-    case FooterAgg.MaxOf(c, _) => Some(c)
-    case FooterAgg.CountOf(c) => Some(c)
-    case FooterAgg.SumOf(c) => Some(c)
-    case FooterAgg.CountStar => None
-  }
-
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private val inner = StructType((groups ++ aggs.flatMap(aggCol)).distinct
+      private val inner = StructType((groups ++ aggs.flatMap(_.col)).distinct
         .map(c => fullSchema(fullSchema.fieldIndex(c))))
       private val colIdx = inner.fieldNames.zipWithIndex.toMap
       private val paths: Seq[String] =
@@ -3551,7 +3486,7 @@ class GraftPartialAggReaderFactory(fullSchema: StructType,
             val slots = acc.getOrElseUpdate(key, fresh())
             var i = 0
             aggs.foreach { a =>
-              val v = aggCol(a).map(c =>
+              val v = a.col.map(c =>
                 row.get(colIdx(c), inner(colIdx(c)).dataType)).orNull
               a match {
                 case FooterAgg.CountStar =>
@@ -3635,16 +3570,12 @@ class GraftObjectScan(fullSchema: StructType, readSchema_ : StructType,
     * The deterministic object sample (if any) applies FIRST — unkept
     * objects never even have their footers consulted. */
   private lazy val selected: Seq[(String, ObjectFormat.Footer)] =
-    GraftObjectTable.listObjects(path)
-      .filter(obj => sampleObjects.forall { case (k, n) =>
-        GraftScanBuilder.sampleBucket(obj, n) < k
-      })
-      .map { obj =>
-        obj -> ObjectFormat.readFooter(obj)
-      }.filter { case (_, footer) =>
-        footer.rowCount > 0 &&
-          pushed.forall(ObjectFormat.mightMatch(_, footer))
-      }
+    GraftObjectTable.candidates(
+      GraftObjectTable.listObjects(path)
+        .filter(obj => sampleObjects.forall { case (k, n) =>
+          GraftScanBuilder.sampleBucket(obj, n) < k
+        }),
+      pushed)
 
   /** Runtime object pruning — Spark's dynamic-partition-pruning hook
     * for DSv2. At execution time the equi-join build side's distinct
@@ -4125,13 +4056,9 @@ class GraftMicroBatchStream(fullSchema: StructType, readSchema: StructType,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[GraftObjectOffset].objectCount
     val e = end.asInstanceOf[GraftObjectOffset].objectCount
-    GraftObjectTable.listObjects(path).slice(s, e)
-      .filter { obj => // same object-index pruning as the batch path
-        val footer = ObjectFormat.readFooter(obj)
-        footer.rowCount > 0 &&
-          pushed.forall(ObjectFormat.mightMatch(_, footer))
-      }
-      .map(GraftObjectPartition.apply).toArray
+    // same object-index pruning as the batch path
+    GraftObjectTable.candidates(GraftObjectTable.listObjects(path).slice(s, e),
+      pushed).map { case (p, _) => GraftObjectPartition(p) }.toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

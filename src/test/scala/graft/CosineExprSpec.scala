@@ -50,4 +50,33 @@ class CosineExprSpec extends SparkSpec {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*(1)") || plan.contains("*(2)"), plan)
   }
+
+  test("a session built with GraftExtensions resolves every native function without register") {
+    // spark.sql.extensions=graft.functions.GraftExtensions is the
+    // production registration path; it must cover the same functions
+    // as the runtime `register` hook. The session shares this JVM's
+    // SparkContext and never calls register.
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val base = spark
+    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    try {
+      val s2 = SparkSession.builder()
+        .master("local[4]")
+        .config("spark.sql.session.timeZone", "UTC")
+        .withExtensions(new graft.functions.GraftExtensions())
+        .getOrCreate()
+      val names = Seq("cosine_sim", "rhp_bucket", "zorder_long",
+        "zorder_norm", "zorder_prefix", "freq_items_sketch",
+        "quantile_sketch", "pq_encode_codes", "pq_adc_distance",
+        "trigram_profile_hits", "trigram_counts", "int_l2_sq",
+        "cosine_argmax_cell")
+      val missing = names.filterNot(n =>
+        s2.sessionState.functionRegistry.functionExists(FunctionIdentifier(n)))
+      assert(missing.isEmpty, s"not registered by GraftExtensions: $missing")
+    } finally {
+      SparkSession.setDefaultSession(base)
+      SparkSession.setActiveSession(base)
+    }
+  }
 }

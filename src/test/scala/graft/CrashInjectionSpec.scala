@@ -5,6 +5,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.sources.{DeleteVectors, FaultPoints, GraftObjectTable,
   GraftVersions, ObjectStoreMaintenance}
@@ -190,5 +191,51 @@ class CrashInjectionSpec extends SparkSpec {
     val got = spark.read.format("graft-objects").load(dir)
     assert(got.count() == 200, "rows restored before the new op applied")
     assert(got.filter(col("v") === 7L).count() == 10)
+  }
+
+  // ---- the shared MoR walk: the computed update and edge tables -----
+
+  test("computed update crash in the LOSS window: recovery restores every row, retry applies") {
+    val dir = freshTable("upd-expr-dv")
+    val before = spark.read.format("graft-objects").load(dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    crash("mor.update.dv") {
+      ObjectStoreMaintenance.updateMoRExpr(spark, dir,
+        Array(LessThanOrEqual("id", 99L)), Map("v" -> "v + 1"))
+    }
+    ObjectStoreMaintenance.recoverTxn(dir)
+    val after = spark.read.format("graft-objects").load(dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(after == before, "pre-update state restored exactly")
+    val (n, _) = ObjectStoreMaintenance.updateMoRExpr(spark, dir,
+      Array(LessThanOrEqual("id", 99L)), Map("v" -> "v + 1"))
+    assert(n == 100)
+    val got = spark.read.format("graft-objects").load(dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(got == (0L until 200L).map(i =>
+      (i, if (i <= 99) i * 2 + 1 else i * 2)).toSet)
+  }
+
+  test("updateMoR on a table emptied by DELETE (schema sidecar kept) returns (0, null)") {
+    val dir = freshTable("upd-empty")
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("v", LongType)))
+    new GraftObjectTable(schema, dir).deleteWhere(
+      Array[org.apache.spark.sql.sources.Filter](GreaterThanOrEqual("id", 0L)))
+    assert(GraftObjectTable.listObjects(dir).isEmpty)
+    assert(new File(dir, "_schema.ddl").isFile)
+    assert(ObjectStoreMaintenance.updateMoR(dir,
+      Array(LessThanOrEqual("id", 9L)), Map("v" -> 0L)) == ((0L, null)))
+    assert(GraftObjectTable.listObjects(dir).isEmpty)
+    assert(!new File(dir).listFiles().exists(_.getName.startsWith("_txn_v")))
+  }
+
+  test("deleteMoR on a directory with neither objects nor a schema sidecar names the table") {
+    val dir = Files.createTempDirectory("graft-crash-none").toString + "/t"
+    val e = intercept[IllegalArgumentException] {
+      ObjectStoreMaintenance.deleteMoR(dir, Array(LessThanOrEqual("id", 9L)))
+    }
+    assert(e.getMessage.contains(dir), e.getMessage)
+    assert(!new File(dir).listFiles().exists(_.getName.startsWith("_txn_v")))
   }
 }
