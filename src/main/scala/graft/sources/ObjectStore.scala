@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDelete, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider, TruncatableTable}
-import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, NullOrdering, SortDirection, SortOrder, Transform}
+import org.apache.spark.sql.connector.expressions.{Cast => V2Cast, Expression => V2Expression, Expressions, GeneralScalarExpression, NamedReference, NullOrdering, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
@@ -2487,13 +2487,16 @@ class GraftObjectTable(tableSchema: StructType, path: String,
             }
           }
         val (del, rw) = (removed.result(), rewritten.result())
-        if (del.nonEmpty || rw.nonEmpty)
-          GraftVersions.record(path, v, Nil, del, rw)
-        // a DELETE/TRUNCATE that empties the table must not strand it
-        // schema-less: persist the sidecar the catalog falls back to
+        // a DELETE that empties the table must not strand it schema-
+        // less: persist the sidecar the catalog falls back to BEFORE
+        // the commit point, so a crash after it finds the schema
         if (GraftObjectTable.listObjects(path).isEmpty)
           Files.write(Paths.get(path, "_schema.ddl"),
             tableSchema.toDDL.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        if (del.nonEmpty || rw.nonEmpty) {
+          GraftVersions.record(path, v, Nil, del, rw)
+          FaultPoints.hit("delete.commit.recorded")
+        }
       }
     }
   }
@@ -2686,11 +2689,13 @@ class GraftReplaceDataWrite(writeSchema: StructType, path: String,
           ObjectStoreMaintenance.foldBeforeArchive(obj)
           GraftVersions.archiveMove(path, new File(obj), v)
         }
-        GraftVersions.record(path, v, planned,
-          affected.toSeq.map(new File(_).getName).sorted)
+        // emptied: the schema sidecar lands before the commit point
         if (GraftObjectTable.listObjects(path).isEmpty)
           Files.write(Paths.get(path, "_schema.ddl"),
             writeSchema.toDDL.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        GraftVersions.record(path, v, planned,
+          affected.toSeq.map(new File(_).getName).sorted)
+        FaultPoints.hit("replace.commit.recorded")
       }
     }
 
@@ -3113,12 +3118,29 @@ class GraftScanBuilder(fullSchema: StructType, path: String,
     *     reference's `--use-cls` headline (select+project+aggregate
     *     evaluated in the storage server; only partials travel).
     *
+    * Pushable aggregates: MIN/MAX of a column or of
+    * `CAST(timestamp column AS DATE)`, COUNT(*), COUNT(col), SUM of a
+    * Long/Int column, and the money sums: SUM of `CAST(c AS
+    * DECIMAL(p,s))` or of the product of two such casts, with c a
+    * Double, Long or Int column. Spark hands over a cast only under
+    * ANSI (or for an up-cast) and a product only under ANSI, so without
+    * ANSI the money sums never arrive here. A decimal sum is computed on
+    * exact unscaled longs ([[DecimalCast]]: Spark's `Cast` by
+    * construction), its term's type must hold in a long (p <= 18) and a
+    * product must not round (scale s1 + s2). Its partial field has
+    * exactly the term's type, `Sum.child.dataType`, which is what Spark
+    * casts each partial to before the final merge; so a reader emits a
+    * group's running sum as a partial of its own and starts a fresh one
+    * whenever the next term would take it out of that precision. The
+    * settings a partial depends on — ANSI overflow for Long sums, the
+    * session time zone for dates — are captured here, at planning.
+    *
     * Spark applies the final merge either way (min-of-mins,
     * sum-of-counts — partial pushdown, supportCompletePushDown stays
     * false). Anything not exactly reproducible (distinct counts, AVG
-    * over doubles, sums of floating columns whose order-dependence
-    * the oracle discipline forbids, NaN-disabled footer stats in the
-    * footer tier) is refused and falls back to the ordinary scan. */
+    * over doubles, SUM of a floating column, whose result depends on
+    * the order of the adds, NaN-disabled footer stats in the footer
+    * tier) is refused and falls back to the ordinary scan. */
   override def pushAggregation(aggregation: Aggregation): Boolean = {
     // Per-read opt-out (`option("agg.pushdown", "false")`): callers
     // exercising a DIFFERENT aggregate-elimination tier (e.g. the
@@ -3131,7 +3153,8 @@ class GraftScanBuilder(fullSchema: StructType, path: String,
     // row-level semantics for COUNT/SUM finals. Refuse; the ordinary
     // sampled scan feeds the aggregate.
     if (GraftScanBuilder.parseSample(options).isDefined) return false
-    def colOf(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] =
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    def colOf(e: V2Expression): Option[String] =
       e match {
         case nr: NamedReference if nr.fieldNames().length == 1 =>
           val c = nr.fieldNames()(0)
@@ -3140,22 +3163,62 @@ class GraftScanBuilder(fullSchema: StructType, path: String,
       }
     def statable(c: String): Boolean =
       ObjectFormat.statKind(fullSchema(c).dataType) != 0
+    def castTo(e: V2Expression): Option[FooterAgg.CastTo] = e match {
+      case c: V2Cast => (colOf(c.expression()), c.dataType()) match {
+        case (Some(col), d: DecimalType)
+            if DecimalCast.sources.contains(fullSchema(col).dataType) =>
+          Some(FooterAgg.CastTo(col, d))
+        case _ => None
+      }
+      case _ => None
+    }
+    def decimalSum(e: V2Expression): Option[FooterAgg] = (e match {
+      case m: GeneralScalarExpression if m.name() == "*" && m.children().length == 2 =>
+        for {
+          a <- castTo(m.children()(0)); b <- castTo(m.children()(1))
+          // the product's type as Spark's own Multiply derives it; a
+          // product that would round (precision loss) is refused
+          dt <- Option(org.apache.spark.sql.catalyst.expressions.Multiply(
+            org.apache.spark.sql.catalyst.expressions.Literal(null, a.dt),
+            org.apache.spark.sql.catalyst.expressions.Literal(null, b.dt),
+            org.apache.spark.sql.catalyst.expressions.NumericEvalContext(
+              org.apache.spark.sql.catalyst.expressions.EvalMode.ANSI,
+              conf.decimalOperationsAllowPrecisionLoss)).dataType).collect {
+            case d: DecimalType if d.scale == a.dt.scale + b.dt.scale => d
+          }
+        } yield FooterAgg.SumDecimal(Seq(a, b), dt)
+      case _ => castTo(e).map(c => FooterAgg.SumDecimal(Seq(c), c.dt))
+    }).filter(_.dt.precision <= DecimalCast.MaxPrecision)
+    def dateOf(e: V2Expression): Option[String] = e match {
+      case c: V2Cast if c.dataType() == DateType =>
+        colOf(c.expression()).filter(col => fullSchema(col).dataType match {
+          case TimestampType | TimestampNTZType => true
+          case _ => false
+        })
+      case _ => None
+    }
+    val zone = conf.sessionLocalTimeZone
     val translated: Seq[Option[FooterAgg]] =
       aggregation.aggregateExpressions().toSeq.map {
         case m: Min => colOf(m.column).filter(statable)
           .map(c => FooterAgg.MinOf(c, fullSchema(c).dataType))
+          .orElse(dateOf(m.column).map(FooterAgg.MinDateOf(_, zone)))
         case m: Max => colOf(m.column).filter(statable)
           .map(c => FooterAgg.MaxOf(c, fullSchema(c).dataType))
+          .orElse(dateOf(m.column).map(FooterAgg.MaxDateOf(_, zone)))
         case _: CountStar => Some(FooterAgg.CountStar)
         case c: Count if !c.isDistinct() =>
           colOf(c.column).map(FooterAgg.CountOf.apply)
-        case s: Sum if !s.isDistinct() =>
-          // integral sums only: Long accumulation is order-insensitive
-          // (modular); floating sums are order-dependent and refused
-          colOf(s.column).filter(c => fullSchema(c).dataType match {
-            case LongType | IntegerType => true
-            case _ => false
-          }).map(FooterAgg.SumOf.apply)
+        case s: Sum if !s.isDistinct() => s.column match {
+          // integral sums: Long accumulation is exact; floating sums
+          // depend on the order of the adds and are refused
+          case nr: NamedReference => colOf(nr).filter(c =>
+            fullSchema(c).dataType match {
+              case LongType | IntegerType => true
+              case _ => false
+            }).map(FooterAgg.SumOf(_, conf.ansiEnabled))
+          case e => decimalSum(e)
+        }
         case _ => None
       }
     if (translated.exists(_.isEmpty)) return false
@@ -3175,7 +3238,7 @@ class GraftScanBuilder(fullSchema: StructType, path: String,
       fullSchema(c).dataType == BinaryType)) return false
 
     val footerTier = accepted.isEmpty && groups.isEmpty &&
-      !aggs.exists(_.isInstanceOf[FooterAgg.SumOf]) &&
+      aggs.forall(_.footerAnswerable) &&
       // string footer bounds may be TRUNCATED (conservative for
       // pruning, inexact for aggregates) — string MIN/MAX always
       // takes the reader tier
@@ -3332,25 +3395,44 @@ object GraftScanBuilder {
 final case class PushedTopN(col: String, descending: Boolean,
     nullsFirst: Boolean, k: Int)
 
-/** Footer-answerable aggregate, tagged with the column's Spark type so
-  * the partial row surfaces values in the column's own width (footer
-  * longs narrow back to int/date, doubles to float — both exact). */
+/** A pushed aggregate. MIN/MAX/COUNT(*)/COUNT(col) are answerable from
+  * footers; every kind is answerable in the reader tier. MIN/MAX are
+  * tagged with the column's Spark type so the partial row surfaces
+  * values in the column's own width (footer longs narrow back to
+  * int/date, doubles to float — both exact). Settings a partial depends
+  * on (ANSI overflow, the session time zone) are captured at planning
+  * time, inside the aggregate. */
 sealed trait FooterAgg {
-  /** The partial-row column this aggregate fills. */
+  /** The partial-row column this aggregate fills. A decimal SUM's field
+    * is exactly `Sum.child.dataType`, the type Spark casts each partial
+    * to before its final merge, so every partial must fit it. */
   def field: StructField = this match {
     case FooterAgg.MinOf(c, dt) => StructField(s"min($c)", dt)
     case FooterAgg.MaxOf(c, dt) => StructField(s"max($c)", dt)
     case FooterAgg.CountStar => StructField("count(*)", LongType, nullable = false)
     case FooterAgg.CountOf(c) => StructField(s"count($c)", LongType, nullable = false)
-    case FooterAgg.SumOf(c) => StructField(s"sum($c)", LongType)
+    case FooterAgg.SumOf(c, _) => StructField(s"sum($c)", LongType)
+    case FooterAgg.SumDecimal(fs, dt) =>
+      StructField(s"sum(${fs.map(_.sql).mkString(" * ")})", dt)
+    case FooterAgg.MinDateOf(c, _) => StructField(s"min(CAST($c AS DATE))", DateType)
+    case FooterAgg.MaxDateOf(c, _) => StructField(s"max(CAST($c AS DATE))", DateType)
   }
-  /** The column it reads; None for COUNT(*). */
-  def col: Option[String] = this match {
-    case FooterAgg.MinOf(c, _) => Some(c)
-    case FooterAgg.MaxOf(c, _) => Some(c)
-    case FooterAgg.CountOf(c) => Some(c)
-    case FooterAgg.SumOf(c) => Some(c)
-    case FooterAgg.CountStar => None
+  /** The columns it reads; none for COUNT(*). */
+  def cols: Seq[String] = this match {
+    case FooterAgg.MinOf(c, _) => Seq(c)
+    case FooterAgg.MaxOf(c, _) => Seq(c)
+    case FooterAgg.CountOf(c) => Seq(c)
+    case FooterAgg.SumOf(c, _) => Seq(c)
+    case FooterAgg.SumDecimal(fs, _) => fs.map(_.column).distinct
+    case FooterAgg.MinDateOf(c, _) => Seq(c)
+    case FooterAgg.MaxDateOf(c, _) => Seq(c)
+    case FooterAgg.CountStar => Nil
+  }
+  /** Answerable from footer stats alone (footers carry no sums). */
+  def footerAnswerable: Boolean = this match {
+    case FooterAgg.MinOf(_, _) | FooterAgg.MaxOf(_, _) | FooterAgg.CountStar |
+        FooterAgg.CountOf(_) => true
+    case _ => false
   }
 }
 object FooterAgg {
@@ -3358,8 +3440,417 @@ object FooterAgg {
   final case class MaxOf(column: String, dt: DataType) extends FooterAgg
   case object CountStar extends FooterAgg
   final case class CountOf(column: String) extends FooterAgg
-  /** Reader tier only (footers carry no sums); integral input. */
-  final case class SumOf(column: String) extends FooterAgg
+  /** SUM of a Long or Int column; `ansi` adds with overflow checks. */
+  final case class SumOf(column: String, ansi: Boolean) extends FooterAgg
+  /** `CAST(column AS DECIMAL(p,s))` of a Double, Long or Int column. */
+  final case class CastTo(column: String, dt: DecimalType) {
+    def sql: String = s"CAST($column AS ${dt.sql})"
+  }
+  /** SUM of one decimal cast or of the product of two; `dt` is the
+    * summed term's type (a product's comes from Spark's `Multiply`). */
+  final case class SumDecimal(factors: Seq[CastTo], dt: DecimalType) extends FooterAgg
+  /** MIN/MAX of `CAST(timestamp column AS DATE)` in time zone `zone`. */
+  final case class MinDateOf(column: String, zone: String) extends FooterAgg
+  final case class MaxDateOf(column: String, zone: String) extends FooterAgg
+}
+
+/** `CAST(x AS DECIMAL(p,s))` of a Double, Long or Int `x`, equal to
+  * Spark's ANSI `Cast` by construction: a fast path where the answer is
+  * provably the same, Spark's own `Cast` for every other value.
+  *
+  * The fast path for a double `d`:
+  *  - `|d| < 2^51 / 10^s`, so ulp(d) < 10^-s / 2;
+  *  - `u = round(d · 10^s)` satisfies `u / 10^s == d`, so the decimal
+  *    u·10^-s lies in d's rounding interval;
+  *  - `|u| < 10^p`.
+  * Spark rounds `Double.toString(d)` HALF_UP to s places. That string
+  * also lies in d's rounding interval, so it is less than one ulp, and
+  * hence less than half a step of 10^-s, from u·10^-s: it rounds to u,
+  * whatever digits the JDK's `toString` chooses. For an integral `x`,
+  * `u = x · 10^s` when `|x| < 10^(p-s)`. NaN, ±Inf, overflow and
+  * inexact doubles all go to Spark's `Cast`, which gives Spark's value,
+  * null or error. */
+final class DecimalCast(from: DataType, to: DecimalType) {
+  import DecimalCast._
+  private val p = to.precision
+  private val s = to.scale
+  private val kind = from match {
+    case DoubleType => 0
+    case LongType => 1
+    case IntegerType => 2
+    case other => throw new IllegalArgumentException(
+      s"DecimalCast: cannot cast $other exactly")
+  }
+  /** Bytes one value of the source type takes in a segment. */
+  val width: Int = if (kind == 2) 4 else 8
+  // 10^s fits a long (and is exact as a double) only up to s = 18
+  private val fast = s <= MaxPrecision
+  private val powL = if (fast) Pow10(s) else 0L
+  private val powD = powL.toDouble
+  private val bound = if (fast) TwoTo51 / powD else 0.0
+  private val limit = if (p <= MaxPrecision) Pow10(p) else Long.MaxValue
+  private val maxIntegral =
+    if (!fast) 0L else if (p <= MaxPrecision) Pow10(p - s) else Long.MaxValue / powL
+  private lazy val spark = org.apache.spark.sql.catalyst.expressions.Cast(
+    org.apache.spark.sql.catalyst.expressions.BoundReference(0, from, nullable = true),
+    to, None, org.apache.spark.sql.catalyst.expressions.EvalMode.ANSI)
+  private def sparkCast(v: Any): Decimal =
+    spark.eval(new GenericInternalRow(Array[Any](v))).asInstanceOf[Decimal]
+
+  /** The fast path's unscaled value of `d`, or [[DecimalCast.Null]]. */
+  private def fastDouble(d: Double): Long = {
+    if (Math.abs(d) < bound) {
+      val u = Math.round(d * powD)
+      if (u / powD == d && u > -limit && u < limit) return u
+    }
+    Null
+  }
+  private def fastIntegral(x: Long): Long =
+    if (x > -maxIntegral && x < maxIntegral) x * powL else Null
+  private def boxed(x: Long): Any = if (kind == 2) Int.box(x.toInt) else Long.box(x)
+
+  /** The cast's value (null for a null input or a null cast). */
+  def decimal(v: Any): Decimal = v match {
+    case null => null
+    case d: java.lang.Double =>
+      val u = fastDouble(d)
+      if (u != Null) Decimal(u, p, s) else sparkCast(v)
+    case x: Number =>
+      val u = fastIntegral(x.longValue())
+      if (u != Null) Decimal(u, p, s) else sparkCast(v)
+  }
+
+  // The unscaled forms below need p <= 18, where every value fits a long.
+  private def unscaled(d: Decimal): Long = if (d == null) Null else d.toUnscaledLong
+  /** Unscaled cast of a double, or [[DecimalCast.Null]]. */
+  def ofDouble(d: Double): Long = {
+    val u = fastDouble(d)
+    if (u != Null) u else unscaled(sparkCast(Double.box(d)))
+  }
+  /** Unscaled cast of a Long or Int value, or [[DecimalCast.Null]]. */
+  def ofIntegral(x: Long): Long = {
+    val u = fastIntegral(x)
+    if (u != Null) u else unscaled(sparkCast(boxed(x)))
+  }
+  /** Unscaled cast of the source value at `pos` in a segment's values. */
+  def at(bb: ByteBuffer, pos: Int): Long = kind match {
+    case 0 => ofDouble(bb.getDouble(pos))
+    case 1 => ofIntegral(bb.getLong(pos))
+    case _ => ofIntegral(bb.getInt(pos).toLong)
+  }
+  /** Unscaled cast of a row's value at ordinal `o`. */
+  def of(row: InternalRow, o: Int): Long =
+    if (row.isNullAt(o)) Null
+    else kind match {
+      case 0 => ofDouble(row.getDouble(o))
+      case 1 => ofIntegral(row.getLong(o))
+      case _ => ofIntegral(row.getInt(o).toLong)
+    }
+}
+
+object DecimalCast {
+  /** No value: a null input or a null cast. Never an unscaled value,
+    * whose magnitude stays below 10^18. */
+  val Null: Long = Long.MinValue
+  /** The widest decimal whose unscaled values all fit a long. */
+  val MaxPrecision = 18
+  private val TwoTo51 = math.pow(2, 51)
+  private val Pow10: Array[Long] = Array.iterate(1L, MaxPrecision + 1)(_ * 10)
+  /** 10^n as a long, n <= 18. */
+  def pow10(n: Int): Long = Pow10(n)
+  /** Source column types whose casts push. */
+  val sources: Set[DataType] = Set(DoubleType, LongType, IntegerType)
+}
+
+/** One pushed aggregate's state in the reader tier, folded either one
+  * row at a time (the row loop: GROUP BY, or an object whose generation
+  * lacks a referenced column or stores it narrower) or over a whole
+  * object's segments (the typed global loop). Every aggregate merges
+  * associatively in Spark's final aggregate, so an accumulator may emit
+  * several partials: a decimal SUM does, to keep each one inside its
+  * field's precision. */
+private[sources] sealed abstract class PartialAcc {
+  /** Fold the row loop's current row. */
+  def add(row: InternalRow): Unit
+  /** Fold the kept rows of one object, reading `seg(column)`. */
+  def scan(seg: String => ObjectFormat.Segment, keep: Array[Boolean]): Unit
+  /** Every partial, oldest first; at least one. */
+  def partials: Seq[Any]
+  /** The partial of no rows, which pads a row with fewer partials. */
+  def identity: Any = null
+}
+
+private[sources] object PartialAcc {
+  import ObjectFormat.Segment
+
+  /** A fresh accumulator over rows of schema `inner`, which holds every
+    * column the aggregate reads (in the table's types). */
+  def apply(a: FooterAgg, inner: StructType): PartialAcc = {
+    def ord(c: String) = inner.fieldIndex(c)
+    def typeOf(c: String) = inner(c).dataType
+    a match {
+      case FooterAgg.CountStar => new Count(None, -1)
+      case FooterAgg.CountOf(c) => new Count(Some(c), ord(c))
+      case FooterAgg.SumOf(c, ansi) => new LongSum(c, ord(c), typeOf(c) == IntegerType, ansi)
+      case FooterAgg.SumDecimal(fs, dt) =>
+        new DecimalSum(fs.map(f => (f.column, ord(f.column),
+          new DecimalCast(typeOf(f.column), f.dt))), dt)
+      case FooterAgg.MinOf(c, dt) => new MinMax(c, ord(c), dt, max = false)
+      case FooterAgg.MaxOf(c, dt) => new MinMax(c, ord(c), dt, max = true)
+      case FooterAgg.MinDateOf(c, zone) =>
+        new DateBound(c, ord(c), typeOf(c), zone, max = false)
+      case FooterAgg.MaxDateOf(c, zone) =>
+        new DateBound(c, ord(c), typeOf(c), zone, max = true)
+    }
+  }
+
+  /** The partial rows of one group: the i-th row holds every
+    * accumulator's i-th partial, or its identity past its last (a GROUP
+    * BY without aggregates still owes its key one row). */
+  def rows(key: Seq[Any], accs: Seq[PartialAcc]): Seq[Array[Any]] = {
+    val ps = accs.map(_.partials)
+    (0 until ps.foldLeft(1)(_ max _.length)).map { i =>
+      (key ++ ps.zip(accs).map { case (p, a) =>
+        if (i < p.length) p(i) else a.identity }).toArray
+    }
+  }
+
+  /** Walk one segment's values: `f(pos)` at every present, kept row;
+    * `pos` advances `width` bytes past every present value. */
+  @inline private def present(seg: Segment, keep: Array[Boolean], width: Int)(
+      f: Int => Unit): Unit = {
+    var p = seg.valOff
+    var r = 0
+    while (r < keep.length) {
+      if (seg.presentAt(r)) {
+        if (keep(r)) f(p)
+        p += width
+      }
+      r += 1
+    }
+  }
+
+  /** COUNT(*) (`col` None) or COUNT(col). */
+  final class Count(col: Option[String], o: Int) extends PartialAcc {
+    private var n = 0L
+    def add(row: InternalRow): Unit = if (o < 0 || !row.isNullAt(o)) n += 1
+    def scan(seg: String => Segment, keep: Array[Boolean]): Unit = {
+      val s = col.map(seg).orNull
+      var r = 0
+      while (r < keep.length) {
+        if (keep(r) && (s == null || s.presentAt(r))) n += 1
+        r += 1
+      }
+    }
+    def partials: Seq[Any] = Seq(Long.box(n))
+    override def identity: Any = Long.box(0L)
+  }
+
+  /** SUM of a Long or Int column: under ANSI an overflow raises Spark's
+    * ARITHMETIC_OVERFLOW, as the unpushed sum does; otherwise the add
+    * wraps, as Spark's does. */
+  final class LongSum(col: String, o: Int, int: Boolean, ansi: Boolean)
+      extends PartialAcc {
+    private var s = 0L
+    private var seen = false
+    @inline private def plus(v: Long): Unit = {
+      s = if (ansi) org.apache.spark.sql.catalyst.util.MathUtils.addExact(s, v)
+        else s + v
+      seen = true
+    }
+    def add(row: InternalRow): Unit =
+      if (!row.isNullAt(o)) plus(if (int) row.getInt(o).toLong else row.getLong(o))
+    def scan(seg: String => Segment, keep: Array[Boolean]): Unit = {
+      val sg = seg(col)
+      val bb = sg.bb
+      if (int) present(sg, keep, 4)(p => plus(bb.getInt(p).toLong))
+      else present(sg, keep, 8)(p => plus(bb.getLong(p)))
+    }
+    def partials: Seq[Any] = Seq(if (seen) Long.box(s) else null)
+  }
+
+  /** SUM of one decimal cast, or of the product of two, on exact
+    * unscaled longs. Spark casts each partial to the summed term's type
+    * `dt` before its final merge, so a partial must stay below 10^p:
+    * when the next term would take the running sum out of that range,
+    * the sum so far becomes a partial of its own and a fresh one starts.
+    * A product multiplies the unscaled factors: its scale is s1 + s2,
+    * so nothing rounds. As in Spark's `Multiply`, the right factor is
+    * cast only when the left one is not null. */
+  final class DecimalSum(factors: Seq[(String, Int, DecimalCast)], dt: DecimalType)
+      extends PartialAcc {
+    import DecimalCast.Null
+    private val limit = DecimalCast.pow10(dt.precision)
+    private var s = 0L
+    private var seen = false
+    private val done = scala.collection.mutable.ArrayBuffer.empty[Any]
+    private def partial(u: Long): Decimal = Decimal(u, dt.precision, dt.scale)
+    @inline private def plus(u: Long): Unit =
+      if (!seen) { s = u; seen = true }
+      else {
+        val n = s + u // |s|, |u| < 10^18: no long overflow
+        if (n <= -limit || n >= limit) { done += partial(s); s = u } else s = n
+      }
+    private val (c0, o0, cast0) = factors.head
+    private val second = factors.lift(1)
+
+    def add(row: InternalRow): Unit = {
+      val a = cast0.of(row, o0)
+      if (a != Null) second match {
+        case None => plus(a)
+        case Some((_, o1, cast1)) =>
+          val b = cast1.of(row, o1)
+          if (b != Null) plus(Math.multiplyExact(a, b))
+      }
+    }
+    def scan(seg: String => Segment, keep: Array[Boolean]): Unit = {
+      val s0 = seg(c0)
+      val bb0 = s0.bb
+      second match {
+        case None => present(s0, keep, cast0.width) { p =>
+          val a = cast0.at(bb0, p)
+          if (a != Null) plus(a)
+        }
+        case Some((c1, _, cast1)) =>
+          val s1 = seg(c1)
+          val bb1 = s1.bb
+          var p0 = s0.valOff
+          var p1 = s1.valOff
+          var r = 0
+          while (r < keep.length) {
+            val has0 = s0.presentAt(r)
+            val has1 = s1.presentAt(r)
+            if (keep(r) && has0) {
+              val a = cast0.at(bb0, p0)
+              if (a != Null && has1) {
+                val b = cast1.at(bb1, p1)
+                if (b != Null) plus(Math.multiplyExact(a, b))
+              }
+            }
+            if (has0) p0 += cast0.width
+            if (has1) p1 += cast1.width
+            r += 1
+          }
+      }
+    }
+    def partials: Seq[Any] = done.toSeq :+ (if (seen) partial(s) else null)
+  }
+
+  /** MIN or MAX of a column in the order of [[ObjectFormat.cmpExact]].
+    * Fixed-width numbers and strings scan typed; other types decode
+    * boxed. */
+  final class MinMax(col: String, o: Int, dt: DataType, max: Boolean)
+      extends PartialAcc {
+    private var best: Any = null
+    private def offer(v: Any): Unit =
+      if (best == null ||
+        ObjectFormat.cmpExact(v, best).exists(c => if (max) c > 0 else c < 0))
+        best = v
+    def add(row: InternalRow): Unit = if (!row.isNullAt(o)) offer(row.get(o, dt))
+    @inline private def wins(c: Int): Boolean = if (max) c > 0 else c < 0
+    def scan(seg: String => Segment, keep: Array[Boolean]): Unit = {
+      val sg = seg(col)
+      val bb = sg.bb
+      var found = false
+      dt match {
+        case LongType | TimestampType | TimestampNTZType =>
+          var b = 0L
+          present(sg, keep, 8) { p =>
+            val v = bb.getLong(p)
+            if (!found || wins(java.lang.Long.compare(v, b))) { b = v; found = true }
+          }
+          if (found) offer(Long.box(b))
+        case IntegerType | DateType =>
+          var b = 0
+          present(sg, keep, 4) { p =>
+            val v = bb.getInt(p)
+            if (!found || wins(Integer.compare(v, b))) { b = v; found = true }
+          }
+          if (found) offer(Int.box(b))
+        case DoubleType =>
+          var b = 0.0
+          present(sg, keep, 8) { p =>
+            val v = bb.getDouble(p)
+            if (!found || wins(java.lang.Double.compare(v, b))) { b = v; found = true }
+          }
+          if (found) offer(Double.box(b))
+        case FloatType =>
+          var b = 0.0f
+          present(sg, keep, 4) { p =>
+            val v = bb.getFloat(p)
+            if (!found || wins(java.lang.Float.compare(v, b))) { b = v; found = true }
+          }
+          if (found) offer(Float.box(b))
+        case StringType =>
+          // [length][bytes] values, compared in place as unsigned bytes
+          val arr = bb.array()
+          var (bOff, bLen) = (0, 0)
+          var p = sg.valOff
+          var r = 0
+          while (r < keep.length) {
+            if (sg.presentAt(r)) {
+              val len = bb.getInt(p)
+              if (keep(r) && (!found ||
+                  wins(compareBytes(arr, p + 4, len, bOff, bLen)))) {
+                bOff = p + 4; bLen = len; found = true
+              }
+              p += 4 + len
+            }
+            r += 1
+          }
+          if (found) offer(UTF8String.fromBytes(util.Arrays.copyOfRange(arr, bOff, bOff + bLen)))
+        case _ =>
+          val vs = sg.boxed()
+          var r = 0
+          while (r < keep.length) {
+            if (keep(r) && vs(r) != null) offer(vs(r))
+            r += 1
+          }
+      }
+    }
+    def partials: Seq[Any] = Seq(best)
+  }
+
+  /** Unsigned lexicographic order of two byte ranges of one array — the
+    * order of `UTF8String.compareTo`. */
+  private def compareBytes(a: Array[Byte], x: Int, xLen: Int, y: Int, yLen: Int): Int = {
+    val n = math.min(xLen, yLen)
+    var i = 0
+    while (i < n) {
+      val c = (a(x + i) & 0xff) - (a(y + i) & 0xff)
+      if (c != 0) return c
+      i += 1
+    }
+    xLen - yLen
+  }
+
+  /** MIN or MAX of `CAST(ts AS DATE)`. The cast is monotone in the
+    * timestamp wherever the zone's offset is fixed (and always for
+    * TIMESTAMP_NTZ, read in UTC): there the extreme micros convert
+    * once, at the end; other zones convert every row. */
+  final class DateBound(col: String, o: Int, tsType: DataType, zone: String,
+      max: Boolean) extends PartialAcc {
+    private val zid =
+      if (tsType == TimestampNTZType) java.time.ZoneOffset.UTC
+      else org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(zone)
+    private val fixed = zid.getRules.isFixedOffset
+    private def days(micros: Long): Int =
+      org.apache.spark.sql.catalyst.util.DateTimeUtils.microsToDays(micros, zid)
+    private var best = 0L
+    private var found = false
+    @inline private def offer(micros: Long): Unit = {
+      val k = if (fixed) micros else days(micros).toLong
+      if (!found || (if (max) k > best else k < best)) { best = k; found = true }
+    }
+    def add(row: InternalRow): Unit = if (!row.isNullAt(o)) offer(row.getLong(o))
+    def scan(seg: String => Segment, keep: Array[Boolean]): Unit = {
+      val sg = seg(col)
+      val bb = sg.bb
+      present(sg, keep, 8)(p => offer(bb.getLong(p)))
+    }
+    def partials: Seq[Any] = Seq(
+      if (!found) null else Int.box(if (fixed) days(best) else best.toInt))
+  }
 }
 
 /** One partial row per object, computed from footers ALREADY read at
@@ -3389,6 +3880,7 @@ class GraftFooterAggScan(aggs: Seq[FooterAgg],
       // (footers stat every column of their own schema) ⇔ all null here
       Long.box(f.stats.get(c).map(s => f.rowCount - s.nullCount)
         .getOrElse(0).toLong)
+    case a => throw new IllegalStateException(s"$a is not footer-answerable")
   }.toArray
 
   override def readSchema(): StructType = StructType(aggs.map(_.field))
@@ -3425,14 +3917,16 @@ case class GraftAggRowsPartition(rows: Seq[Array[Any]]) extends InputPartition
 
 /** Reader-tier aggregate pushdown: select+project+aggregate evaluated
   * INSIDE the storage reader — the reference's `--use-cls` query path
-  * (filter rows in the OSD, return one aggregate partial per object
+  * (filter rows in the OSD, return aggregate partials per object
   * instead of the rows). Each input partition is one object; its
-  * reader decodes rows, applies the pushed conjunction, accumulates
-  * MIN/MAX/COUNT/COUNT(col)/SUM partials per GROUP BY key, and emits
-  * one row per key (or the identity partial for a global aggregate
-  * over zero qualifying rows). Spark's final aggregate merges the
-  * per-object partials — so the bytes that leave "storage" scale with
-  * objects × groups, never with rows. Footer stats still prune
+  * reader applies the deletion vector and the pushed conjunction,
+  * accumulates MIN/MAX/COUNT/COUNT(col)/SUM partials (integral and
+  * exact decimal) per GROUP BY key, and emits one row per key — more
+  * only when a decimal SUM spills to stay inside its type (see
+  * [[PartialAcc.DecimalSum]]) — or the identity partial for a global
+  * aggregate over zero qualifying rows. Spark's final aggregate merges
+  * the per-object partials — so the bytes that leave "storage" scale
+  * with objects × groups, never with rows. Footer stats still prune
   * objects that cannot match before their bodies are opened. */
 class GraftPartialAggScan(fullSchema: StructType, pushed: Array[Filter],
     groups: Seq[String], aggs: Seq[FooterAgg], path: String)
@@ -3449,9 +3943,12 @@ class GraftPartialAggScan(fullSchema: StructType, pushed: Array[Filter],
       s"PushedFilters: [${pushed.mkString(", ")}] " +
       "(in-reader partials, one row per object per group)"
 
-  override def planInputPartitions(): Array[InputPartition] =
+  /** The footer prune, once per scan: Spark asks for the partitions
+    * more than once while it plans. */
+  private lazy val partitions: Array[InputPartition] =
     GraftObjectTable.candidates(GraftObjectTable.listObjects(path), pushed)
-      .map { case (p, _) => GraftObjectPartition(p) }.toArray
+      .map { case (p, _) => GraftObjectPartition(p): InputPartition }.toArray
+  override def planInputPartitions(): Array[InputPartition] = partitions
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftPartialAggReaderFactory(fullSchema, pushed, groups, aggs)
@@ -3461,73 +3958,70 @@ class GraftPartialAggReaderFactory(fullSchema: StructType,
     pushed: Array[Filter], groups: Seq[String], aggs: Seq[FooterAgg])
     extends PartitionReaderFactory {
 
+  /** Every column the aggregation reads, in the table's types. */
+  private def inner: StructType = StructType(
+    (groups ++ aggs.flatMap(_.cols)).distinct.map(fullSchema(_)))
+
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private val inner = StructType((groups ++ aggs.flatMap(_.col)).distinct
-        .map(c => fullSchema(fullSchema.fieldIndex(c))))
-      private val colIdx = inner.fieldNames.zipWithIndex.toMap
-      private val paths: Seq[String] =
-        Seq(p.asInstanceOf[GraftObjectPartition].path)
-      private val out: Iterator[InternalRow] = {
-        // group key -> accumulator array (one slot per aggregate)
-        val acc = scala.collection.mutable.LinkedHashMap
-          .empty[List[Any], Array[Any]]
-        def fresh(): Array[Any] = aggs.map[Any] {
-          case FooterAgg.CountStar | FooterAgg.CountOf(_) => Long.box(0L)
-          case _ => null
-        }.toArray
-        paths.foreach { path =>
-        val rd = new GraftObjectReader(path, fullSchema, inner, pushed)
-        try {
-          while (rd.next()) {
-            val row = rd.get()
-            val key = groups
-              .map(c => row.get(colIdx(c), inner(colIdx(c)).dataType)).toList
-            val slots = acc.getOrElseUpdate(key, fresh())
-            var i = 0
-            aggs.foreach { a =>
-              val v = a.col.map(c =>
-                row.get(colIdx(c), inner(colIdx(c)).dataType)).orNull
-              a match {
-                case FooterAgg.CountStar =>
-                  slots(i) = Long.box(slots(i).asInstanceOf[Long] + 1L)
-                case FooterAgg.CountOf(_) =>
-                  if (v != null)
-                    slots(i) = Long.box(slots(i).asInstanceOf[Long] + 1L)
-                case FooterAgg.SumOf(_) => if (v != null) {
-                  val add = v.asInstanceOf[Number].longValue()
-                  slots(i) = Long.box( // modular Long add = Spark non-ANSI
-                    (if (slots(i) == null) 0L
-                     else slots(i).asInstanceOf[Long]) + add)
-                }
-                case FooterAgg.MinOf(_, _) => if (v != null) {
-                  if (slots(i) == null ||
-                    ObjectFormat.cmpExact(v, slots(i)).exists(_ < 0))
-                    slots(i) = v
-                }
-                case FooterAgg.MaxOf(_, _) => if (v != null) {
-                  if (slots(i) == null ||
-                    ObjectFormat.cmpExact(v, slots(i)).exists(_ > 0))
-                    slots(i) = v
-                }
-              }
-              i += 1
-            }
-          }
-        } finally rd.close()
-        }
-        // a global aggregate over zero qualifying rows still owes one
-        // identity partial (COUNT 0, MIN/MAX/SUM null)
-        val rows = if (acc.isEmpty && groups.isEmpty) Seq(fresh()) else
-          acc.iterator.map { case (k, slots) => (k ++ slots).toArray }.toSeq
-        rows.iterator.map(vs => new GenericInternalRow(vs): InternalRow)
-      }
+      private val path = p.asInstanceOf[GraftObjectPartition].path
+      private val out: Iterator[Array[Any]] =
+        (if (groups.isEmpty) typedGlobal(path) else None)
+          .getOrElse(rowLoop(path)).iterator
       private var current: InternalRow = _
       override def next(): Boolean =
-        if (out.hasNext) { current = out.next(); true } else false
+        if (out.hasNext) { current = new GenericInternalRow(out.next()); true }
+        else false
       override def get(): InternalRow = current
       override def close(): Unit = ()
     }
+
+  /** The global aggregate of one object in typed loops over its
+    * segments, with no row built and no value boxed: the segments the
+    * vectorized reader would read, its row-fate mask, then one loop per
+    * aggregate. None when the object's generation lacks a column the
+    * aggregates read or stores one in a narrower type. */
+  private def typedGlobal(path: String): Option[Seq[Array[Any]]] =
+    ObjectFile.using(path) { obj =>
+      val schema = inner
+      val typed = schema.forall(f =>
+        obj.fieldIdx.get(f.name).exists(obj.schema(_).dataType == f.dataType))
+      if (!typed) None
+      else {
+        val residual = obj.residual(pushed)
+        val bytes = obj.segments(obj.needed(schema, residual))
+        val keep = ObjectFormat.rowFate(obj.rowCount, DeleteVectors.read(path),
+          residual, negated = false,
+          a => obj.fieldIdx.get(a).map(obj.schema(_).dataType),
+          a => obj.fieldIdx.get(a).map(i => obj.boxed(i, bytes(i))).orNull)
+        val segs = schema.fieldNames.map { c =>
+          val i = obj.fieldIdx(c)
+          c -> new ObjectFormat.Segment(bytes(i), obj.rowCount, obj.schema(i).dataType)
+        }.toMap
+        val accs = aggs.map(PartialAcc(_, schema))
+        accs.foreach(_.scan(segs, keep))
+        Some(PartialAcc.rows(Nil, accs))
+      }
+    }
+
+  /** Any aggregate of one object, a decoded row at a time. */
+  private def rowLoop(path: String): Seq[Array[Any]] = {
+    val schema = inner
+    val keyIdx = groups.map(schema.fieldIndex)
+    // group key -> one accumulator per aggregate
+    val acc = scala.collection.mutable.LinkedHashMap
+      .empty[List[Any], Seq[PartialAcc]]
+    val rd = new GraftObjectReader(path, fullSchema, schema, pushed)
+    try {
+      while (rd.next()) {
+        val row = rd.get()
+        val key = keyIdx.map(i => row.get(i, schema(i).dataType)).toList
+        acc.getOrElseUpdate(key, aggs.map(PartialAcc(_, schema))).foreach(_.add(row))
+      }
+    } finally rd.close()
+    if (acc.isEmpty && groups.isEmpty) PartialAcc.rows(Nil, aggs.map(PartialAcc(_, schema)))
+    else acc.iterator.flatMap { case (k, accs) => PartialAcc.rows(k, accs) }.toSeq
+  }
 }
 
 case class GraftObjectPartition(path: String) extends InputPartition

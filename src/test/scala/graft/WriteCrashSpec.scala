@@ -176,6 +176,34 @@ class WriteCrashSpec extends SparkSpec {
     assert(!new File(dir).listFiles().exists(_.getName.startsWith("_txn_v")))
   }
 
+  /** A table emptied by a statement that crashed after its commit point
+    * still resolves (the schema sidecar landed before it), reads empty,
+    * and takes the next INSERT. */
+  private def emptiedAndWritable(ns: String): Unit = {
+    assert(spark.sql(s"SELECT COUNT(*) FROM gcrash.$ns.t").collect()(0).getLong(0) == 0L)
+    spark.sql(s"INSERT INTO gcrash.$ns.t VALUES (7, 14)")
+    assert(readRows(s"$catalogRoot/$ns/t") == rowsOf(Seq(7L)))
+    assert(!new File(s"$catalogRoot/$ns/t").listFiles().exists(_.getName.startsWith("_txn_v")))
+  }
+
+  test("copy-on-write DELETE that empties the table, crashed after record: it reads empty and takes an INSERT") {
+    catalogTable("delrec")
+    crashWrite("delete.commit.recorded") {
+      spark.sql("DELETE FROM gcrash.delrec.t WHERE id >= 0")
+    }
+    emptiedAndWritable("delrec")
+  }
+
+  test("replace commit that empties the table, crashed after record: it reads empty and takes an INSERT") {
+    catalogTable("reprec")
+    // a column-to-column predicate is not storage-evaluable: the DELETE
+    // runs as a group-based replace
+    crashWrite("replace.commit.recorded") {
+      spark.sql("DELETE FROM gcrash.reprec.t WHERE v >= id")
+    }
+    emptiedAndWritable("reprec")
+  }
+
   // ---- task-attempt duplication (speculation / retry) ---------------
 
   private val schema = StructType(Seq(
