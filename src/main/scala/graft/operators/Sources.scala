@@ -241,9 +241,10 @@ object Sources extends QueryModule {
     * §2.4 row 1 / §4.1 row 3: "OSD returns one partial row per
     * object"): orders is rewritten into the object layout, then a
     * global MIN/MAX/COUNT is answered ENTIRELY from object footers via
-    * SupportsPushDownAggregates (GraftFooterAggScan — zero rows
-    * decoded; ObjectStoreFeaturesSpec proves the plan shape and that
-    * the answer survives body corruption). The oracle computes the
+    * SupportsPushDownAggregates (GraftPartialAggScan's footer rows —
+    * zero rows decoded; ObjectStoreFeaturesSpec proves every object
+    * answers from its footer and that the answer survives body
+    * corruption). The oracle computes the
     * same aggregate over the raw table: the storage path must change
     * the IO, never the answer. */
   private val objstoreAgg = (s: SparkSession, dir: String) => {

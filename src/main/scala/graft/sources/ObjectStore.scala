@@ -570,7 +570,7 @@ object ObjectFormat {
     * row, when the count is above 0][values]. `bb` reads the values in
     * their encoding — little-endian for top-level fixed-width types,
     * big-endian otherwise. */
-  final class Segment(bytes: Array[Byte], rowCount: Int, dt: DataType) {
+  final class Segment(bytes: Array[Byte], rowCount: Int, val dt: DataType) {
     val hasPres: Boolean = ByteBuffer.wrap(bytes).getInt(0) > 0
     val valOff: Int = 4 + (if (hasPres) rowCount else 0)
     val le: Boolean = fixedWidthLE(dt)
@@ -1260,6 +1260,11 @@ object ObjectFormat {
     }
   }
 
+  /** Pushed filters the footer does not prove TRUE for every row
+    * (zone-map full-accept): the ones a read of the object evaluates. */
+  def residual(pushed: Array[Filter], footer: Footer): Array[Filter] =
+    if (pushed.isEmpty) pushed else pushed.filterNot(provenForAll(_, footer))
+
   /** Per-object selectivity estimate for one pushed filter, from the
     * footer alone — the storage tier answering "how many rows will
     * this filter keep" with the same stats it uses to answer the
@@ -1560,9 +1565,8 @@ final class ObjectFile private (val path: String,
   lazy val fieldIdx: Map[String, Int] = schema.fieldNames.zipWithIndex.toMap
 
   /** Pushed filters the footer does not prove TRUE for every row
-    * (zone-map full-accept, [[ObjectFormat.provenForAll]]). */
-  def residual(pushed: Array[Filter]): Array[Filter] =
-    if (pushed.isEmpty) pushed else pushed.filterNot(provenForAll(_, footer))
+    * ([[ObjectFormat.residual]]). */
+  def residual(pushed: Array[Filter]): Array[Filter] = ObjectFormat.residual(pushed, footer)
 
   /** Columns a read touches: the projection ∪ the filters' references
     * (names this generation lacks — evolution, `_object` — need none). */
@@ -3082,10 +3086,8 @@ class GraftScanBuilder(fullSchema: StructType, path: String,
 
   private var accepted: Array[Filter] = Array.empty
   private var required: StructType = fullSchema
-  private var pushedAggs: Option[Seq[FooterAgg]] = None
-  private var aggFooters: Seq[ObjectFormat.Footer] = Nil
-  // None = footer tier; Some(groupCols) = reader-partial tier
-  private var readerAggGroups: Option[Seq[String]] = None
+  // the pushed aggregation: its GROUP BY columns and its aggregates
+  private var pushedAgg: Option[(Seq[String], Seq[FooterAgg])] = None
   private var limit: Option[Int] = None
   private var topN: Option[PushedTopN] = None
 
@@ -3106,17 +3108,13 @@ class GraftScanBuilder(fullSchema: StructType, path: String,
 
   /** Storage-side aggregation — the reference's defining behavior
     * (SURVEY §2.4 "agg predicates … OSD returns one partial row per
-    * object", §4.1 row 3), in two tiers:
-    *
-    *  1. FOOTER tier — a global (no GROUP BY, no pushed filters)
-    *     MIN/MAX/COUNT(*)/COUNT(col) is answered ENTIRELY from object
-    *     footers: one partial row per object, zero rows decoded.
-    *  2. READER tier — with pushed filters, a GROUP BY on decodable
-    *     columns, or a SUM (no footer sums), the aggregation runs
-    *     INSIDE the object reader: decode → filter → accumulate, one
-    *     partial row per object per group leaves storage. This is the
-    *     reference's `--use-cls` headline (select+project+aggregate
-    *     evaluated in the storage server; only partials travel).
+    * object", §4.1 row 3): every candidate object answers with its
+    * partial rows, one per group, and only those leave storage
+    * ([[GraftPartialAggScan]]). An object whose footer holds the answer
+    * gives it at planning, with no body byte read; every other object
+    * aggregates inside its reader — decode → filter → accumulate, the
+    * reference's `--use-cls` headline (select+project+aggregate
+    * evaluated in the storage server; only partials travel).
     *
     * Pushable aggregates: MIN/MAX of a column or of
     * `CAST(timestamp column AS DATE)`, COUNT(*), COUNT(col), SUM of a
@@ -3139,8 +3137,8 @@ class GraftScanBuilder(fullSchema: StructType, path: String,
     * sum-of-counts — partial pushdown, supportCompletePushDown stays
     * false). Anything not exactly reproducible (distinct counts, AVG
     * over doubles, SUM of a floating column, whose result depends on
-    * the order of the adds, NaN-disabled footer stats in the footer
-    * tier) is refused and falls back to the ordinary scan. */
+    * the order of the adds) is refused and falls back to the ordinary
+    * scan. */
   override def pushAggregation(aggregation: Aggregation): Boolean = {
     // Per-read opt-out (`option("agg.pushdown", "false")`): callers
     // exercising a DIFFERENT aggregate-elimination tier (e.g. the
@@ -3228,45 +3226,12 @@ class GraftScanBuilder(fullSchema: StructType, path: String,
     val groupCols = aggregation.groupByExpressions().toSeq.map(colOf)
     if (groupCols.exists(_.isEmpty)) return false
     val groups = groupCols.flatten
-    def atomic(c: String): Boolean = fullSchema(c).dataType match {
-      case _: ArrayType | _: MapType | _: StructType => false
-      case _ => true
-    }
     // BinaryType excluded: Array[Byte] has identity equality, which
     // would break the reader's group-key map
-    if (groups.exists(c => !atomic(c) ||
-      fullSchema(c).dataType == BinaryType)) return false
-
-    val footerTier = accepted.isEmpty && groups.isEmpty &&
-      aggs.forall(_.footerAnswerable) &&
-      // string footer bounds may be TRUNCATED (conservative for
-      // pruning, inexact for aggregates) — string MIN/MAX always
-      // takes the reader tier
-      aggs.forall {
-        case FooterAgg.MinOf(_, dt) => ObjectFormat.statKind(dt) != 3
-        case FooterAgg.MaxOf(_, dt) => ObjectFormat.statKind(dt) != 3
-        case _ => true
-      } && {
-        // a MIN/MAX column must carry stats in every non-empty object
-        // whose rows aren't all null for it (stats absent + non-null
-        // rows ⇒ a NaN disabled them ⇒ refuse, don't approximate)
-        val need = aggs.collect {
-          case FooterAgg.MinOf(c, _) => c
-          case FooterAgg.MaxOf(c, _) => c
-        }.distinct
-        val objs = GraftObjectTable.listObjects(path)
-        val footers = objs.map(ObjectFormat.readFooter)
-        // merge-on-read: a DV'd object's footer OVER-counts (deleted
-        // ordinals are still in rowCount/stats) — refuse the footer
-        // answer and fall back to a real scan, which applies the DV
-        val ok = objs.forall(p => !DeleteVectors.hasValid(p)) &&
-          footers.filter(_.rowCount > 0).forall { f =>
-            need.forall(c => f.stats.get(c).exists(s =>
-              s.min != null || s.nullCount == f.rowCount))
-          }
-        if (ok) { aggFooters = footers }
-        ok
-      }
+    if (groups.exists(c => fullSchema(c).dataType match {
+      case _: ArrayType | _: MapType | _: StructType | BinaryType => true
+      case _ => false
+    })) return false
     // Clustered-layout interplay: when the GROUP BY is keyed on a
     // VERIFIED cluster column, the clustered scan's
     // KeyGroupedPartitioning gives Spark a ZERO-exchange aggregate —
@@ -3295,19 +3260,7 @@ class GraftScanBuilder(fullSchema: StructType, path: String,
         if (clustered.isDefined) return false
       }
     }
-    if (footerTier) {
-      pushedAggs = Some(aggs)
-    } else {
-      // reader tier: MIN/MAX need exact in-reader compares, which the
-      // decoder guarantees for every atomic type it surfaces; make
-      // sure each MIN/MAX column is atomic too
-      val mmCols = aggs.collect {
-        case FooterAgg.MinOf(c, _) => c; case FooterAgg.MaxOf(c, _) => c
-      }
-      if (mmCols.exists(!atomic(_))) return false
-      pushedAggs = Some(aggs)
-      readerAggGroups = Some(groups)
-    }
+    pushedAgg = Some((groups, aggs))
     true
   }
 
@@ -3346,11 +3299,10 @@ class GraftScanBuilder(fullSchema: StructType, path: String,
   private def maxBytesPerTrigger: Option[Long] =
     Option(options.get("maxBytesPerTrigger")).map(_.toLong)
 
-  override def build(): Scan = (pushedAggs, readerAggGroups) match {
-    case (Some(aggs), None) => new GraftFooterAggScan(aggs, aggFooters, path)
-    case (Some(aggs), Some(groups)) =>
+  override def build(): Scan = pushedAgg match {
+    case Some((groups, aggs)) =>
       new GraftPartialAggScan(fullSchema, accepted, groups, aggs, path)
-    case _ => new GraftObjectScan(fullSchema, required, accepted, path,
+    case None => new GraftObjectScan(fullSchema, required, accepted, path,
       maxObjectsPerTrigger, limit, topN,
       Option(options.get("clusteredBy")), maxBytesPerTrigger,
       Option(options.get("clusterWidth")).map(_.toLong),
@@ -3368,7 +3320,7 @@ object GraftScanBuilder {
     * before a byte of any body is read (row-level TABLESAMPLE still
     * decodes everything). Batch reads only; aggregate pushdown is
     * held off under sampling so the sampled row stream is what Spark
-    * aggregates (a footer-tier answer would ignore the sample). */
+    * aggregates (a footer answer would ignore the sample). */
   def parseSample(options: CaseInsensitiveStringMap): Option[(Int, Int)] =
     Option(options.get("sample.objects")).map { s =>
       val parts = s.split("/")
@@ -3395,12 +3347,11 @@ object GraftScanBuilder {
 final case class PushedTopN(col: String, descending: Boolean,
     nullsFirst: Boolean, k: Int)
 
-/** A pushed aggregate. MIN/MAX/COUNT(*)/COUNT(col) are answerable from
-  * footers; every kind is answerable in the reader tier. MIN/MAX are
-  * tagged with the column's Spark type so the partial row surfaces
-  * values in the column's own width (footer longs narrow back to
-  * int/date, doubles to float — both exact). Settings a partial depends
-  * on (ANSI overflow, the session time zone) are captured at planning
+/** A pushed aggregate. Every kind is answerable in the reader;
+  * MIN/MAX/COUNT(*)/COUNT(col) often from an object's footer too. MIN/MAX
+  * are tagged with the column's Spark type so the partial row surfaces
+  * values in the column's own width. Settings a partial depends on
+  * (ANSI overflow, the session time zone) are captured at planning
   * time, inside the aggregate. */
 sealed trait FooterAgg {
   /** The partial-row column this aggregate fills. A decimal SUM's field
@@ -3428,14 +3379,38 @@ sealed trait FooterAgg {
     case FooterAgg.MaxDateOf(c, _) => Seq(c)
     case FooterAgg.CountStar => Nil
   }
-  /** Answerable from footer stats alone (footers carry no sums). */
-  def footerAnswerable: Boolean = this match {
-    case FooterAgg.MinOf(_, _) | FooterAgg.MaxOf(_, _) | FooterAgg.CountStar |
-        FooterAgg.CountOf(_) => true
-    case _ => false
+  /** The partial over every row of an object, from its footer alone;
+    * None where the footer cannot give it exactly: footers carry no
+    * sums, string bounds may be truncated, and a NaN leaves a floating
+    * column without bounds. */
+  def fromFooter(f: ObjectFormat.Footer): Option[Any] = this match {
+    case FooterAgg.CountStar => Some(Long.box(f.rowCount.toLong))
+    case FooterAgg.CountOf(c) =>
+      // no stats entry ⇔ the column postdates this object's generation
+      // (footers stat every column of their own schema) ⇔ all null here
+      Some(Long.box(f.stats.get(c).fold(0L)(s => (f.rowCount - s.nullCount).toLong)))
+    case FooterAgg.MinOf(c, dt) => FooterAgg.bound(f, c, dt)(_.min)
+    case FooterAgg.MaxOf(c, dt) => FooterAgg.bound(f, c, dt)(_.max)
+    case _ => None
   }
 }
 object FooterAgg {
+  /** Column `c`'s footer bound in its Spark type `dt`: stats hold longs
+    * and doubles, which narrow back to int/date and float exactly. */
+  private def bound(f: ObjectFormat.Footer, c: String, dt: DataType)(
+      side: ObjectFormat.ColStats => Any): Option[Any] =
+    if (ObjectFormat.statKind(dt) == 3) None
+    else f.stats.get(c) match {
+      case None => Some(null)
+      case Some(s) if s.nullCount == f.rowCount => Some(null)
+      case Some(s) if s.min != null => Some((side(s), dt) match {
+        case (l: java.lang.Long, IntegerType | DateType) => Int.box(l.toInt)
+        case (d: java.lang.Double, FloatType) => Float.box(d.toFloat)
+        case (v, _) => v
+      })
+      case _ => None
+    }
+
   final case class MinOf(column: String, dt: DataType) extends FooterAgg
   final case class MaxOf(column: String, dt: DataType) extends FooterAgg
   case object CountStar extends FooterAgg
@@ -3469,20 +3444,23 @@ object FooterAgg {
   * whatever digits the JDK's `toString` chooses. For an integral `x`,
   * `u = x · 10^s` when `|x| < 10^(p-s)`. NaN, ±Inf, overflow and
   * inexact doubles all go to Spark's `Cast`, which gives Spark's value,
-  * null or error. */
-final class DecimalCast(from: DataType, to: DecimalType) {
+  * null or error. `stored` is the type `x` has in a segment: `from`, or
+  * the narrower type an older object keeps under a widened column (an
+  * int under a bigint, a float under a double). */
+final class DecimalCast(from: DataType, to: DecimalType, stored: DataType) {
   import DecimalCast._
   private val p = to.precision
   private val s = to.scale
-  private val kind = from match {
-    case DoubleType => 0
-    case LongType => 1
-    case IntegerType => 2
-    case other => throw new IllegalArgumentException(
-      s"DecimalCast: cannot cast $other exactly")
+  private val kind = (from, stored) match {
+    case (DoubleType, DoubleType) => 0
+    case (LongType, LongType) => 1
+    case (IntegerType | LongType, IntegerType) => 2
+    case (DoubleType, FloatType) => 3
+    case _ => throw new IllegalArgumentException(
+      s"DecimalCast: cannot cast $from stored as $stored exactly")
   }
-  /** Bytes one value of the source type takes in a segment. */
-  val width: Int = if (kind == 2) 4 else 8
+  /** Bytes one stored value takes in a segment. */
+  val width: Int = if (kind >= 2) 4 else 8
   // 10^s fits a long (and is exact as a double) only up to s = 18
   private val fast = s <= MaxPrecision
   private val powL = if (fast) Pow10(s) else 0L
@@ -3507,7 +3485,7 @@ final class DecimalCast(from: DataType, to: DecimalType) {
   }
   private def fastIntegral(x: Long): Long =
     if (x > -maxIntegral && x < maxIntegral) x * powL else Null
-  private def boxed(x: Long): Any = if (kind == 2) Int.box(x.toInt) else Long.box(x)
+  private def boxed(x: Long): Any = if (from == IntegerType) Int.box(x.toInt) else Long.box(x)
 
   /** The cast's value (null for a null input or a null cast). */
   def decimal(v: Any): Decimal = v match {
@@ -3532,20 +3510,13 @@ final class DecimalCast(from: DataType, to: DecimalType) {
     val u = fastIntegral(x)
     if (u != Null) u else unscaled(sparkCast(boxed(x)))
   }
-  /** Unscaled cast of the source value at `pos` in a segment's values. */
+  /** Unscaled cast of the stored value at `pos` in a segment's values. */
   def at(bb: ByteBuffer, pos: Int): Long = kind match {
     case 0 => ofDouble(bb.getDouble(pos))
     case 1 => ofIntegral(bb.getLong(pos))
-    case _ => ofIntegral(bb.getInt(pos).toLong)
+    case 2 => ofIntegral(bb.getInt(pos).toLong)
+    case _ => ofDouble(bb.getFloat(pos).toDouble)
   }
-  /** Unscaled cast of a row's value at ordinal `o`. */
-  def of(row: InternalRow, o: Int): Long =
-    if (row.isNullAt(o)) Null
-    else kind match {
-      case 0 => ofDouble(row.getDouble(o))
-      case 1 => ofIntegral(row.getLong(o))
-      case _ => ofIntegral(row.getInt(o).toLong)
-    }
 }
 
 object DecimalCast {
@@ -3562,20 +3533,22 @@ object DecimalCast {
   val sources: Set[DataType] = Set(DoubleType, LongType, IntegerType)
 }
 
-/** One pushed aggregate's state in the reader tier, folded either one
-  * row at a time (the row loop: GROUP BY, or an object whose generation
-  * lacks a referenced column or stores it narrower) or over a whole
-  * object's segments (the typed global loop). Every aggregate merges
-  * associatively in Spark's final aggregate, so an accumulator may emit
-  * several partials: a decimal SUM does, to keep each one inside its
-  * field's precision. */
+/** One pushed aggregate's state over one object, kept per slot: a slot
+  * is one group's index, and a global aggregate has one. The reader
+  * walks the object once; `scan` folds each kept row's value into its
+  * row's slot in one typed loop over the column's segment, reading the
+  * values as stored: a column an older object stores narrower (an int
+  * under a bigint, a float under a double) is read at its stored width,
+  * and partials are in the table's type. A column the object predates
+  * reads as all null. Every aggregate merges associatively in Spark's
+  * final aggregate, so a slot may emit several partials: a decimal SUM
+  * does, to keep each one inside its field's precision. */
 private[sources] sealed abstract class PartialAcc {
-  /** Fold the row loop's current row. */
-  def add(row: InternalRow): Unit
-  /** Fold the kept rows of one object, reading `seg(column)`. */
-  def scan(seg: String => ObjectFormat.Segment, keep: Array[Boolean]): Unit
-  /** Every partial, oldest first; at least one. */
-  def partials: Seq[Any]
+  /** Fold row r into slot `slot(r)`, for every r whose slot is not -1,
+    * reading `seg(column)`: null where the object predates the column. */
+  def scan(seg: String => ObjectFormat.Segment, slot: Array[Int]): Unit
+  /** Slot k's partials, oldest first; at least one. */
+  def partials(k: Int): Seq[Any]
   /** The partial of no rows, which pads a row with fewer partials. */
   def identity: Any = null
 }
@@ -3583,47 +3556,43 @@ private[sources] sealed abstract class PartialAcc {
 private[sources] object PartialAcc {
   import ObjectFormat.Segment
 
-  /** A fresh accumulator over rows of schema `inner`, which holds every
-    * column the aggregate reads (in the table's types). */
-  def apply(a: FooterAgg, inner: StructType): PartialAcc = {
-    def ord(c: String) = inner.fieldIndex(c)
-    def typeOf(c: String) = inner(c).dataType
-    a match {
-      case FooterAgg.CountStar => new Count(None, -1)
-      case FooterAgg.CountOf(c) => new Count(Some(c), ord(c))
-      case FooterAgg.SumOf(c, ansi) => new LongSum(c, ord(c), typeOf(c) == IntegerType, ansi)
-      case FooterAgg.SumDecimal(fs, dt) =>
-        new DecimalSum(fs.map(f => (f.column, ord(f.column),
-          new DecimalCast(typeOf(f.column), f.dt))), dt)
-      case FooterAgg.MinOf(c, dt) => new MinMax(c, ord(c), dt, max = false)
-      case FooterAgg.MaxOf(c, dt) => new MinMax(c, ord(c), dt, max = true)
-      case FooterAgg.MinDateOf(c, zone) =>
-        new DateBound(c, ord(c), typeOf(c), zone, max = false)
-      case FooterAgg.MaxDateOf(c, zone) =>
-        new DateBound(c, ord(c), typeOf(c), zone, max = true)
-    }
+  /** A fresh accumulator of `slots` slots over a table of schema `table`. */
+  def apply(a: FooterAgg, table: StructType, slots: Int): PartialAcc = a match {
+    case FooterAgg.CountStar => new Count(None, slots)
+    case FooterAgg.CountOf(c) => new Count(Some(c), slots)
+    case FooterAgg.SumOf(c, ansi) => new LongSum(c, ansi, slots)
+    case FooterAgg.SumDecimal(fs, dt) =>
+      new DecimalSum(fs.map(f => (f, table(f.column).dataType)), dt, slots)
+    case FooterAgg.MinOf(c, dt) => new MinMax(c, dt, max = false, slots)
+    case FooterAgg.MaxOf(c, dt) => new MinMax(c, dt, max = true, slots)
+    case FooterAgg.MinDateOf(c, zone) =>
+      new DateBound(c, table(c).dataType, zone, max = false, slots)
+    case FooterAgg.MaxDateOf(c, zone) =>
+      new DateBound(c, table(c).dataType, zone, max = true, slots)
   }
 
-  /** The partial rows of one group: the i-th row holds every
-    * accumulator's i-th partial, or its identity past its last (a GROUP
-    * BY without aggregates still owes its key one row). */
-  def rows(key: Seq[Any], accs: Seq[PartialAcc]): Seq[Array[Any]] = {
-    val ps = accs.map(_.partials)
+  /** The partial rows of slot k, each led by its group `key`: the i-th
+    * row holds every accumulator's i-th partial, or its identity past
+    * its last (a GROUP BY without aggregates still owes its key one row). */
+  def rows(key: Seq[Any], accs: Seq[PartialAcc], k: Int): Seq[Array[Any]] = {
+    val ps = accs.map(_.partials(k))
     (0 until ps.foldLeft(1)(_ max _.length)).map { i =>
       (key ++ ps.zip(accs).map { case (p, a) =>
         if (i < p.length) p(i) else a.identity }).toArray
     }
   }
 
-  /** Walk one segment's values: `f(pos)` at every present, kept row;
-    * `pos` advances `width` bytes past every present value. */
-  @inline private def present(seg: Segment, keep: Array[Boolean], width: Int)(
-      f: Int => Unit): Unit = {
+  /** Walk one segment's values: `f(slot, pos)` at every present value of
+    * a row with a slot; `pos` advances `width` bytes past every present
+    * value. */
+  @inline private def present(seg: Segment, slot: Array[Int], width: Int)(
+      f: (Int, Int) => Unit): Unit = {
     var p = seg.valOff
     var r = 0
-    while (r < keep.length) {
+    while (r < slot.length) {
       if (seg.presentAt(r)) {
-        if (keep(r)) f(p)
+        val k = slot(r)
+        if (k >= 0) f(k, p)
         p += width
       }
       r += 1
@@ -3631,184 +3600,181 @@ private[sources] object PartialAcc {
   }
 
   /** COUNT(*) (`col` None) or COUNT(col). */
-  final class Count(col: Option[String], o: Int) extends PartialAcc {
-    private var n = 0L
-    def add(row: InternalRow): Unit = if (o < 0 || !row.isNullAt(o)) n += 1
-    def scan(seg: String => Segment, keep: Array[Boolean]): Unit = {
+  final class Count(col: Option[String], slots: Int) extends PartialAcc {
+    private val n = new Array[Long](slots)
+    def scan(seg: String => Segment, slot: Array[Int]): Unit = {
       val s = col.map(seg).orNull
-      var r = 0
-      while (r < keep.length) {
-        if (keep(r) && (s == null || s.presentAt(r))) n += 1
-        r += 1
+      if (col.isEmpty || s != null) {
+        var r = 0
+        while (r < slot.length) {
+          val k = slot(r)
+          if (k >= 0 && (s == null || s.presentAt(r))) n(k) += 1
+          r += 1
+        }
       }
     }
-    def partials: Seq[Any] = Seq(Long.box(n))
+    def partials(k: Int): Seq[Any] = Seq(Long.box(n(k)))
     override def identity: Any = Long.box(0L)
   }
 
   /** SUM of a Long or Int column: under ANSI an overflow raises Spark's
     * ARITHMETIC_OVERFLOW, as the unpushed sum does; otherwise the add
     * wraps, as Spark's does. */
-  final class LongSum(col: String, o: Int, int: Boolean, ansi: Boolean)
-      extends PartialAcc {
-    private var s = 0L
-    private var seen = false
-    @inline private def plus(v: Long): Unit = {
-      s = if (ansi) org.apache.spark.sql.catalyst.util.MathUtils.addExact(s, v)
-        else s + v
-      seen = true
+  final class LongSum(col: String, ansi: Boolean, slots: Int) extends PartialAcc {
+    private val s = new Array[Long](slots)
+    private val seen = new Array[Boolean](slots)
+    @inline private def plus(k: Int, v: Long): Unit = {
+      s(k) = if (ansi) org.apache.spark.sql.catalyst.util.MathUtils.addExact(s(k), v)
+        else s(k) + v
+      seen(k) = true
     }
-    def add(row: InternalRow): Unit =
-      if (!row.isNullAt(o)) plus(if (int) row.getInt(o).toLong else row.getLong(o))
-    def scan(seg: String => Segment, keep: Array[Boolean]): Unit = {
+    def scan(seg: String => Segment, slot: Array[Int]): Unit = {
       val sg = seg(col)
-      val bb = sg.bb
-      if (int) present(sg, keep, 4)(p => plus(bb.getInt(p).toLong))
-      else present(sg, keep, 8)(p => plus(bb.getLong(p)))
+      if (sg != null) {
+        val bb = sg.bb
+        if (sg.dt == IntegerType) present(sg, slot, 4)((k, p) => plus(k, bb.getInt(p).toLong))
+        else present(sg, slot, 8)((k, p) => plus(k, bb.getLong(p)))
+      }
     }
-    def partials: Seq[Any] = Seq(if (seen) Long.box(s) else null)
+    def partials(k: Int): Seq[Any] = Seq(if (seen(k)) Long.box(s(k)) else null)
   }
 
   /** SUM of one decimal cast, or of the product of two, on exact
-    * unscaled longs. Spark casts each partial to the summed term's type
-    * `dt` before its final merge, so a partial must stay below 10^p:
-    * when the next term would take the running sum out of that range,
-    * the sum so far becomes a partial of its own and a fresh one starts.
-    * A product multiplies the unscaled factors: its scale is s1 + s2,
-    * so nothing rounds. As in Spark's `Multiply`, the right factor is
-    * cast only when the left one is not null. */
-  final class DecimalSum(factors: Seq[(String, Int, DecimalCast)], dt: DecimalType)
-      extends PartialAcc {
+    * unscaled longs; each factor comes with its column's table type.
+    * Spark casts each partial to the summed term's type `dt` before its
+    * final merge, so a partial must stay below 10^p: when the next term
+    * would take a slot's running sum out of that range, the sum so far
+    * becomes a partial of its own and a fresh one starts. A product
+    * multiplies the unscaled factors: its scale is s1 + s2, so nothing
+    * rounds. As in Spark's `Multiply`, the right factor is cast only
+    * when the left one is not null. */
+  final class DecimalSum(factors: Seq[(FooterAgg.CastTo, DataType)], dt: DecimalType,
+      slots: Int) extends PartialAcc {
     import DecimalCast.Null
     private val limit = DecimalCast.pow10(dt.precision)
-    private var s = 0L
-    private var seen = false
-    private val done = scala.collection.mutable.ArrayBuffer.empty[Any]
+    private val s = new Array[Long](slots)
+    private val seen = new Array[Boolean](slots)
+    private val done = Array.fill(slots)(Seq.empty[Any])
     private def partial(u: Long): Decimal = Decimal(u, dt.precision, dt.scale)
-    @inline private def plus(u: Long): Unit =
-      if (!seen) { s = u; seen = true }
+    @inline private def plus(k: Int, u: Long): Unit =
+      if (!seen(k)) { s(k) = u; seen(k) = true }
       else {
-        val n = s + u // |s|, |u| < 10^18: no long overflow
-        if (n <= -limit || n >= limit) { done += partial(s); s = u } else s = n
+        val n = s(k) + u // |s|, |u| < 10^18: no long overflow
+        if (n <= -limit || n >= limit) { done(k) :+= partial(s(k)); s(k) = u }
+        else s(k) = n
       }
-    private val (c0, o0, cast0) = factors.head
-    private val second = factors.lift(1)
 
-    def add(row: InternalRow): Unit = {
-      val a = cast0.of(row, o0)
-      if (a != Null) second match {
-        case None => plus(a)
-        case Some((_, o1, cast1)) =>
-          val b = cast1.of(row, o1)
-          if (b != Null) plus(Math.multiplyExact(a, b))
+    def scan(seg: String => Segment, slot: Array[Int]): Unit = {
+      val segs = factors.map { case (f, _) => seg(f.column) }
+      val casts = factors.zip(segs).map { case ((f, from), sg) =>
+        if (sg == null) null else new DecimalCast(from, f.dt, sg.dt)
       }
-    }
-    def scan(seg: String => Segment, keep: Array[Boolean]): Unit = {
-      val s0 = seg(c0)
+      val (s0, cast0) = (segs.head, casts.head)
+      if (s0 == null) return // the left factor is null in every row
       val bb0 = s0.bb
-      second match {
-        case None => present(s0, keep, cast0.width) { p =>
-          val a = cast0.at(bb0, p)
-          if (a != Null) plus(a)
-        }
-        case Some((c1, _, cast1)) =>
-          val s1 = seg(c1)
-          val bb1 = s1.bb
-          var p0 = s0.valOff
-          var p1 = s1.valOff
-          var r = 0
-          while (r < keep.length) {
-            val has0 = s0.presentAt(r)
-            val has1 = s1.presentAt(r)
-            if (keep(r) && has0) {
-              val a = cast0.at(bb0, p0)
-              if (a != Null && has1) {
-                val b = cast1.at(bb1, p1)
-                if (b != Null) plus(Math.multiplyExact(a, b))
-              }
+      if (segs.length == 1) present(s0, slot, cast0.width) { (k, p) =>
+        val a = cast0.at(bb0, p)
+        if (a != Null) plus(k, a)
+      } else {
+        val (s1, cast1) = (segs(1), casts(1))
+        var p0 = s0.valOff
+        var p1 = if (s1 == null) 0 else s1.valOff
+        var r = 0
+        while (r < slot.length) {
+          val has0 = s0.presentAt(r)
+          val has1 = s1 != null && s1.presentAt(r)
+          val k = slot(r)
+          if (k >= 0 && has0) {
+            val a = cast0.at(bb0, p0)
+            if (a != Null && has1) {
+              val b = cast1.at(s1.bb, p1)
+              if (b != Null) plus(k, Math.multiplyExact(a, b))
             }
-            if (has0) p0 += cast0.width
-            if (has1) p1 += cast1.width
-            r += 1
           }
+          if (has0) p0 += cast0.width
+          if (has1) p1 += cast1.width
+          r += 1
+        }
       }
     }
-    def partials: Seq[Any] = done.toSeq :+ (if (seen) partial(s) else null)
+    def partials(k: Int): Seq[Any] = done(k) :+ (if (seen(k)) partial(s(k)) else null)
   }
 
-  /** MIN or MAX of a column in the order of [[ObjectFormat.cmpExact]].
-    * Fixed-width numbers and strings scan typed; other types decode
-    * boxed. */
-  final class MinMax(col: String, o: Int, dt: DataType, max: Boolean)
+  /** MIN or MAX of a statable column (integral, temporal, floating or
+    * string) in Spark's order: floating values compare as
+    * `SQLOrderingUtil` does (-0.0 equals 0.0, NaN is greatest), and of
+    * equal values the first row's is kept. */
+  final class MinMax(col: String, dt: DataType, max: Boolean, slots: Int)
       extends PartialAcc {
-    private var best: Any = null
-    private def offer(v: Any): Unit =
-      if (best == null ||
-        ObjectFormat.cmpExact(v, best).exists(c => if (max) c > 0 else c < 0))
-        best = v
-    def add(row: InternalRow): Unit = if (!row.isNullAt(o)) offer(row.get(o, dt))
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+    private val best = new Array[Any](slots)
     @inline private def wins(c: Int): Boolean = if (max) c > 0 else c < 0
-    def scan(seg: String => Segment, keep: Array[Boolean]): Unit = {
+    /** Box every found slot's winner. */
+    private def fill(found: Array[Boolean])(v: Int => Any): Unit = {
+      var k = 0
+      while (k < slots) { if (found(k)) best(k) = v(k); k += 1 }
+    }
+    def scan(seg: String => Segment, slot: Array[Int]): Unit = {
       val sg = seg(col)
+      if (sg == null) return
       val bb = sg.bb
-      var found = false
-      dt match {
+      val found = new Array[Boolean](slots)
+      sg.dt match {
         case LongType | TimestampType | TimestampNTZType =>
-          var b = 0L
-          present(sg, keep, 8) { p =>
+          val b = new Array[Long](slots)
+          present(sg, slot, 8) { (k, p) =>
             val v = bb.getLong(p)
-            if (!found || wins(java.lang.Long.compare(v, b))) { b = v; found = true }
+            if (!found(k) || wins(java.lang.Long.compare(v, b(k)))) { b(k) = v; found(k) = true }
           }
-          if (found) offer(Long.box(b))
+          fill(found)(k => Long.box(b(k)))
         case IntegerType | DateType =>
-          var b = 0
-          present(sg, keep, 4) { p =>
+          val b = new Array[Int](slots)
+          present(sg, slot, 4) { (k, p) =>
             val v = bb.getInt(p)
-            if (!found || wins(Integer.compare(v, b))) { b = v; found = true }
+            if (!found(k) || wins(Integer.compare(v, b(k)))) { b(k) = v; found(k) = true }
           }
-          if (found) offer(Int.box(b))
+          fill(found)(k => if (dt == LongType) Long.box(b(k).toLong) else Int.box(b(k)))
         case DoubleType =>
-          var b = 0.0
-          present(sg, keep, 8) { p =>
+          val b = new Array[Double](slots)
+          present(sg, slot, 8) { (k, p) =>
             val v = bb.getDouble(p)
-            if (!found || wins(java.lang.Double.compare(v, b))) { b = v; found = true }
+            if (!found(k) || wins(SQLOrderingUtil.compareDoubles(v, b(k)))) {
+              b(k) = v; found(k) = true
+            }
           }
-          if (found) offer(Double.box(b))
+          fill(found)(k => Double.box(b(k)))
         case FloatType =>
-          var b = 0.0f
-          present(sg, keep, 4) { p =>
+          val b = new Array[Float](slots)
+          present(sg, slot, 4) { (k, p) =>
             val v = bb.getFloat(p)
-            if (!found || wins(java.lang.Float.compare(v, b))) { b = v; found = true }
+            if (!found(k) || wins(SQLOrderingUtil.compareFloats(v, b(k)))) {
+              b(k) = v; found(k) = true
+            }
           }
-          if (found) offer(Float.box(b))
+          fill(found)(k => if (dt == DoubleType) Double.box(b(k).toDouble) else Float.box(b(k)))
         case StringType =>
           // [length][bytes] values, compared in place as unsigned bytes
           val arr = bb.array()
-          var (bOff, bLen) = (0, 0)
+          val (bOff, bLen) = (new Array[Int](slots), new Array[Int](slots))
           var p = sg.valOff
           var r = 0
-          while (r < keep.length) {
+          while (r < slot.length) {
             if (sg.presentAt(r)) {
               val len = bb.getInt(p)
-              if (keep(r) && (!found ||
-                  wins(compareBytes(arr, p + 4, len, bOff, bLen)))) {
-                bOff = p + 4; bLen = len; found = true
+              val k = slot(r)
+              if (k >= 0 && (!found(k) ||
+                  wins(compareBytes(arr, p + 4, len, bOff(k), bLen(k))))) {
+                bOff(k) = p + 4; bLen(k) = len; found(k) = true
               }
               p += 4 + len
             }
             r += 1
           }
-          if (found) offer(UTF8String.fromBytes(util.Arrays.copyOfRange(arr, bOff, bOff + bLen)))
-        case _ =>
-          val vs = sg.boxed()
-          var r = 0
-          while (r < keep.length) {
-            if (keep(r) && vs(r) != null) offer(vs(r))
-            r += 1
-          }
+          fill(found)(k =>
+            UTF8String.fromBytes(util.Arrays.copyOfRange(arr, bOff(k), bOff(k) + bLen(k))))
       }
     }
-    def partials: Seq[Any] = Seq(best)
+    def partials(k: Int): Seq[Any] = Seq(best(k))
   }
 
   /** Unsigned lexicographic order of two byte ranges of one array — the
@@ -3828,106 +3794,60 @@ private[sources] object PartialAcc {
     * timestamp wherever the zone's offset is fixed (and always for
     * TIMESTAMP_NTZ, read in UTC): there the extreme micros convert
     * once, at the end; other zones convert every row. */
-  final class DateBound(col: String, o: Int, tsType: DataType, zone: String,
-      max: Boolean) extends PartialAcc {
+  final class DateBound(col: String, tsType: DataType, zone: String,
+      max: Boolean, slots: Int) extends PartialAcc {
     private val zid =
       if (tsType == TimestampNTZType) java.time.ZoneOffset.UTC
       else org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(zone)
     private val fixed = zid.getRules.isFixedOffset
     private def days(micros: Long): Int =
       org.apache.spark.sql.catalyst.util.DateTimeUtils.microsToDays(micros, zid)
-    private var best = 0L
-    private var found = false
-    @inline private def offer(micros: Long): Unit = {
-      val k = if (fixed) micros else days(micros).toLong
-      if (!found || (if (max) k > best else k < best)) { best = k; found = true }
-    }
-    def add(row: InternalRow): Unit = if (!row.isNullAt(o)) offer(row.getLong(o))
-    def scan(seg: String => Segment, keep: Array[Boolean]): Unit = {
+    private val best = new Array[Long](slots)
+    private val found = new Array[Boolean](slots)
+    def scan(seg: String => Segment, slot: Array[Int]): Unit = {
       val sg = seg(col)
-      val bb = sg.bb
-      present(sg, keep, 8)(p => offer(bb.getLong(p)))
+      if (sg != null) {
+        val bb = sg.bb
+        present(sg, slot, 8) { (k, p) =>
+          val micros = bb.getLong(p)
+          val v = if (fixed) micros else days(micros).toLong
+          if (!found(k) || (if (max) v > best(k) else v < best(k))) {
+            best(k) = v; found(k) = true
+          }
+        }
+      }
     }
-    def partials: Seq[Any] = Seq(
-      if (!found) null else Int.box(if (fixed) days(best) else best.toInt))
+    def partials(k: Int): Seq[Any] = Seq(
+      if (!found(k)) null else Int.box(if (fixed) days(best(k)) else best(k).toInt))
   }
 }
 
-/** One partial row per object, computed from footers ALREADY read at
-  * planning time — the executor receives literal values and never
-  * opens an object file, let alone decodes a row (ObjectStoreSpec
-  * proves it by corrupting object bodies and aggregating anyway).
-  * All per-object rows ride in a single InputPartition: they are
-  * metadata-sized (objects × aggregates), and Spark's final merge is
-  * the cross-object combine. */
-class GraftFooterAggScan(aggs: Seq[FooterAgg],
-    footers: Seq[ObjectFormat.Footer], path: String)
-    extends Scan with Batch {
-
-  private def narrow(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _) => null
-    case (l: java.lang.Long, IntegerType | DateType) => Int.box(l.toInt)
-    case (d: java.lang.Double, FloatType) => Float.box(d.toFloat)
-    case (x, _) => x
-  }
-
-  private def partialRow(f: ObjectFormat.Footer): Array[Any] = aggs.map {
-    case FooterAgg.MinOf(c, dt) => narrow(f.stats.get(c).map(_.min).orNull, dt)
-    case FooterAgg.MaxOf(c, dt) => narrow(f.stats.get(c).map(_.max).orNull, dt)
-    case FooterAgg.CountStar => Long.box(f.rowCount.toLong)
-    case FooterAgg.CountOf(c) =>
-      // no stats entry ⇔ the column postdates this object's generation
-      // (footers stat every column of their own schema) ⇔ all null here
-      Long.box(f.stats.get(c).map(s => f.rowCount - s.nullCount)
-        .getOrElse(0).toLong)
-    case a => throw new IllegalStateException(s"$a is not footer-answerable")
-  }.toArray
-
-  override def readSchema(): StructType = StructType(aggs.map(_.field))
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"GraftFooterAggScan path=$path, " +
-      s"PushedAggregates: [${aggs.map(_.field.name).mkString(", ")}] " +
-      "(footer-only, zero rows decoded)"
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val rows = footers.filter(_.rowCount > 0).map(partialRow)
-    // SQL global aggregates over an empty table still yield one row
-    // (COUNT 0, MIN/MAX null) — emit the identity partial
-    val out = if (rows.nonEmpty) rows else Seq(aggs.map[Any] {
-      case FooterAgg.CountStar | FooterAgg.CountOf(_) => Long.box(0L)
-      case _ => null
-    }.toArray)
-    Array(GraftAggRowsPartition(out))
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    (p: InputPartition) => new PartitionReader[InternalRow] {
-      private val it = p.asInstanceOf[GraftAggRowsPartition].rows.iterator
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { current = new GenericInternalRow(it.next()); true }
-        else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
-}
-
+/** The partial rows of objects answered from their footers at planning:
+  * the executor receives literal values and never opens those objects.
+  * All of a scan's footer rows ride in this one partition: they are
+  * metadata-sized (objects × aggregates). */
 case class GraftAggRowsPartition(rows: Seq[Array[Any]]) extends InputPartition
 
-/** Reader-tier aggregate pushdown: select+project+aggregate evaluated
-  * INSIDE the storage reader — the reference's `--use-cls` query path
-  * (filter rows in the OSD, return aggregate partials per object
-  * instead of the rows). Each input partition is one object; its
-  * reader applies the deletion vector and the pushed conjunction,
-  * accumulates MIN/MAX/COUNT/COUNT(col)/SUM partials (integral and
-  * exact decimal) per GROUP BY key, and emits one row per key — more
-  * only when a decimal SUM spills to stay inside its type (see
-  * [[PartialAcc.DecimalSum]]) — or the identity partial for a global
-  * aggregate over zero qualifying rows. Spark's final aggregate merges
-  * the per-object partials — so the bytes that leave "storage" scale
-  * with objects × groups, never with rows. Footer stats still prune
-  * objects that cannot match before their bodies are opened. */
+/** Aggregate pushdown: select+project+aggregate evaluated inside
+  * storage — the reference's `--use-cls` query path (filter rows in the
+  * OSD, return aggregate partials per object instead of the rows).
+  * Footer stats first prune the objects that cannot match; then each
+  * candidate object answers in one of two ways:
+  *
+  *  - from its footer, at planning, when there is no GROUP BY, the
+  *    footer proves every pushed filter for every row, no deletion
+  *    vector drops rows it counts, and every aggregate reads exactly off
+  *    its stats ([[FooterAgg.fromFooter]]). These rows share one
+  *    [[GraftAggRowsPartition]];
+  *  - otherwise in one walk over its segments, one partition per object
+  *    ([[GraftPartialAggReaderFactory]]).
+  *
+  * Either way an object gives one partial row per group it holds (more
+  * only when a decimal SUM spills to stay inside its type, see
+  * [[PartialAcc.DecimalSum]]) and none when no row qualifies: Spark's
+  * final aggregate merges the partials and gives a global aggregate of
+  * no rows its identity. So the bytes that leave "storage" scale with
+  * objects × groups, never with rows. */
 class GraftPartialAggScan(fullSchema: StructType, pushed: Array[Filter],
     groups: Seq[String], aggs: Seq[FooterAgg], path: String)
     extends Scan with Batch {
@@ -3941,13 +3861,27 @@ class GraftPartialAggScan(fullSchema: StructType, pushed: Array[Filter],
       s"PushedAggregates: [${aggs.map(_.field.name).mkString(", ")}], " +
       s"PushedGroupBy: [${groups.mkString(", ")}], " +
       s"PushedFilters: [${pushed.mkString(", ")}] " +
-      "(in-reader partials, one row per object per group)"
+      "(partials from footers or in-reader, one row per object per group)"
 
-  /** The footer prune, once per scan: Spark asks for the partitions
-    * more than once while it plans. */
-  private lazy val partitions: Array[InputPartition] =
-    GraftObjectTable.candidates(GraftObjectTable.listObjects(path), pushed)
-      .map { case (p, _) => GraftObjectPartition(p): InputPartition }.toArray
+  /** An object's partial row from its footer alone, or None. */
+  private def fromFooter(p: String, f: ObjectFormat.Footer): Option[Array[Any]] =
+    if (groups.nonEmpty || ObjectFormat.residual(pushed, f).nonEmpty) None
+    else {
+      val row = aggs.map(_.fromFooter(f))
+      if (row.exists(_.isEmpty) || DeleteVectors.hasValid(p)) None
+      else Some(row.map(_.orNull).toArray)
+    }
+
+  /** Each candidate's answer, once per scan (Spark asks for the
+    * partitions more than once while it plans): the footer rows in one
+    * partition, then one partition per object to read. */
+  private lazy val partitions: Array[InputPartition] = {
+    val answers = GraftObjectTable.candidates(GraftObjectTable.listObjects(path), pushed)
+      .map { case (p, f) => p -> fromFooter(p, f) }
+    val rows = answers.flatMap(_._2)
+    ((if (rows.isEmpty) Nil else Seq(GraftAggRowsPartition(rows))) ++
+      answers.collect { case (p, None) => GraftObjectPartition(p) }).toArray
+  }
   override def planInputPartitions(): Array[InputPartition] = partitions
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -3958,16 +3892,12 @@ class GraftPartialAggReaderFactory(fullSchema: StructType,
     pushed: Array[Filter], groups: Seq[String], aggs: Seq[FooterAgg])
     extends PartitionReaderFactory {
 
-  /** Every column the aggregation reads, in the table's types. */
-  private def inner: StructType = StructType(
-    (groups ++ aggs.flatMap(_.cols)).distinct.map(fullSchema(_)))
-
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private val path = p.asInstanceOf[GraftObjectPartition].path
-      private val out: Iterator[Array[Any]] =
-        (if (groups.isEmpty) typedGlobal(path) else None)
-          .getOrElse(rowLoop(path)).iterator
+      private val out: Iterator[Array[Any]] = (p match {
+        case GraftAggRowsPartition(rows) => rows
+        case GraftObjectPartition(path) => walk(path)
+      }).iterator
       private var current: InternalRow = _
       override def next(): Boolean =
         if (out.hasNext) { current = new GenericInternalRow(out.next()); true }
@@ -3976,51 +3906,50 @@ class GraftPartialAggReaderFactory(fullSchema: StructType,
       override def close(): Unit = ()
     }
 
-  /** The global aggregate of one object in typed loops over its
-    * segments, with no row built and no value boxed: the segments the
-    * vectorized reader would read, its row-fate mask, then one loop per
-    * aggregate. None when the object's generation lacks a column the
-    * aggregates read or stores one in a narrower type. */
-  private def typedGlobal(path: String): Option[Seq[Array[Any]]] =
-    ObjectFile.using(path) { obj =>
-      val schema = inner
-      val typed = schema.forall(f =>
-        obj.fieldIdx.get(f.name).exists(obj.schema(_).dataType == f.dataType))
-      if (!typed) None
-      else {
-        val residual = obj.residual(pushed)
-        val bytes = obj.segments(obj.needed(schema, residual))
-        val keep = ObjectFormat.rowFate(obj.rowCount, DeleteVectors.read(path),
-          residual, negated = false,
-          a => obj.fieldIdx.get(a).map(obj.schema(_).dataType),
-          a => obj.fieldIdx.get(a).map(i => obj.boxed(i, bytes(i))).orNull)
-        val segs = schema.fieldNames.map { c =>
-          val i = obj.fieldIdx(c)
-          c -> new ObjectFormat.Segment(bytes(i), obj.rowCount, obj.schema(i).dataType)
-        }.toMap
-        val accs = aggs.map(PartialAcc(_, schema))
-        accs.foreach(_.scan(segs, keep))
-        Some(PartialAcc.rows(Nil, accs))
-      }
+  /** One object's partial rows from one walk over the segments the
+    * aggregation reads. The row-fate mask (the deletion vector and the
+    * filters the footer leaves open) gives each row a slot: -1 where the
+    * row is dropped, else its group's index, numbered in order of first
+    * appearance, from the boxed key segments widened to the table's
+    * types. Each aggregate then folds its column into the slots in one
+    * typed loop. A global aggregate has one slot, so its loops box
+    * nothing and look nothing up per row. */
+  private def walk(path: String): Seq[Array[Any]] = ObjectFile.using(path) { obj =>
+    val cols = (groups ++ aggs.flatMap(_.cols)).distinct
+    val residual = obj.residual(pushed)
+    val bytes = obj.segments(obj.needed(StructType(cols.map(fullSchema(_))), residual))
+    val boxed = scala.collection.mutable.HashMap.empty[String, Array[Any]]
+    def values(c: String): Array[Any] = boxed.getOrElseUpdate(c,
+      obj.fieldIdx.get(c).map(i => obj.boxed(i, bytes(i))).orNull)
+    val keep = ObjectFormat.rowFate(obj.rowCount, DeleteVectors.read(path),
+      residual, negated = false,
+      a => obj.fieldIdx.get(a).map(obj.schema(_).dataType), values)
+    // each group column's values in the table's type; null: all null
+    val keys: Seq[Array[Any]] = groups.map { c =>
+      val vs = values(c)
+      val widen = obj.fieldIdx.get(c).map(i =>
+        ObjectFormat.widenConverter(obj.schema(i).dataType, fullSchema(c).dataType)).orNull
+      if (vs == null || widen == null) vs else vs.map(widen)
     }
-
-  /** Any aggregate of one object, a decoded row at a time. */
-  private def rowLoop(path: String): Seq[Array[Any]] = {
-    val schema = inner
-    val keyIdx = groups.map(schema.fieldIndex)
-    // group key -> one accumulator per aggregate
-    val acc = scala.collection.mutable.LinkedHashMap
-      .empty[List[Any], Seq[PartialAcc]]
-    val rd = new GraftObjectReader(path, fullSchema, schema, pushed)
-    try {
-      while (rd.next()) {
-        val row = rd.get()
-        val key = keyIdx.map(i => row.get(i, schema(i).dataType)).toList
-        acc.getOrElseUpdate(key, aggs.map(PartialAcc(_, schema))).foreach(_.add(row))
-      }
-    } finally rd.close()
-    if (acc.isEmpty && groups.isEmpty) PartialAcc.rows(Nil, aggs.map(PartialAcc(_, schema)))
-    else acc.iterator.flatMap { case (k, accs) => PartialAcc.rows(k, accs) }.toSeq
+    def key(col: Array[Any], r: Int): Any = if (col == null) null else col(r)
+    val slot = new Array[Int](obj.rowCount)
+    val first = scala.collection.mutable.ArrayBuffer.empty[Int] // each slot's first row
+    val index = scala.collection.mutable.HashMap.empty[Any, Int]
+    var r = 0
+    while (r < slot.length) {
+      slot(r) =
+        if (!keep(r)) -1
+        else if (groups.isEmpty) { if (first.isEmpty) first += r; 0 }
+        else index.getOrElseUpdate(
+          if (keys.length == 1) key(keys.head, r) else keys.map(key(_, r)),
+          { first += r; first.length - 1 })
+      r += 1
+    }
+    val segs = cols.flatMap(c => obj.fieldIdx.get(c).map(i =>
+      c -> new ObjectFormat.Segment(bytes(i), obj.rowCount, obj.schema(i).dataType))).toMap
+    val accs = aggs.map(PartialAcc(_, fullSchema, first.length))
+    accs.foreach(_.scan(c => segs.getOrElse(c, null), slot))
+    first.indices.flatMap(k => PartialAcc.rows(keys.map(key(_, first(k))), accs, k))
   }
 }
 

@@ -37,7 +37,7 @@ class DecimalCastSpec extends AnyFunSuite {
   /** Both forms of the conversion agree with Spark on `v`: `decimal`
     * always, and the unscaled long where p fits one. */
   private def agrees(v: Any, from: DataType, to: DecimalType): Prop = {
-    val conv = new DecimalCast(from, to)
+    val conv = new DecimalCast(from, to, from)
     val ref = outcome(spark(v, from, to))
     val got = outcome(conv.decimal(v))
     val unscaled =

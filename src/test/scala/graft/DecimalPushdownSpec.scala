@@ -195,7 +195,8 @@ class DecimalPushdownSpec extends SparkSpec {
     ObjectStoreMaintenance.deleteMoR(dir, Array(LessThan("l_orderkey", 1500L)))
     tableViews()
     preds.foreach(p => samePushed(wide, "dp_cat", p))
-    // an added column: older objects lack it and take the row loop
+    // an added column (older objects lack it and read it as all null)
+    // and a widened one (older objects read it at its stored width)
     spark.sql("ALTER TABLE gdec.main.li ADD COLUMN l_bonus DOUBLE")
     spark.sql("ALTER TABLE gdec.main.li ALTER COLUMN l_linenumber TYPE BIGINT")
     spark.table("gdec.main.li").limit(100)

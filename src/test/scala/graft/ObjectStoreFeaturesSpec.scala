@@ -2,11 +2,14 @@ package graft
 
 import java.io.File
 
-import graft.sources.{GraftObjectTable, GraftStreamingWrite, ObjectFormat}
-import org.apache.spark.sql.DataFrame
+import graft.sources.{DeleteVectors, GraftAggRowsPartition, GraftObjectPartition,
+  GraftObjectTable, GraftStreamingWrite, ObjectFile, ObjectFormat}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.connector.write.WriterCommitMessage
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
@@ -39,6 +42,22 @@ class ObjectStoreFeaturesSpec extends SparkSpec {
   // Aggregate pushdown from footers
   // ---------------------------------------------------------------
 
+  /** The input partitions of a query's scans, as planned. */
+  private def partitionsOf(df: DataFrame): Seq[InputPartition] =
+    df.queryExecution.sparkPlan.collect { case b: BatchScanExec => b.inputPartitions }.flatten
+
+  /** Flip a byte in the middle of an object's first column segment:
+    * header, directory and footer stay intact. */
+  private def corruptBody(p: String): Unit = {
+    val (off, len) = ObjectFile.using(p)(_.segment(0))
+    val raf = new java.io.RandomAccessFile(p, "rw")
+    try {
+      raf.seek(off + len / 2)
+      val b = raf.read(); raf.seek(off + len / 2); raf.write(b ^ 0xff)
+    } finally raf.close()
+    assert(!ObjectFormat.verifyObject(p), "corruption must be scrub-visible")
+  }
+
   test("global MIN/MAX/COUNT push down to object footers (plan + values)") {
     val dir = tmp("graft-aggpd"); val tgt = s"$dir/orders"
     val orders = Tables.load(spark, sf, "orders")
@@ -49,9 +68,14 @@ class ObjectStoreFeaturesSpec extends SparkSpec {
         count(lit(1)).as("n"), count("o_custkey").as("nc"),
         min("o_orderdate").as("mnd"), max("o_orderkey").as("mxk"))
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("GraftFooterAggScan") &&
-      plan.contains("PushedAggregates: ["),
-      s"aggregation must reach the footer scan:\n${plan.take(1200)}")
+    assert(plan.contains("PushedAggregates: ["),
+      s"aggregation must push:\n${plan.take(1200)}")
+    // every object answers from its footer, in the one rows partition
+    partitionsOf(df) match {
+      case Seq(GraftAggRowsPartition(rows)) =>
+        assert(rows.size == GraftObjectTable.listObjects(tgt).size)
+      case ps => fail(s"every object must answer from its footer: $ps")
+    }
 
     val got = df.collect()(0)
     val exp = orders.agg(min("o_totalprice"), max("o_totalprice"),
@@ -154,9 +178,10 @@ class ObjectStoreFeaturesSpec extends SparkSpec {
       back.groupBy("o_orderstatus").agg(min("o_totalprice").as("mn")),
       back.filter(col("o_orderkey") > 100).agg(count(lit(1)).as("n")))
     cases.foreach { q =>
-      val plan = q.queryExecution.executedPlan.toString
-      assert(!plan.contains("GraftFooterAggScan"),
-        s"must fall back to row scan:\n${plan.take(600)}")
+      val parts = partitionsOf(q)
+      assert(parts.nonEmpty && !parts.exists(_.isInstanceOf[GraftAggRowsPartition]),
+        s"no object may answer from its footer: $parts\n" +
+          q.queryExecution.executedPlan.toString.take(600))
     }
     // and the fallback is still correct
     val exp = Tables.load(spark, sf, "orders")
@@ -172,6 +197,51 @@ class ObjectStoreFeaturesSpec extends SparkSpec {
     val r = spark.read.format("graft-objects").load(tgt)
       .agg(count(lit(1)).as("n"), min("k").as("mn")).collect()(0)
     assert(r.getLong(0) == 0L && r.isNullAt(1))
+    // objects that emit no partial: every object pruned by its footer,
+    // or read with no row matching — Spark's final merge gives the row
+    ObjectFormat.writeObject(s"$tgt/t.1", schema, Seq(0L, 10L, 20L, 30L).map(Row(_)).iterator)
+    val back = spark.read.format("graft-objects").load(tgt)
+    for (pred <- Seq(col("k") > 100000L, col("k") === 15L)) {
+      val q = back.filter(pred).agg(count(lit(1)), min("k"), sum("k"))
+      assert(q.queryExecution.executedPlan.toString.contains("GraftPartialAggScan"))
+      assert(q.collect().toSeq == Seq(Row(0L, null, null)), pred.toString)
+      assert(back.filter(pred).agg(count(lit(1)), min("k"), sum("k")).collect().toSeq ==
+        spark.read.format("graft-objects").option("agg.pushdown", "false").load(tgt)
+          .filter(pred).agg(count(lit(1)), min("k"), sum("k")).collect().toSeq)
+    }
+  }
+
+  test("each object answers from its footer unless a deletion vector forces a read") {
+    val dir = tmp("graft-aggdv"); val tgt = s"$dir/t"
+    val schema = StructType(Seq(StructField("k", LongType), StructField("v", DoubleType)))
+    new File(tgt).mkdirs()
+    val data = (0 until 4).map(o => (0 until 500).map { i =>
+      val k = o * 1000L + i
+      (k, if (i % 7 == 0) None else Some((k * 37 % 1001) / 4.0))
+    })
+    data.zipWithIndex.foreach { case (rows, o) =>
+      ObjectFormat.writeObject(s"$tgt/t.$o", schema,
+        rows.map { case (k, v) => Row(k, v.map(Double.box).orNull) }.iterator)
+    }
+    // the DV drops the object's smallest k and its largest v
+    val dvObj = s"$tgt/t.0"
+    val maxV = data(0).flatMap(_._2).max
+    val dropped = data(0).indices.filter(i => i == 0 || data(0)(i)._2.contains(maxV))
+    DeleteVectors.write(dvObj, dropped.toArray)
+    val live = data.zipWithIndex.flatMap { case (rows, o) =>
+      if (o == 0) rows.indices.filterNot(dropped.contains).map(rows) else rows
+    }
+    val exp = Row(live.size.toLong, live.map(_._1).min, live.flatMap(_._2).max,
+      live.count(_._2.isDefined).toLong)
+    def query() = spark.read.format("graft-objects").load(tgt)
+      .agg(count(lit(1)), min("k"), max("v"), count("v"))
+    val parts = partitionsOf(query())
+    assert(parts.collect { case GraftAggRowsPartition(rows) => rows.size } == Seq(3) &&
+      parts.collect { case GraftObjectPartition(p) => p } == Seq(dvObj), parts)
+    assert(query().collect().toSeq == Seq(exp))
+    // the three footer-answered objects are never opened past their footers
+    (1 until 4).foreach(o => corruptBody(s"$tgt/t.$o"))
+    assert(query().collect().toSeq == Seq(exp))
   }
 
   // ---------------------------------------------------------------
