@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDelete, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability, TableProvider, TruncatableTable}
-import org.apache.spark.sql.connector.expressions.{Cast => V2Cast, Expression => V2Expression, Expressions, GeneralScalarExpression, NamedReference, NullOrdering, SortDirection, SortOrder, Transform}
+import org.apache.spark.sql.connector.expressions.{Cast => V2Cast, Expression => V2Expression, Expressions, GeneralScalarExpression, Literal => V2Literal, NamedReference, NullOrdering, SortDirection, SortOrder, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, Count, CountStar, Max, Min, Sum}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
@@ -3118,20 +3118,22 @@ class GraftScanBuilder(fullSchema: StructType, path: String,
     *
     * Pushable aggregates: MIN/MAX of a column or of
     * `CAST(timestamp column AS DATE)`, COUNT(*), COUNT(col), SUM of a
-    * Long/Int column, and the money sums: SUM of `CAST(c AS
-    * DECIMAL(p,s))` or of the product of two such casts, with c a
-    * Double, Long or Int column. Spark hands over a cast only under
-    * ANSI (or for an up-cast) and a product only under ANSI, so without
-    * ANSI the money sums never arrive here. A decimal sum is computed on
-    * exact unscaled longs ([[DecimalCast]]: Spark's `Cast` by
-    * construction), its term's type must hold in a long (p <= 18) and a
-    * product must not round (scale s1 + s2). Its partial field has
-    * exactly the term's type, `Sum.child.dataType`, which is what Spark
-    * casts each partial to before the final merge; so a reader emits a
-    * group's running sum as a partial of its own and starts a fresh one
-    * whenever the next term would take it out of that precision. The
-    * settings a partial depends on — ANSI overflow for Long sums, the
-    * session time zone for dates — are captured here, at planning.
+    * Long/Int column, and SUM and COUNT of a decimal term
+    * ([[DecimalTerm]]: casts of Double, Long or Int columns, decimal
+    * literals, `+`, `-`, `*` and an outer decimal cast, as in TPC-H Q1's
+    * `price * (1 - discount) * (1 + tax)`). Spark hands over a cast
+    * only under ANSI (or for an up-cast) and arithmetic only under ANSI,
+    * so without ANSI the money aggregates never arrive here. Each term
+    * node's type is Spark's own (ANSI, the session's precision-loss
+    * setting) and a node that would round is refused; the reader
+    * evaluates the term exactly ([[ObjectRows]]). A decimal SUM's
+    * partial field has exactly the term's type, `Sum.child.dataType`,
+    * which is what Spark casts each partial to before the final merge;
+    * so a reader emits a group's running sum as a partial of its own and
+    * starts a fresh one whenever the next term would take it out of that
+    * precision (or out of a long). The settings a partial depends on —
+    * ANSI overflow for Long sums, the session time zone for dates — are
+    * captured here, at planning.
     *
     * Spark applies the final merge either way (min-of-mins,
     * sum-of-counts — partial pushdown, supportCompletePushDown stays
@@ -3161,32 +3163,24 @@ class GraftScanBuilder(fullSchema: StructType, path: String,
       }
     def statable(c: String): Boolean =
       ObjectFormat.statKind(fullSchema(c).dataType) != 0
-    def castTo(e: V2Expression): Option[FooterAgg.CastTo] = e match {
-      case c: V2Cast => (colOf(c.expression()), c.dataType()) match {
-        case (Some(col), d: DecimalType)
-            if DecimalCast.sources.contains(fullSchema(col).dataType) =>
-          Some(FooterAgg.CastTo(col, d))
+    val lossy = conf.decimalOperationsAllowPrecisionLoss
+    // a decimal term, node by node; None where a node is not one
+    def term(e: V2Expression): Option[DecimalTerm] = e match {
+      case c: V2Cast => c.dataType() match {
+        case d: DecimalType => colOf(c.expression()) match {
+          case Some(col) => DecimalTerm.col(fullSchema, col, d)
+          case None => term(c.expression()).flatMap(DecimalTerm.recast(_, d))
+        }
         case _ => None
       }
+      case l: V2Literal[_] => DecimalTerm.lit(l.value(), l.dataType())
+      case g: GeneralScalarExpression if g.children().length == 2 =>
+        for {
+          a <- term(g.children()(0)); b <- term(g.children()(1))
+          t <- DecimalTerm.arith(g.name(), a, b, lossy)
+        } yield t
       case _ => None
     }
-    def decimalSum(e: V2Expression): Option[FooterAgg] = (e match {
-      case m: GeneralScalarExpression if m.name() == "*" && m.children().length == 2 =>
-        for {
-          a <- castTo(m.children()(0)); b <- castTo(m.children()(1))
-          // the product's type as Spark's own Multiply derives it; a
-          // product that would round (precision loss) is refused
-          dt <- Option(org.apache.spark.sql.catalyst.expressions.Multiply(
-            org.apache.spark.sql.catalyst.expressions.Literal(null, a.dt),
-            org.apache.spark.sql.catalyst.expressions.Literal(null, b.dt),
-            org.apache.spark.sql.catalyst.expressions.NumericEvalContext(
-              org.apache.spark.sql.catalyst.expressions.EvalMode.ANSI,
-              conf.decimalOperationsAllowPrecisionLoss)).dataType).collect {
-            case d: DecimalType if d.scale == a.dt.scale + b.dt.scale => d
-          }
-        } yield FooterAgg.SumDecimal(Seq(a, b), dt)
-      case _ => castTo(e).map(c => FooterAgg.SumDecimal(Seq(c), c.dt))
-    }).filter(_.dt.precision <= DecimalCast.MaxPrecision)
     def dateOf(e: V2Expression): Option[String] = e match {
       case c: V2Cast if c.dataType() == DateType =>
         colOf(c.expression()).filter(col => fullSchema(col).dataType match {
@@ -3205,8 +3199,8 @@ class GraftScanBuilder(fullSchema: StructType, path: String,
           .map(c => FooterAgg.MaxOf(c, fullSchema(c).dataType))
           .orElse(dateOf(m.column).map(FooterAgg.MaxDateOf(_, zone)))
         case _: CountStar => Some(FooterAgg.CountStar)
-        case c: Count if !c.isDistinct() =>
-          colOf(c.column).map(FooterAgg.CountOf.apply)
+        case c: Count if !c.isDistinct() => colOf(c.column).map(FooterAgg.CountOf.apply)
+          .orElse(term(c.column).map(FooterAgg.CountDecimal.apply))
         case s: Sum if !s.isDistinct() => s.column match {
           // integral sums: Long accumulation is exact; floating sums
           // depend on the order of the adds and are refused
@@ -3215,7 +3209,7 @@ class GraftScanBuilder(fullSchema: StructType, path: String,
               case LongType | IntegerType => true
               case _ => false
             }).map(FooterAgg.SumOf(_, conf.ansiEnabled))
-          case e => decimalSum(e)
+          case e => term(e).map(FooterAgg.SumDecimal.apply)
         }
         case _ => None
       }
@@ -3363,8 +3357,8 @@ sealed trait FooterAgg {
     case FooterAgg.CountStar => StructField("count(*)", LongType, nullable = false)
     case FooterAgg.CountOf(c) => StructField(s"count($c)", LongType, nullable = false)
     case FooterAgg.SumOf(c, _) => StructField(s"sum($c)", LongType)
-    case FooterAgg.SumDecimal(fs, dt) =>
-      StructField(s"sum(${fs.map(_.sql).mkString(" * ")})", dt)
+    case FooterAgg.SumDecimal(t) => StructField(s"sum(${t.sql})", t.dt)
+    case FooterAgg.CountDecimal(t) => StructField(s"count(${t.sql})", LongType, nullable = false)
     case FooterAgg.MinDateOf(c, _) => StructField(s"min(CAST($c AS DATE))", DateType)
     case FooterAgg.MaxDateOf(c, _) => StructField(s"max(CAST($c AS DATE))", DateType)
   }
@@ -3374,7 +3368,8 @@ sealed trait FooterAgg {
     case FooterAgg.MaxOf(c, _) => Seq(c)
     case FooterAgg.CountOf(c) => Seq(c)
     case FooterAgg.SumOf(c, _) => Seq(c)
-    case FooterAgg.SumDecimal(fs, _) => fs.map(_.column).distinct
+    case FooterAgg.SumDecimal(t) => t.cols
+    case FooterAgg.CountDecimal(t) => t.cols
     case FooterAgg.MinDateOf(c, _) => Seq(c)
     case FooterAgg.MaxDateOf(c, _) => Seq(c)
     case FooterAgg.CountStar => Nil
@@ -3417,21 +3412,101 @@ object FooterAgg {
   final case class CountOf(column: String) extends FooterAgg
   /** SUM of a Long or Int column; `ansi` adds with overflow checks. */
   final case class SumOf(column: String, ansi: Boolean) extends FooterAgg
-  /** `CAST(column AS DECIMAL(p,s))` of a Double, Long or Int column. */
-  final case class CastTo(column: String, dt: DecimalType) {
-    def sql: String = s"CAST($column AS ${dt.sql})"
-  }
-  /** SUM of one decimal cast or of the product of two; `dt` is the
-    * summed term's type (a product's comes from Spark's `Multiply`). */
-  final case class SumDecimal(factors: Seq[CastTo], dt: DecimalType) extends FooterAgg
+  /** SUM of a decimal term, in the term's type. */
+  final case class SumDecimal(term: DecimalTerm) extends FooterAgg
+  /** COUNT of a decimal term: its rows whose value is not null. */
+  final case class CountDecimal(term: DecimalTerm) extends FooterAgg
   /** MIN/MAX of `CAST(timestamp column AS DATE)` in time zone `zone`. */
   final case class MinDateOf(column: String, zone: String) extends FooterAgg
   final case class MaxDateOf(column: String, zone: String) extends FooterAgg
 }
 
-/** `CAST(x AS DECIMAL(p,s))` of a Double, Long or Int `x`, equal to
-  * Spark's ANSI `Cast` by construction: a fast path where the answer is
-  * provably the same, Spark's own `Cast` for every other value.
+/** A decimal term pushed inside a SUM or COUNT, built from
+  * `CAST(c AS DECIMAL(p,s))` of a Double, Long or Int column c, decimal
+  * literals, `+`, `-` and `*` of two terms, and `CAST(term AS
+  * DECIMAL(p,s))`. Each node carries Spark's own expression for it over
+  * a row of the table, built at planning under ANSI with the session's
+  * precision-loss setting, so its type is Spark's; the builders below
+  * refuse a node that would round (a product keeps scale s1 + s2, a sum
+  * max(s1, s2), and a cast never lowers the scale). `sql` is the V2
+  * expression's text, which names the pushed aggregate in the plan. */
+sealed trait DecimalTerm {
+  def expr: org.apache.spark.sql.catalyst.expressions.Expression
+  final def dt: DecimalType = expr.dataType.asInstanceOf[DecimalType]
+  def sql: String
+  /** The columns it reads. */
+  def cols: Seq[String]
+}
+
+object DecimalTerm {
+  import org.apache.spark.sql.catalyst.{expressions => X}
+
+  /** A term value: null. Never an unscaled value, see [[Slow]]. */
+  val Null: Long = Long.MinValue
+  /** A term value the fast path cannot prove; the reader evaluates the
+    * whole term with its Spark expression. Exact values equal to either
+    * sentinel are taken as Slow too. */
+  val Slow: Long = Long.MinValue + 1
+
+  final case class Col(column: String, expr: X.Expression) extends DecimalTerm {
+    def sql: String = s"CAST($column AS ${dt.sql})"
+    def cols: Seq[String] = Seq(column)
+  }
+  final case class Lit(value: Decimal, expr: X.Expression) extends DecimalTerm {
+    def sql: String = value.toString
+    def cols: Seq[String] = Nil
+  }
+  final case class Arith(op: String, left: DecimalTerm, right: DecimalTerm,
+      expr: X.Expression) extends DecimalTerm {
+    private def operand(t: DecimalTerm): String =
+      if (t.isInstanceOf[Arith]) s"(${t.sql})" else t.sql
+    def sql: String = s"${operand(left)} $op ${operand(right)}"
+    def cols: Seq[String] = (left.cols ++ right.cols).distinct
+  }
+  final case class Recast(child: DecimalTerm, expr: X.Expression) extends DecimalTerm {
+    def sql: String = s"CAST(${child.sql} AS ${dt.sql})"
+    def cols: Seq[String] = child.cols
+  }
+
+  private def cast(e: X.Expression, to: DecimalType): X.Expression =
+    X.Cast(e, to, None, X.EvalMode.ANSI)
+
+  /** `CAST(column AS to)`, for a Double, Long or Int column of `table`. */
+  def col(table: StructType, column: String, to: DecimalType): Option[DecimalTerm] = {
+    val f = table(column)
+    Option.when(DecimalCast.sources.contains(f.dataType))(Col(column,
+      cast(X.BoundReference(table.fieldIndex(column), f.dataType, nullable = true), to)))
+  }
+  /** A decimal literal. An integral literal beside a decimal reaches the
+    * scan already coerced to one, so no other literal is a term. */
+  def lit(v: Any, t: DataType): Option[DecimalTerm] = (v, t) match {
+    case (d: Decimal, dt: DecimalType) if d.scale == dt.scale => Some(Lit(d, X.Literal(d, dt)))
+    case _ => None
+  }
+  /** `left op right` for op `+`, `-` or `*`. */
+  def arith(op: String, left: DecimalTerm, right: DecimalTerm,
+      lossy: Boolean): Option[DecimalTerm] = {
+    val ctx = X.NumericEvalContext(X.EvalMode.ANSI, lossy)
+    val (l, r) = (left.expr, right.expr)
+    val (e, scale) = op match {
+      case "+" => (X.Add(l, r, ctx), math.max(left.dt.scale, right.dt.scale))
+      case "-" => (X.Subtract(l, r, ctx), math.max(left.dt.scale, right.dt.scale))
+      case "*" => (X.Multiply(l, r, ctx), left.dt.scale + right.dt.scale)
+      case _ => return None
+    }
+    Option.when(e.resolved && (e.dataType match {
+      case d: DecimalType => d.scale == scale
+      case _ => false
+    }))(Arith(op, left, right, e))
+  }
+  /** `CAST(child AS to)`, when it keeps or raises the scale. */
+  def recast(child: DecimalTerm, to: DecimalType): Option[DecimalTerm] =
+    Option.when(to.scale >= child.dt.scale)(Recast(child, cast(child.expr, to)))
+}
+
+/** `CAST(x AS DECIMAL(p,s))` of a Double, Long or Int `x` as an unscaled
+  * long, where the answer is provably Spark's ANSI `Cast`, and
+  * [[DecimalTerm.Slow]] for every other value.
   *
   * The fast path for a double `d`:
   *  - `|d| < 2^51 / 10^s`, so ulp(d) < 10^-s / 2;
@@ -3443,12 +3518,13 @@ object FooterAgg {
   * hence less than half a step of 10^-s, from u·10^-s: it rounds to u,
   * whatever digits the JDK's `toString` chooses. For an integral `x`,
   * `u = x · 10^s` when `|x| < 10^(p-s)`. NaN, ±Inf, overflow and
-  * inexact doubles all go to Spark's `Cast`, which gives Spark's value,
-  * null or error. `stored` is the type `x` has in a segment: `from`, or
-  * the narrower type an older object keeps under a widened column (an
-  * int under a bigint, a float under a double). */
+  * inexact doubles are Slow: Spark's `Cast` gives their value, null or
+  * error. `stored` is the type `x` has in a segment: `from`, or the
+  * narrower type an older object keeps under a widened column (an int
+  * under a bigint, a float under a double). */
 final class DecimalCast(from: DataType, to: DecimalType, stored: DataType) {
   import DecimalCast._
+  import DecimalTerm.Slow
   private val p = to.precision
   private val s = to.scale
   private val kind = (from, stored) match {
@@ -3469,47 +3545,17 @@ final class DecimalCast(from: DataType, to: DecimalType, stored: DataType) {
   private val limit = if (p <= MaxPrecision) Pow10(p) else Long.MaxValue
   private val maxIntegral =
     if (!fast) 0L else if (p <= MaxPrecision) Pow10(p - s) else Long.MaxValue / powL
-  private lazy val spark = org.apache.spark.sql.catalyst.expressions.Cast(
-    org.apache.spark.sql.catalyst.expressions.BoundReference(0, from, nullable = true),
-    to, None, org.apache.spark.sql.catalyst.expressions.EvalMode.ANSI)
-  private def sparkCast(v: Any): Decimal =
-    spark.eval(new GenericInternalRow(Array[Any](v))).asInstanceOf[Decimal]
 
-  /** The fast path's unscaled value of `d`, or [[DecimalCast.Null]]. */
-  private def fastDouble(d: Double): Long = {
+  private def ofDouble(d: Double): Long = {
     if (Math.abs(d) < bound) {
       val u = Math.round(d * powD)
       if (u / powD == d && u > -limit && u < limit) return u
     }
-    Null
+    Slow
   }
-  private def fastIntegral(x: Long): Long =
-    if (x > -maxIntegral && x < maxIntegral) x * powL else Null
-  private def boxed(x: Long): Any = if (from == IntegerType) Int.box(x.toInt) else Long.box(x)
+  private def ofIntegral(x: Long): Long =
+    if (x > -maxIntegral && x < maxIntegral) x * powL else Slow
 
-  /** The cast's value (null for a null input or a null cast). */
-  def decimal(v: Any): Decimal = v match {
-    case null => null
-    case d: java.lang.Double =>
-      val u = fastDouble(d)
-      if (u != Null) Decimal(u, p, s) else sparkCast(v)
-    case x: Number =>
-      val u = fastIntegral(x.longValue())
-      if (u != Null) Decimal(u, p, s) else sparkCast(v)
-  }
-
-  // The unscaled forms below need p <= 18, where every value fits a long.
-  private def unscaled(d: Decimal): Long = if (d == null) Null else d.toUnscaledLong
-  /** Unscaled cast of a double, or [[DecimalCast.Null]]. */
-  def ofDouble(d: Double): Long = {
-    val u = fastDouble(d)
-    if (u != Null) u else unscaled(sparkCast(Double.box(d)))
-  }
-  /** Unscaled cast of a Long or Int value, or [[DecimalCast.Null]]. */
-  def ofIntegral(x: Long): Long = {
-    val u = fastIntegral(x)
-    if (u != Null) u else unscaled(sparkCast(boxed(x)))
-  }
   /** Unscaled cast of the stored value at `pos` in a segment's values. */
   def at(bb: ByteBuffer, pos: Int): Long = kind match {
     case 0 => ofDouble(bb.getDouble(pos))
@@ -3520,9 +3566,6 @@ final class DecimalCast(from: DataType, to: DecimalType, stored: DataType) {
 }
 
 object DecimalCast {
-  /** No value: a null input or a null cast. Never an unscaled value,
-    * whose magnitude stays below 10^18. */
-  val Null: Long = Long.MinValue
   /** The widest decimal whose unscaled values all fit a long. */
   val MaxPrecision = 18
   private val TwoTo51 = math.pow(2, 51)
@@ -3533,20 +3576,138 @@ object DecimalCast {
   val sources: Set[DataType] = Set(DoubleType, LongType, IntegerType)
 }
 
+/** What one object's walk gives its accumulators: each column's
+  * segment (null where the object predates the column), each row's slot
+  * (-1 where the row is dropped), and the object's decimal terms.
+  *
+  * A term is evaluated once per object and distinct node, over the kept
+  * rows, into unscaled longs at the node's scale: aggregates that share
+  * a subterm (Q1's price cast, or `price * (1 - discount)` inside
+  * `price * (1 - discount) * (1 + tax)`) share its values. Each node is
+  * exact long arithmetic with Spark's ANSI precision check: a value
+  * outside the node's precision, a long overflow, a rescale past 10^18
+  * and a cast [[DecimalCast]] cannot prove all give
+  * [[DecimalTerm.Slow]], and a row whose term is Slow takes the whole
+  * term's value from its Spark expression ([[exact]]): Spark's value,
+  * null or error by construction. As in Spark's binary arithmetic, a
+  * null left operand makes a node null without regard to the right.
+  * `values(c)` is column c's boxed values in the table's type (null:
+  * all null), decoded only when a row needs [[exact]]. */
+private[sources] final class ObjectRows(segs: Map[String, ObjectFormat.Segment],
+    val slot: Array[Int], table: StructType, values: String => Array[Any]) {
+  import DecimalTerm.{Null, Slow}
+  def seg(c: String): ObjectFormat.Segment = segs.getOrElse(c, null)
+
+  private val memo = scala.collection.mutable.HashMap.empty[DecimalTerm, Array[Long]]
+  /** Each row's value of `t`: unscaled, [[DecimalTerm.Null]] or
+    * [[DecimalTerm.Slow]] (unspecified at a dropped row). */
+  def term(t: DecimalTerm): Array[Long] = memo.getOrElseUpdate(t, compute(t))
+
+  private val row = new GenericInternalRow(table.length)
+  /** Spark's value of `t` at row r: a Decimal of `t.dt`, or null. */
+  def exact(t: DecimalTerm, r: Int): Decimal = {
+    t.cols.foreach { c =>
+      val vs = values(c)
+      row.update(table.fieldIndex(c), if (vs == null) null else vs(r))
+    }
+    t.expr.eval(row).asInstanceOf[Decimal]
+  }
+
+  /** `u` if it lies below `lim` (10^p, or a long's range) in magnitude,
+    * else Slow; so are both sentinels. */
+  @inline private def checked(u: Long, lim: Long): Long =
+    if (u <= -lim || u >= lim) Slow else u
+  @inline private def mul(a: Long, b: Long): Long =
+    if (a == Slow || b == Slow) Slow
+    else {
+      val m = a * b
+      if (Math.multiplyHigh(a, b) != (m >> 63)) Slow else m
+    }
+  @inline private def add(a: Long, b: Long): Long =
+    if (a == Slow || b == Slow) Slow
+    else {
+      val n = a + b
+      if (((a ^ n) & (b ^ n)) < 0) Slow else n
+    }
+  /** `u` raised by k decimal places. */
+  @inline private def rescale(u: Long, k: Int): Long =
+    if (k == 0) u else if (k > DecimalCast.MaxPrecision) Slow else mul(u, DecimalCast.pow10(k))
+  private def limit(dt: DecimalType): Long =
+    if (dt.precision <= DecimalCast.MaxPrecision) DecimalCast.pow10(dt.precision)
+    else Long.MaxValue
+
+  private def compute(t: DecimalTerm): Array[Long] = {
+    val out = new Array[Long](slot.length)
+    val lim = limit(t.dt)
+    t match {
+      case DecimalTerm.Col(c, _) =>
+        val sg = seg(c)
+        if (sg == null) util.Arrays.fill(out, Null)
+        else {
+          val cast = new DecimalCast(table(c).dataType, t.dt, sg.dt)
+          val bb = sg.bb
+          var p = sg.valOff
+          var r = 0
+          while (r < out.length) {
+            if (!sg.presentAt(r)) out(r) = Null
+            else {
+              if (slot(r) >= 0) out(r) = cast.at(bb, p)
+              p += cast.width
+            }
+            r += 1
+          }
+        }
+      case DecimalTerm.Lit(v, _) =>
+        val b = v.toJavaBigDecimal.unscaledValue
+        util.Arrays.fill(out, if (b.bitLength < 64) checked(b.longValue, lim) else Slow)
+      case DecimalTerm.Recast(child, _) =>
+        val (x, k) = (term(child), t.dt.scale - child.dt.scale)
+        var r = 0
+        while (r < out.length) {
+          if (slot(r) >= 0) {
+            val a = x(r)
+            out(r) = if (a == Null || a == Slow) a else checked(rescale(a, k), lim)
+          }
+          r += 1
+        }
+      case DecimalTerm.Arith(op, left, right, _) =>
+        val (x, y) = (term(left), term(right))
+        val (kx, ky) = (t.dt.scale - left.dt.scale, t.dt.scale - right.dt.scale)
+        val (times, sign) = (op == "*", if (op == "-") -1L else 1L)
+        var r = 0
+        while (r < out.length) {
+          if (slot(r) >= 0) {
+            val a = x(r)
+            out(r) =
+              if (a == Null || a == Slow) a
+              else {
+                val b = y(r)
+                if (b == Null || b == Slow) b
+                else checked(if (times) mul(a, b)
+                  else add(rescale(a, kx), mul(sign, rescale(b, ky))), lim)
+              }
+          }
+          r += 1
+        }
+    }
+    out
+  }
+}
+
 /** One pushed aggregate's state over one object, kept per slot: a slot
   * is one group's index, and a global aggregate has one. The reader
   * walks the object once; `scan` folds each kept row's value into its
-  * row's slot in one typed loop over the column's segment, reading the
-  * values as stored: a column an older object stores narrower (an int
-  * under a bigint, a float under a double) is read at its stored width,
-  * and partials are in the table's type. A column the object predates
-  * reads as all null. Every aggregate merges associatively in Spark's
-  * final aggregate, so a slot may emit several partials: a decimal SUM
-  * does, to keep each one inside its field's precision. */
+  * row's slot in one typed loop over the column's segment (or over a
+  * decimal term's values), reading the values as stored: a column an
+  * older object stores narrower (an int under a bigint, a float under a
+  * double) is read at its stored width, and partials are in the table's
+  * type. A column the object predates reads as all null. Every
+  * aggregate merges associatively in Spark's final aggregate, so a slot
+  * may emit several partials: a decimal SUM does, to keep each one
+  * inside its field's precision. */
 private[sources] sealed abstract class PartialAcc {
-  /** Fold row r into slot `slot(r)`, for every r whose slot is not -1,
-    * reading `seg(column)`: null where the object predates the column. */
-  def scan(seg: String => ObjectFormat.Segment, slot: Array[Int]): Unit
+  /** Fold every row whose slot is not -1 into its slot. */
+  def scan(in: ObjectRows): Unit
   /** Slot k's partials, oldest first; at least one. */
   def partials(k: Int): Seq[Any]
   /** The partial of no rows, which pads a row with fewer partials. */
@@ -3561,8 +3722,8 @@ private[sources] object PartialAcc {
     case FooterAgg.CountStar => new Count(None, slots)
     case FooterAgg.CountOf(c) => new Count(Some(c), slots)
     case FooterAgg.SumOf(c, ansi) => new LongSum(c, ansi, slots)
-    case FooterAgg.SumDecimal(fs, dt) =>
-      new DecimalSum(fs.map(f => (f, table(f.column).dataType)), dt, slots)
+    case FooterAgg.SumDecimal(t) => new DecimalSum(t, slots)
+    case FooterAgg.CountDecimal(t) => new DecimalCount(t, slots)
     case FooterAgg.MinOf(c, dt) => new MinMax(c, dt, max = false, slots)
     case FooterAgg.MaxOf(c, dt) => new MinMax(c, dt, max = true, slots)
     case FooterAgg.MinDateOf(c, zone) =>
@@ -3602,8 +3763,8 @@ private[sources] object PartialAcc {
   /** COUNT(*) (`col` None) or COUNT(col). */
   final class Count(col: Option[String], slots: Int) extends PartialAcc {
     private val n = new Array[Long](slots)
-    def scan(seg: String => Segment, slot: Array[Int]): Unit = {
-      val s = col.map(seg).orNull
+    def scan(in: ObjectRows): Unit = {
+      val (s, slot) = (col.map(in.seg).orNull, in.slot)
       if (col.isEmpty || s != null) {
         var r = 0
         while (r < slot.length) {
@@ -3628,8 +3789,8 @@ private[sources] object PartialAcc {
         else s(k) + v
       seen(k) = true
     }
-    def scan(seg: String => Segment, slot: Array[Int]): Unit = {
-      val sg = seg(col)
+    def scan(in: ObjectRows): Unit = {
+      val (sg, slot) = (in.seg(col), in.slot)
       if (sg != null) {
         val bb = sg.bb
         if (sg.dt == IntegerType) present(sg, slot, 4)((k, p) => plus(k, bb.getInt(p).toLong))
@@ -3639,65 +3800,63 @@ private[sources] object PartialAcc {
     def partials(k: Int): Seq[Any] = Seq(if (seen(k)) Long.box(s(k)) else null)
   }
 
-  /** SUM of one decimal cast, or of the product of two, on exact
-    * unscaled longs; each factor comes with its column's table type.
-    * Spark casts each partial to the summed term's type `dt` before its
-    * final merge, so a partial must stay below 10^p: when the next term
-    * would take a slot's running sum out of that range, the sum so far
-    * becomes a partial of its own and a fresh one starts. A product
-    * multiplies the unscaled factors: its scale is s1 + s2, so nothing
-    * rounds. As in Spark's `Multiply`, the right factor is cast only
-    * when the left one is not null. */
-  final class DecimalSum(factors: Seq[(FooterAgg.CastTo, DataType)], dt: DecimalType,
-      slots: Int) extends PartialAcc {
-    import DecimalCast.Null
-    private val limit = DecimalCast.pow10(dt.precision)
+  /** Every kept row where term `t` is not null: `fast(slot, u)` with its
+    * unscaled value u, or, where the fast path could not prove it,
+    * `slow(slot, d)` with Spark's own value d. */
+  @inline private def terms(in: ObjectRows, t: DecimalTerm)(fast: (Int, Long) => Unit)(
+      slow: (Int, Decimal) => Unit): Unit = {
+    import DecimalTerm.{Null, Slow}
+    val (v, slot) = (in.term(t), in.slot)
+    var r = 0
+    while (r < slot.length) {
+      val k = slot(r)
+      if (k >= 0) {
+        val u = v(r)
+        if (u == Slow) {
+          val d = in.exact(t, r)
+          if (d != null) slow(k, d)
+        } else if (u != Null) fast(k, u)
+      }
+      r += 1
+    }
+  }
+
+  /** COUNT of a decimal term. */
+  final class DecimalCount(t: DecimalTerm, slots: Int) extends PartialAcc {
+    private val n = new Array[Long](slots)
+    def scan(in: ObjectRows): Unit = terms(in, t)((k, _) => n(k) += 1)((k, _) => n(k) += 1)
+    def partials(k: Int): Seq[Any] = Seq(Long.box(n(k)))
+    override def identity: Any = Long.box(0L)
+  }
+
+  /** SUM of a decimal term on exact unscaled longs. Spark casts each
+    * partial to the term's type before its final merge, so a partial
+    * must stay inside it: a slot's running sum stays below 10^p, or
+    * below 10^18 when p > 18 (where it must fit a long). When the next
+    * value would take it out of that range, the sum so far becomes a
+    * partial of its own and a fresh one starts; a single value past
+    * 10^18 is a partial of its own. */
+  final class DecimalSum(t: DecimalTerm, slots: Int) extends PartialAcc {
+    private val (p, sc) = (t.dt.precision, t.dt.scale)
+    private val limit = DecimalCast.pow10(math.min(p, DecimalCast.MaxPrecision))
     private val s = new Array[Long](slots)
     private val seen = new Array[Boolean](slots)
     private val done = Array.fill(slots)(Seq.empty[Any])
-    private def partial(u: Long): Decimal = Decimal(u, dt.precision, dt.scale)
-    @inline private def plus(k: Int, u: Long): Unit =
-      if (!seen(k)) { s(k) = u; seen(k) = true }
+    private def plus(k: Int, u: Long): Unit =
+      if (u <= -limit || u >= limit) done(k) :+= Decimal(u, p, sc)
+      else if (!seen(k)) { s(k) = u; seen(k) = true }
       else {
         val n = s(k) + u // |s|, |u| < 10^18: no long overflow
-        if (n <= -limit || n >= limit) { done(k) :+= partial(s(k)); s(k) = u }
+        if (n <= -limit || n >= limit) { done(k) :+= Decimal(s(k), p, sc); s(k) = u }
         else s(k) = n
       }
 
-    def scan(seg: String => Segment, slot: Array[Int]): Unit = {
-      val segs = factors.map { case (f, _) => seg(f.column) }
-      val casts = factors.zip(segs).map { case ((f, from), sg) =>
-        if (sg == null) null else new DecimalCast(from, f.dt, sg.dt)
-      }
-      val (s0, cast0) = (segs.head, casts.head)
-      if (s0 == null) return // the left factor is null in every row
-      val bb0 = s0.bb
-      if (segs.length == 1) present(s0, slot, cast0.width) { (k, p) =>
-        val a = cast0.at(bb0, p)
-        if (a != Null) plus(k, a)
-      } else {
-        val (s1, cast1) = (segs(1), casts(1))
-        var p0 = s0.valOff
-        var p1 = if (s1 == null) 0 else s1.valOff
-        var r = 0
-        while (r < slot.length) {
-          val has0 = s0.presentAt(r)
-          val has1 = s1 != null && s1.presentAt(r)
-          val k = slot(r)
-          if (k >= 0 && has0) {
-            val a = cast0.at(bb0, p0)
-            if (a != Null && has1) {
-              val b = cast1.at(s1.bb, p1)
-              if (b != Null) plus(k, Math.multiplyExact(a, b))
-            }
-          }
-          if (has0) p0 += cast0.width
-          if (has1) p1 += cast1.width
-          r += 1
-        }
-      }
+    def scan(in: ObjectRows): Unit = terms(in, t)(plus) { (k, d) =>
+      val b = d.toJavaBigDecimal.unscaledValue
+      if (b.bitLength < 63) plus(k, b.longValue) else done(k) :+= d
     }
-    def partials(k: Int): Seq[Any] = done(k) :+ (if (seen(k)) partial(s(k)) else null)
+    def partials(k: Int): Seq[Any] =
+      done(k) :+ (if (seen(k)) Decimal(s(k), p, sc) else null)
   }
 
   /** MIN or MAX of a statable column (integral, temporal, floating or
@@ -3714,8 +3873,8 @@ private[sources] object PartialAcc {
       var k = 0
       while (k < slots) { if (found(k)) best(k) = v(k); k += 1 }
     }
-    def scan(seg: String => Segment, slot: Array[Int]): Unit = {
-      val sg = seg(col)
+    def scan(in: ObjectRows): Unit = {
+      val (sg, slot) = (in.seg(col), in.slot)
       if (sg == null) return
       val bb = sg.bb
       val found = new Array[Boolean](slots)
@@ -3804,8 +3963,8 @@ private[sources] object PartialAcc {
       org.apache.spark.sql.catalyst.util.DateTimeUtils.microsToDays(micros, zid)
     private val best = new Array[Long](slots)
     private val found = new Array[Boolean](slots)
-    def scan(seg: String => Segment, slot: Array[Int]): Unit = {
-      val sg = seg(col)
+    def scan(in: ObjectRows): Unit = {
+      val (sg, slot) = (in.seg(col), in.slot)
       if (sg != null) {
         val bb = sg.bb
         present(sg, slot, 8) { (k, p) =>
@@ -3908,10 +4067,9 @@ class GraftPartialAggReaderFactory(fullSchema: StructType,
 
   /** One object's partial rows from one walk over the segments the
     * aggregation reads. The row-fate mask (the deletion vector and the
-    * filters the footer leaves open) gives each row a slot: -1 where the
-    * row is dropped, else its group's index, numbered in order of first
-    * appearance, from the boxed key segments widened to the table's
-    * types. Each aggregate then folds its column into the slots in one
+    * filters the footer leaves open) and the group columns give each row
+    * its slot ([[GraftPartialAggReaderFactory.slots]]). Each aggregate
+    * then folds its column, or its decimal term, into the slots in one
     * typed loop. A global aggregate has one slot, so its loops box
     * nothing and look nothing up per row. */
   private def walk(path: String): Seq[Array[Any]] = ObjectFile.using(path) { obj =>
@@ -3921,35 +4079,62 @@ class GraftPartialAggReaderFactory(fullSchema: StructType,
     val boxed = scala.collection.mutable.HashMap.empty[String, Array[Any]]
     def values(c: String): Array[Any] = boxed.getOrElseUpdate(c,
       obj.fieldIdx.get(c).map(i => obj.boxed(i, bytes(i))).orNull)
-    val keep = ObjectFormat.rowFate(obj.rowCount, DeleteVectors.read(path),
-      residual, negated = false,
-      a => obj.fieldIdx.get(a).map(obj.schema(_).dataType), values)
-    // each group column's values in the table's type; null: all null
-    val keys: Seq[Array[Any]] = groups.map { c =>
+    // column c's values in the table's type; null: all null
+    val widened = scala.collection.mutable.HashMap.empty[String, Array[Any]]
+    def tableValues(c: String): Array[Any] = widened.getOrElseUpdate(c, {
       val vs = values(c)
       val widen = obj.fieldIdx.get(c).map(i =>
         ObjectFormat.widenConverter(obj.schema(i).dataType, fullSchema(c).dataType)).orNull
       if (vs == null || widen == null) vs else vs.map(widen)
-    }
-    def key(col: Array[Any], r: Int): Any = if (col == null) null else col(r)
-    val slot = new Array[Int](obj.rowCount)
-    val first = scala.collection.mutable.ArrayBuffer.empty[Int] // each slot's first row
-    val index = scala.collection.mutable.HashMap.empty[Any, Int]
-    var r = 0
-    while (r < slot.length) {
-      slot(r) =
-        if (!keep(r)) -1
-        else if (groups.isEmpty) { if (first.isEmpty) first += r; 0 }
-        else index.getOrElseUpdate(
-          if (keys.length == 1) key(keys.head, r) else keys.map(key(_, r)),
-          { first += r; first.length - 1 })
-      r += 1
-    }
+    })
+    val keep = ObjectFormat.rowFate(obj.rowCount, DeleteVectors.read(path),
+      residual, negated = false,
+      a => obj.fieldIdx.get(a).map(obj.schema(_).dataType), values)
+    val keys = groups.map(tableValues)
+    val (slot, first) = GraftPartialAggReaderFactory.slots(keep, keys)
     val segs = cols.flatMap(c => obj.fieldIdx.get(c).map(i =>
       c -> new ObjectFormat.Segment(bytes(i), obj.rowCount, obj.schema(i).dataType))).toMap
+    val in = new ObjectRows(segs, slot, fullSchema, tableValues)
     val accs = aggs.map(PartialAcc(_, fullSchema, first.length))
-    accs.foreach(_.scan(c => segs.getOrElse(c, null), slot))
-    first.indices.flatMap(k => PartialAcc.rows(keys.map(key(_, first(k))), accs, k))
+    accs.foreach(_.scan(in))
+    first.indices.flatMap { k =>
+      PartialAcc.rows(keys.map(col => if (col == null) null else col(first(k))), accs, k)
+    }
+  }
+}
+
+private[sources] object GraftPartialAggReaderFactory {
+  /** Each row's slot, -1 where `keep` drops it, else its group's index,
+    * numbered in order of first appearance; and each slot's first row.
+    * The key columns (`keys`, null where all null) refine the slots one
+    * at a time: a row's value gets a dense code of the column's own (one
+    * hash lookup), and the pair (slot so far, code) a fresh slot number
+    * (one long-keyed lookup). No row allocates. */
+  def slots(keep: Array[Boolean], keys: Seq[Array[Any]]): (Array[Int], Array[Int]) = {
+    val slot = keep.map(k => if (k) 0 else -1)
+    keys.filter(_ != null).foreach { col =>
+      val codes = new util.HashMap[Any, Integer]()
+      val pairs = new scala.collection.mutable.LongMap[Int]()
+      var r = 0
+      while (r < slot.length) {
+        if (slot(r) >= 0) {
+          val known = codes.get(col(r))
+          val code = if (known != null) known.intValue
+            else { val c = codes.size; codes.put(col(r), c); c }
+          val pair = slot(r).toLong << 32 | code
+          val s = pairs.getOrElse(pair, -1)
+          slot(r) = if (s >= 0) s else { val c = pairs.size; pairs.update(pair, c); c }
+        }
+        r += 1
+      }
+    }
+    val first = Array.fill(if (slot.isEmpty) 0 else slot.max + 1)(-1)
+    var r = 0
+    while (r < slot.length) {
+      if (slot(r) >= 0 && first(slot(r)) < 0) first(slot(r)) = r
+      r += 1
+    }
+    (slot, first)
   }
 }
 

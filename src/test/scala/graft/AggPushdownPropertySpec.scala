@@ -22,7 +22,12 @@ import graft.sources.{DeleteVectors, GraftAggRowsPartition, ObjectFormat}
   * objects carry a deletion vector. Values include nulls, NaN and ±0.0.
   * Queries draw random pushed filters and random pushable aggregates,
   * global or grouped by a widened key (i), an added key (a), a key with
-  * one group per row (id), a string, or two keys. */
+  * one group per row (id), a string, or two keys. The decimal terms
+  * cover `k ± CAST(c AS DECIMAL)` and `CAST(c AS DECIMAL) ± k` with and
+  * without an outer cast (one that overflows for a rare f, one for the
+  * ids past 59, which take the fast path), three-factor
+  * products (one past a long's range for a large i), COUNT of a cast,
+  * and a product whose right factor overflows where its left is null. */
 class AggPushdownPropertySpec extends SparkSpec {
 
   private val gen1 = StructType(Seq(
@@ -72,13 +77,23 @@ class AggPushdownPropertySpec extends SparkSpec {
     "SUM(CAST(i AS DECIMAL(10,2)) * CAST(f AS DECIMAL(5,2)))",
     "SUM(CAST(a AS DECIMAL(6,0)) * CAST(d AS DECIMAL(6,2)))",
     "MIN(CAST(ts AS DATE))", "MAX(CAST(ts AS DATE))")
+  private val terms: Seq[String] = Seq(
+    "SUM(2.5 + CAST(d AS DECIMAL(5,2)))", "SUM(CAST(f AS DECIMAL(4,2)) - 1)",
+    "SUM(CAST(55 - CAST(f AS DECIMAL(4,2)) AS DECIMAL(4,2)))",
+    "SUM(CAST(CAST(i AS DECIMAL(10,2)) + 1.25 AS DECIMAL(12,3)))",
+    "SUM(CAST(d AS DECIMAL(12,2)) * CAST(55 - CAST(f AS DECIMAL(4,2)) AS DECIMAL(4,2)) * " +
+      "CAST(1 + CAST(f AS DECIMAL(4,2)) AS DECIMAL(4,2)))",
+    "SUM(CAST(i AS DECIMAL(12,2)) * CAST(i AS DECIMAL(12,2)) * CAST(i AS DECIMAL(12,2)))",
+    "SUM(CAST(a AS DECIMAL(6,0)) * CAST(d AS DECIMAL(4,2)))",
+    "COUNT(CAST(d AS DECIMAL(5,2)))", "COUNT(CAST(f AS DECIMAL(4,2)) - 1)",
+    "COUNT(CAST(CAST(id AS DECIMAL(10,2)) + 9940 AS DECIMAL(6,2)))")
   private val groupings: Seq[Seq[String]] =
     Seq(Nil, Nil, Seq("i"), Seq("a"), Seq("id"), Seq("s"), Seq("i", "a"))
   private val leaf: Gen[String] = Gen.oneOf(
     Gen.choose(-3, 3).map(c => s"i > $c"), Gen.choose(-3, 3).map(c => s"i = $c"),
     Gen.choose(-1.0, 1.0).map(c => f"d < $c%.2f"), Gen.const("d IS NULL"),
     Gen.choose(-1.0, 1.0).map(c => f"f >= $c%.2f"), Gen.oneOf("s = 'a'", "s LIKE 'a%'"),
-    Gen.const("a IS NOT NULL"), Gen.choose(0, 2).map(c => s"a = $c"),
+    Gen.const("a IS NOT NULL"), Gen.const("a IS NULL"), Gen.choose(0, 2).map(c => s"a = $c"),
     Gen.choose(0, 160).map(c => s"id >= $c"), Gen.const("id >= 0"),
     Gen.choose(0, 4).map(c => s"ts < TIMESTAMP '1970-01-0${c + 1} 12:00:00'"))
   private val filter: Gen[String] = Gen.frequency(
@@ -103,7 +118,8 @@ class AggPushdownPropertySpec extends SparkSpec {
   // a global aggregate of footer-answerable aggregates under no filter
   // or a filter every footer proves is answered from footers
   private val query: Gen[String] = Gen.frequency(
-    3 -> shape(aggregates, groupings, filter),
+    3 -> shape(aggregates ++ terms, groupings, filter),
+    2 -> shape(terms, groupings, filter),
     1 -> shape(footerAggs, Seq(Nil), Gen.oneOf("TRUE", "id >= 0")))
 
   private var tables = 0

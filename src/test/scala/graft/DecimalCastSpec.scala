@@ -6,12 +6,13 @@ import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.DecimalCast
+import graft.sources.{DecimalCast, DecimalTerm}
 
-/** The reader tier's exact `CAST(x AS DECIMAL(p,s))` against Spark's own
-  * ANSI `Cast`, one value at a time: the same `Decimal` (value,
-  * precision and scale), the same null, or an exception of the same
-  * class and error condition. Pure JVM — no Spark job. */
+/** The reader tier's fast `CAST(x AS DECIMAL(p,s))` against Spark's own
+  * ANSI `Cast`, one value at a time: wherever the fast path gives an
+  * unscaled value, Spark gives that `Decimal` (value, precision and
+  * scale); every other value, null or error is left to Spark
+  * ([[DecimalTerm.Slow]]). Pure JVM — no Spark job. */
 class DecimalCastSpec extends AnyFunSuite {
 
   private val types = Seq((12, 2), (4, 2), (14, 2), (17, 4), (38, 10))
@@ -34,26 +35,24 @@ class DecimalCastSpec extends AnyFunSuite {
   private def spark(v: Any, from: DataType, to: DecimalType): Decimal =
     Cast(Literal(v, from), to, None, EvalMode.ANSI).eval().asInstanceOf[Decimal]
 
-  /** Both forms of the conversion agree with Spark on `v`: `decimal`
-    * always, and the unscaled long where p fits one. */
+  /** Values the fast path answered, over the whole spec. */
+  private var fastHits = 0
+
+  /** The fast path agrees with Spark on `v`, read from a segment-like
+    * buffer as the reader reads it. */
   private def agrees(v: Any, from: DataType, to: DecimalType): Prop = {
-    val conv = new DecimalCast(from, to, from)
+    val bb = java.nio.ByteBuffer.allocate(8)
+    v match {
+      case d: java.lang.Double => bb.putDouble(0, d)
+      case l: java.lang.Long => bb.putLong(0, l)
+      case i: Integer => bb.putInt(0, i)
+    }
+    val u = new DecimalCast(from, to, from).at(bb, 0)
     val ref = outcome(spark(v, from, to))
-    val got = outcome(conv.decimal(v))
-    val unscaled =
-      if (to.precision > DecimalCast.MaxPrecision) true
-      else {
-        val u = outcome {
-          val x = v match {
-            case d: java.lang.Double => conv.ofDouble(d)
-            case n: Number => conv.ofIntegral(n.longValue())
-          }
-          if (x == DecimalCast.Null) null else Decimal(x, to.precision, to.scale)
-        }
-        u == ref
-      }
-    Prop(got == ref && unscaled) :|
-      s"CAST($v AS $to): got $got, Spark $ref"
+    if (u != DecimalTerm.Slow) fastHits += 1
+    val got = if (u == DecimalTerm.Slow) ref else Right(Some((
+      Decimal(u, to.precision, to.scale).toJavaBigDecimal, to.precision, to.scale)))
+    Prop(got == ref) :| s"CAST($v AS $to): fast $u, Spark $ref"
   }
 
   private def forTypes(n: Int, from: DataType)(gen: DecimalType => Gen[Any]): Unit =
@@ -67,6 +66,7 @@ class DecimalCastSpec extends AnyFunSuite {
       Iterator.iterate(d)(Math.nextDown).take(k + 1).toSeq
 
   test("money-shaped doubles: cents, mills and tenths of a mill") {
+    val before = fastHits
     forTypes(1500, DoubleType) { to =>
       val top = math.min(1e15, math.pow(10, to.precision - to.scale + 1)).toLong
       for {
@@ -74,6 +74,9 @@ class DecimalCastSpec extends AnyFunSuite {
         k <- Gen.choose(-top, top)
       } yield Double.box(k / math.pow(10, digits))
     }
+    // values of at most `s` digits inside the bounds, about a third of
+    // these draws, take the fast path
+    assert(fastHits - before > 1500 * types.length / 4, s"${fastHits - before} fast")
   }
 
   test("arbitrary doubles: every bit pattern, and every decade") {

@@ -13,8 +13,9 @@ import org.apache.spark.sql.sources.LessThan
 import graft.sources.ObjectStoreMaintenance
 
 /** Money aggregates inside storage: `SUM(CAST(x AS DECIMAL(p,s)))`, the
-  * q6 product of two such casts, and `MIN/MAX(CAST(ts AS DATE))` push
-  * into the reader tier under ANSI. Every shape is compared with the
+  * q6 product of two such casts, TPC-H Q1's three-factor term with its
+  * `1 - x` and `1 + x` casts, and `MIN/MAX(CAST(ts AS DATE))` push into
+  * the reader tier under ANSI. Every shape is compared with the
   * same query read with `agg.pushdown=false`: the same rows, or the
   * same error condition. Tables are small and generated. */
 class DecimalPushdownSpec extends SparkSpec {
@@ -214,6 +215,49 @@ class DecimalPushdownSpec extends SparkSpec {
       .replace("{pred}", "TRUE"))
     assert(plan(travel).contains("GraftPartialAggScan"), plan(travel).take(1500))
     assert(outcome(travel) == outcome(sqlOn(narrow, "dp_v1_ref", "TRUE")))
+  }
+
+  /** One object of `(k, price, disc, tax)` rows. */
+  private def q1Rows(name: String, rows: Seq[(Int, Double, Double, Double)]): Unit = {
+    val dir = tmp(s"graft-$name") + "/t"
+    spark.createDataFrame(rows).toDF("k", "price", "disc", "tax").coalesce(1)
+      .write.format("graft-objects").mode("overwrite").save(dir)
+    objectViews(name, dir)
+  }
+  private val disc1 = "CAST(1 - CAST(disc AS DECIMAL(4,2)) AS DECIMAL(4,2))"
+  private val tax1 = "CAST(1 + CAST(tax AS DECIMAL(4,2)) AS DECIMAL(4,2))"
+  private val charge = s"CAST(price AS DECIMAL(12,2)) * $disc1 * $tax1"
+  private val q1Shape = s"SELECT k, SUM(CAST(price AS DECIMAL(12,2)) * $disc1) AS disc_price, " +
+    s"SUM($charge) AS charge, COUNT(CAST(price AS DECIMAL(12,2))) AS n " +
+    "FROM {t} WHERE {pred} GROUP BY k"
+
+  test("Q1's outer CAST(1 - x AS DECIMAL(4,2)) overflows as the unpushed read does") {
+    // -99.5 passes the inner cast and takes 1 - x to 100.50; 150 already
+    // overflows the inner one
+    q1Rows("dp_q1ovf", Seq((1, 10.0, 0.05, 0.02), (2, 20.0, -99.5, 0.0), (3, 30.0, 150.0, 0.0)))
+    val err = Left("NUMERIC_VALUE_OUT_OF_RANGE.WITH_SUGGESTION")
+    assert(samePushed(q1Shape, "dp_q1ovf", "TRUE") == err)
+    assert(samePushed(q1Shape, "dp_q1ovf", "k <> 3") == err)
+    assert(samePushed(q1Shape, "dp_q1ovf", "k = 1") ==
+      Right(Seq("[1,9.5000,9.690000,1]")))
+  }
+
+  test("a DECIMAL(22,6) term past a long's range is exact through Spark's expression") {
+    // 9999999999.99 * 99.99 * 99.99: about 10^14, unscaled about 10^20
+    q1Rows("dp_q1big", Seq((1, 9999999999.99, -98.99, 98.99), (1, 1.0, 0.0, 0.0),
+      (2, 9999999999.99, -98.99, 98.99), (2, 9999999999.99, -98.99, 98.99)))
+    assert(samePushed(q1Shape, "dp_q1big", "TRUE") == Right(Seq(
+      "[1,999900000000.0001,99980000999901.019999,2]",
+      "[2,1999799999998.0002,199960001999800.039998,2]")))
+  }
+
+  test("a DECIMAL(32,6) running sum spills at a long's range, exact in every group") {
+    // each charge is about 9.9e9, unscaled 9.9e15: each group's 1500
+    // rows sum to about 1.5e19, at least 15 partials below 10^18
+    q1Rows("dp_q1spill", (0 until 3000).map(i => (i % 2, 9899999999.99 - i, 0.0, 0.0)))
+    val got = samePushed(q1Shape, "dp_q1spill", "TRUE")
+    assert(got.isRight, got)
+    assert(scanRows(sqlOn(q1Shape, "dp_q1spill", "TRUE")) >= 30)
   }
 
   test("MIN/MAX of a timestamp cast to DATE in a zone with daylight saving") {

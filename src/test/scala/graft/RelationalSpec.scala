@@ -1,6 +1,12 @@
 package graft
 
+import java.nio.file.Files
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
+
+import graft.sources.{DeleteVectors, GraftObjectTable, GraftPartialAggScan, ObjectStoreIngest}
 
 class RelationalSpec extends SparkSpec {
 
@@ -16,6 +22,37 @@ class RelationalSpec extends SparkSpec {
       val avg = r.getDouble(r.fieldIndex("avg_qty"))
       assert(avg > 0 && avg < 51)
     }
+  }
+
+  test("q1_agg aggregates inside the object store: one partial scan, exact rows") {
+    val root = Files.createTempDirectory("graft-q1").toString
+    ObjectStoreIngest.ingest(spark, sf, root)
+    // a deletion vector on one lineitem object
+    val li = s"$root/lineitem"
+    DeleteVectors.write(GraftObjectTable.listObjects(li).head, (0 until 60 by 3).toArray)
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    Tables.objectStoreRoot = Some(root)
+    val (pushed, scans) = try {
+      val df = run("q1_agg")
+      (rows(df), df.queryExecution.sparkPlan.collect { case b: BatchScanExec => b.scan })
+    } finally Tables.objectStoreRoot = None
+    val desc = scans.collect { case s: GraftPartialAggScan => s.description() }
+    assert(scans.length == 1 && desc.length == 1, scans)
+    // Spark's SQL form of sum_charge's three-factor term
+    assert(desc.head.contains("sum((CAST(l_extendedprice AS DECIMAL(12,2)) * " +
+      "CAST(1 - CAST(l_discount AS DECIMAL(4,2)) AS DECIMAL(4,2))) * " +
+      "CAST(1 + CAST(l_tax AS DECIMAL(4,2)) AS DECIMAL(4,2)))"), desc.head)
+    // the same objects read with the aggregation held off
+    spark.read.format("graft-objects").option("agg.pushdown", "false").load(li)
+      .createOrReplaceTempView("lineitem")
+    val unpushed = try rows(spark.sql(SparkEntry.oracleSql("q1_agg")))
+      finally spark.catalog.dropTempView("lineitem")
+    // the parquet route over the live rows
+    val pq = Files.createTempDirectory("graft-q1pq").toString
+    spark.read.format("graft-objects").load(li).write.parquet(s"$pq/lineitem.parquet")
+    val viaParquet = rows(SparkEntry.queries("q1_agg")(spark, pq))
+    assert(pushed.length == 6 && pushed == unpushed && pushed == viaParquet,
+      s"pushed $pushed\nunpushed $unpushed\nparquet $viaParquet")
   }
 
   test("q_agg_global merges partials like the reference client (1 row)") {
