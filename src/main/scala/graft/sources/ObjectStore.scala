@@ -3510,8 +3510,9 @@ object DecimalTerm {
   *
   * The fast path for a double `d`:
   *  - `|d| < 2^51 / 10^s`, so ulp(d) < 10^-s / 2;
-  *  - `u = round(d · 10^s)` satisfies `u / 10^s == d`, so the decimal
-  *    u·10^-s lies in d's rounding interval;
+  *  - `u`, an integer nearest the double product d · 10^s (`rint`, one
+  *    instruction), satisfies `u / 10^s == d`, so the decimal u·10^-s
+  *    lies in d's rounding interval;
   *  - `|u| < 10^p`.
   * Spark rounds `Double.toString(d)` HALF_UP to s places. That string
   * also lies in d's rounding interval, so it is less than one ulp, and
@@ -3548,7 +3549,7 @@ final class DecimalCast(from: DataType, to: DecimalType, stored: DataType) {
 
   private def ofDouble(d: Double): Long = {
     if (Math.abs(d) < bound) {
-      val u = Math.round(d * powD)
+      val u = Math.rint(d * powD).toLong
       if (u / powD == d && u > -limit && u < limit) return u
     }
     Slow
@@ -3578,30 +3579,86 @@ object DecimalCast {
 
 /** What one object's walk gives its accumulators: each column's
   * segment (null where the object predates the column), each row's slot
-  * (-1 where the row is dropped), and the object's decimal terms.
+  * (-1 where the row is dropped), and the values of its decimal terms.
   *
-  * A term is evaluated once per object and distinct node, over the kept
-  * rows, into unscaled longs at the node's scale: aggregates that share
-  * a subterm (Q1's price cast, or `price * (1 - discount)` inside
-  * `price * (1 - discount) * (1 + tax)`) share its values. Each node is
-  * exact long arithmetic with Spark's ANSI precision check: a value
-  * outside the node's precision, a long overflow, a rescale past 10^18
-  * and a cast [[DecimalCast]] cannot prove all give
-  * [[DecimalTerm.Slow]], and a row whose term is Slow takes the whole
-  * term's value from its Spark expression ([[exact]]): Spark's value,
-  * null or error by construction. As in Spark's binary arithmetic, a
-  * null left operand makes a node null without regard to the right.
-  * `values(c)` is column c's boxed values in the table's type (null:
-  * all null), decoded only when a row needs [[exact]]. */
+  * The term aggregates are folded together ([[fold]]), a block of rows
+  * at a time: the block's kept rows are listed once, and each distinct
+  * node of their terms is one [[ObjectRows.Node]] that computes its
+  * values at those rows once, in one tight loop, into a buffer of its
+  * own that every consumer reads. A leaf decodes and casts its segment's
+  * values, a literal is a constant, and an operation combines its
+  * operands' buffers. A block stays in cache and the object allocates
+  * nothing per row, yet aggregates that share a subterm share its
+  * values: Q1 casts `l_extendedprice` once for its aggregates, and
+  * computes `price * (1 - discount)` once for `sum_disc_price` and
+  * `sum_charge`. Each node is exact long arithmetic with Spark's ANSI
+  * precision check: a value outside the node's precision, a long
+  * overflow, a rescale past 10^18 and a cast [[DecimalCast]] cannot
+  * prove all give [[DecimalTerm.Slow]], and a row whose term is Slow
+  * takes the whole term's value from its Spark expression ([[exact]]):
+  * Spark's value, null or error by construction. As in Spark's binary
+  * arithmetic, a null left operand makes a node null whatever the right.
+  * `values(c)` is column c's boxed values in the table's type (null: all
+  * null), decoded only when a row needs [[exact]]. */
 private[sources] final class ObjectRows(segs: Map[String, ObjectFormat.Segment],
     val slot: Array[Int], table: StructType, values: String => Array[Any]) {
   import DecimalTerm.{Null, Slow}
+  import ObjectRows._
   def seg(c: String): ObjectFormat.Segment = segs.getOrElse(c, null)
 
-  private val memo = scala.collection.mutable.HashMap.empty[DecimalTerm, Array[Long]]
-  /** Each row's value of `t`: unscaled, [[DecimalTerm.Null]] or
-    * [[DecimalTerm.Slow]] (unspecified at a dropped row). */
-  def term(t: DecimalTerm): Array[Long] = memo.getOrElseUpdate(t, compute(t))
+  /** Every kept row's value of each aggregate's term, handed to the
+    * aggregate with the row's slot: `fast` with an unscaled value,
+    * `slow` with Spark's value where the fast path could not prove it,
+    * nothing where the term is null. */
+  def fold(accs: Seq[PartialAcc.OfTerm]): Unit = if (accs.nonEmpty) {
+    val nodes = scala.collection.mutable.HashMap.empty[DecimalTerm, Node]
+    def node(t: DecimalTerm): Node = nodes.getOrElseUpdate(t, {
+      val lim =
+        if (t.dt.precision <= DecimalCast.MaxPrecision) DecimalCast.pow10(t.dt.precision)
+        else Long.MaxValue
+      t match {
+        case DecimalTerm.Col(c, _) =>
+          val sg = seg(c)
+          if (sg == null) new Const(Null)
+          else new Leaf(sg, new DecimalCast(table(c).dataType, t.dt, sg.dt))
+        case DecimalTerm.Lit(v, _) =>
+          val b = v.toJavaBigDecimal.unscaledValue
+          new Const(if (b.bitLength < 64) checked(b.longValue, lim) else Slow)
+        case DecimalTerm.Recast(child, _) =>
+          new Recast(node(child), t.dt.scale - child.dt.scale, lim)
+        case DecimalTerm.Arith("*", left, right, _) => new Times(node(left), node(right), lim)
+        case DecimalTerm.Arith(op, left, right, _) =>
+          new Plus(node(left), node(right), t.dt.scale - left.dt.scale,
+            t.dt.scale - right.dt.scale, if (op == "-") -1L else 1L, lim)
+      }
+    })
+    val (as, vs) = (accs.toArray, accs.map(a => node(a.term)).toArray)
+    val sel = new Array[Int](Block)
+    var from = 0
+    while (from < slot.length) {
+      val end = math.min(from + Block, slot.length)
+      // the block's kept rows, without a branch per row
+      var m = 0
+      var r = from
+      while (r < end) { sel(m) = r; m += ~slot(r) >>> 31; r += 1 }
+      var j = 0
+      while (j < as.length && m > 0) {
+        val (acc, block) = (as(j), vs(j).block(from, sel, m))
+        var i = 0
+        while (i < m) {
+          val r = sel(i)
+          val u = block(i)
+          if (u == Slow) {
+            val d = exact(acc.term, r)
+            if (d != null) acc.slow(slot(r), d)
+          } else if (u != Null) acc.fast(slot(r), u)
+          i += 1
+        }
+        j += 1
+      }
+      from = end
+    }
+  }
 
   private val row = new GenericInternalRow(table.length)
   /** Spark's value of `t` at row r: a Decimal of `t.dt`, or null. */
@@ -3611,6 +3668,98 @@ private[sources] final class ObjectRows(segs: Map[String, ObjectFormat.Segment],
       row.update(table.fieldIndex(c), if (vs == null) null else vs(r))
     }
     t.expr.eval(row).asInstanceOf[Decimal]
+  }
+}
+
+private[sources] object ObjectRows {
+  import DecimalTerm.{Null, Slow}
+
+  /** Rows per block: a block of longs stays in a core's L1 cache. */
+  val Block = 1024
+
+  /** One term node over one object, asked for the kept rows of
+    * consecutive blocks, each block any number of times. */
+  sealed abstract class Node {
+    protected val out = new Array[Long](Block)
+    private var last = -1
+    /** The values of rows `sel(0 until m)` (increasing, inside the block
+      * from row `from`) in `out(0 until m)`: unscaled, Null or Slow. */
+    protected def compute(from: Int, sel: Array[Int], m: Int): Unit
+    /** The block from row `from` with kept rows `sel(0 until m)`,
+      * computed on its first request; valid until the next block. */
+    final def block(from: Int, sel: Array[Int], m: Int): Array[Long] = {
+      if (from != last) { compute(from, sel, m); last = from }
+      out
+    }
+  }
+  final class Const(u: Long) extends Node {
+    util.Arrays.fill(out, u)
+    protected def compute(from: Int, sel: Array[Int], m: Int): Unit = ()
+  }
+  /** A cast column. A segment without absent values is read at each
+    * row's offset; one with them moves a cursor over every row. */
+  final class Leaf(sg: ObjectFormat.Segment, cast: DecimalCast) extends Node {
+    private val (bb, width, off) = (sg.bb, cast.width, sg.valOff)
+    private var next = 0 // the row whose value, if present, is at p
+    private var p = off
+    protected def compute(from: Int, sel: Array[Int], m: Int): Unit = {
+      var i = 0
+      if (!sg.hasPres) while (i < m) {
+        out(i) = cast.at(bb, off + sel(i) * width)
+        i += 1
+      } else while (i < m) {
+        val r = sel(i)
+        while (next < r) { if (sg.presentAt(next)) p += width; next += 1 }
+        out(i) = if (sg.presentAt(r)) cast.at(bb, p) else Null
+        i += 1
+      }
+    }
+  }
+  final class Recast(x: Node, k: Int, lim: Long) extends Node {
+    protected def compute(from: Int, sel: Array[Int], m: Int): Unit = {
+      val xs = x.block(from, sel, m)
+      var i = 0
+      while (i < m) {
+        val a = xs(i)
+        out(i) = if (a == Null || a == Slow) a else checked(rescale(a, k), lim)
+        i += 1
+      }
+    }
+  }
+  final class Times(x: Node, y: Node, lim: Long) extends Node {
+    protected def compute(from: Int, sel: Array[Int], m: Int): Unit = {
+      val (xs, ys) = (x.block(from, sel, m), y.block(from, sel, m))
+      var i = 0
+      while (i < m) {
+        val a = xs(i)
+        out(i) =
+          if (a == Null || a == Slow) a
+          else {
+            val b = ys(i)
+            if (b == Null || b == Slow) b else checked(mul(a, b), lim)
+          }
+        i += 1
+      }
+    }
+  }
+  /** `x + y`, or `x - y` (sign -1), at the node's scale. */
+  final class Plus(x: Node, y: Node, kx: Int, ky: Int, sign: Long, lim: Long)
+      extends Node {
+    protected def compute(from: Int, sel: Array[Int], m: Int): Unit = {
+      val (xs, ys) = (x.block(from, sel, m), y.block(from, sel, m))
+      var i = 0
+      while (i < m) {
+        val a = xs(i)
+        out(i) =
+          if (a == Null || a == Slow) a
+          else {
+            val b = ys(i)
+            if (b == Null || b == Slow) b
+            else checked(add(rescale(a, kx), mul(sign, rescale(b, ky))), lim)
+          }
+        i += 1
+      }
+    }
   }
 
   /** `u` if it lies below `lim` (10^p, or a long's range) in magnitude,
@@ -3632,82 +3781,21 @@ private[sources] final class ObjectRows(segs: Map[String, ObjectFormat.Segment],
   /** `u` raised by k decimal places. */
   @inline private def rescale(u: Long, k: Int): Long =
     if (k == 0) u else if (k > DecimalCast.MaxPrecision) Slow else mul(u, DecimalCast.pow10(k))
-  private def limit(dt: DecimalType): Long =
-    if (dt.precision <= DecimalCast.MaxPrecision) DecimalCast.pow10(dt.precision)
-    else Long.MaxValue
-
-  private def compute(t: DecimalTerm): Array[Long] = {
-    val out = new Array[Long](slot.length)
-    val lim = limit(t.dt)
-    t match {
-      case DecimalTerm.Col(c, _) =>
-        val sg = seg(c)
-        if (sg == null) util.Arrays.fill(out, Null)
-        else {
-          val cast = new DecimalCast(table(c).dataType, t.dt, sg.dt)
-          val bb = sg.bb
-          var p = sg.valOff
-          var r = 0
-          while (r < out.length) {
-            if (!sg.presentAt(r)) out(r) = Null
-            else {
-              if (slot(r) >= 0) out(r) = cast.at(bb, p)
-              p += cast.width
-            }
-            r += 1
-          }
-        }
-      case DecimalTerm.Lit(v, _) =>
-        val b = v.toJavaBigDecimal.unscaledValue
-        util.Arrays.fill(out, if (b.bitLength < 64) checked(b.longValue, lim) else Slow)
-      case DecimalTerm.Recast(child, _) =>
-        val (x, k) = (term(child), t.dt.scale - child.dt.scale)
-        var r = 0
-        while (r < out.length) {
-          if (slot(r) >= 0) {
-            val a = x(r)
-            out(r) = if (a == Null || a == Slow) a else checked(rescale(a, k), lim)
-          }
-          r += 1
-        }
-      case DecimalTerm.Arith(op, left, right, _) =>
-        val (x, y) = (term(left), term(right))
-        val (kx, ky) = (t.dt.scale - left.dt.scale, t.dt.scale - right.dt.scale)
-        val (times, sign) = (op == "*", if (op == "-") -1L else 1L)
-        var r = 0
-        while (r < out.length) {
-          if (slot(r) >= 0) {
-            val a = x(r)
-            out(r) =
-              if (a == Null || a == Slow) a
-              else {
-                val b = y(r)
-                if (b == Null || b == Slow) b
-                else checked(if (times) mul(a, b)
-                  else add(rescale(a, kx), mul(sign, rescale(b, ky))), lim)
-              }
-          }
-          r += 1
-        }
-    }
-    out
-  }
 }
 
 /** One pushed aggregate's state over one object, kept per slot: a slot
   * is one group's index, and a global aggregate has one. The reader
-  * walks the object once; `scan` folds each kept row's value into its
-  * row's slot in one typed loop over the column's segment (or over a
-  * decimal term's values), reading the values as stored: a column an
-  * older object stores narrower (an int under a bigint, a float under a
-  * double) is read at its stored width, and partials are in the table's
-  * type. A column the object predates reads as all null. Every
+  * walks the object once and folds each kept row's value into its row's
+  * slot: a column aggregate in one typed loop over the column's segment,
+  * a term aggregate from its term's blocks ([[ObjectRows.fold]]). Values
+  * are read as stored: a column an older object stores narrower (an int
+  * under a bigint, a float under a double) is read at its stored width,
+  * and partials are in the table's type. A column the object predates
+  * reads as all null. Every
   * aggregate merges associatively in Spark's final aggregate, so a slot
   * may emit several partials: a decimal SUM does, to keep each one
   * inside its field's precision. */
 private[sources] sealed abstract class PartialAcc {
-  /** Fold every row whose slot is not -1 into its slot. */
-  def scan(in: ObjectRows): Unit
   /** Slot k's partials, oldest first; at least one. */
   def partials(k: Int): Seq[Any]
   /** The partial of no rows, which pads a row with fewer partials. */
@@ -3716,6 +3804,30 @@ private[sources] sealed abstract class PartialAcc {
 
 private[sources] object PartialAcc {
   import ObjectFormat.Segment
+
+  /** An aggregate of a column, folded in one typed loop of its own. */
+  sealed abstract class OfColumn extends PartialAcc {
+    /** Fold every row whose slot is not -1 into its slot. */
+    def scan(in: ObjectRows): Unit
+  }
+  /** An aggregate of a decimal term, handed each kept row's value by
+    * [[ObjectRows.fold]]. */
+  sealed abstract class OfTerm(val term: DecimalTerm) extends PartialAcc {
+    /** Fold unscaled value u into slot k. */
+    def fast(k: Int, u: Long): Unit
+    /** Fold Spark's value d (not null) into slot k. */
+    def slow(k: Int, d: Decimal): Unit
+  }
+
+  /** Fold one object's kept rows into every accumulator: each column
+    * aggregate in its own loop, the term aggregates together. */
+  def scan(accs: Seq[PartialAcc], in: ObjectRows): Unit = {
+    accs.foreach {
+      case c: OfColumn => c.scan(in)
+      case _ =>
+    }
+    in.fold(accs.collect { case t: OfTerm => t })
+  }
 
   /** A fresh accumulator of `slots` slots over a table of schema `table`. */
   def apply(a: FooterAgg, table: StructType, slots: Int): PartialAcc = a match {
@@ -3761,7 +3873,7 @@ private[sources] object PartialAcc {
   }
 
   /** COUNT(*) (`col` None) or COUNT(col). */
-  final class Count(col: Option[String], slots: Int) extends PartialAcc {
+  final class Count(col: Option[String], slots: Int) extends OfColumn {
     private val n = new Array[Long](slots)
     def scan(in: ObjectRows): Unit = {
       val (s, slot) = (col.map(in.seg).orNull, in.slot)
@@ -3781,7 +3893,7 @@ private[sources] object PartialAcc {
   /** SUM of a Long or Int column: under ANSI an overflow raises Spark's
     * ARITHMETIC_OVERFLOW, as the unpushed sum does; otherwise the add
     * wraps, as Spark's does. */
-  final class LongSum(col: String, ansi: Boolean, slots: Int) extends PartialAcc {
+  final class LongSum(col: String, ansi: Boolean, slots: Int) extends OfColumn {
     private val s = new Array[Long](slots)
     private val seen = new Array[Boolean](slots)
     @inline private def plus(k: Int, v: Long): Unit = {
@@ -3800,31 +3912,11 @@ private[sources] object PartialAcc {
     def partials(k: Int): Seq[Any] = Seq(if (seen(k)) Long.box(s(k)) else null)
   }
 
-  /** Every kept row where term `t` is not null: `fast(slot, u)` with its
-    * unscaled value u, or, where the fast path could not prove it,
-    * `slow(slot, d)` with Spark's own value d. */
-  @inline private def terms(in: ObjectRows, t: DecimalTerm)(fast: (Int, Long) => Unit)(
-      slow: (Int, Decimal) => Unit): Unit = {
-    import DecimalTerm.{Null, Slow}
-    val (v, slot) = (in.term(t), in.slot)
-    var r = 0
-    while (r < slot.length) {
-      val k = slot(r)
-      if (k >= 0) {
-        val u = v(r)
-        if (u == Slow) {
-          val d = in.exact(t, r)
-          if (d != null) slow(k, d)
-        } else if (u != Null) fast(k, u)
-      }
-      r += 1
-    }
-  }
-
   /** COUNT of a decimal term. */
-  final class DecimalCount(t: DecimalTerm, slots: Int) extends PartialAcc {
+  final class DecimalCount(t: DecimalTerm, slots: Int) extends OfTerm(t) {
     private val n = new Array[Long](slots)
-    def scan(in: ObjectRows): Unit = terms(in, t)((k, _) => n(k) += 1)((k, _) => n(k) += 1)
+    def fast(k: Int, u: Long): Unit = n(k) += 1
+    def slow(k: Int, d: Decimal): Unit = n(k) += 1
     def partials(k: Int): Seq[Any] = Seq(Long.box(n(k)))
     override def identity: Any = Long.box(0L)
   }
@@ -3836,24 +3928,29 @@ private[sources] object PartialAcc {
     * value would take it out of that range, the sum so far becomes a
     * partial of its own and a fresh one starts; a single value past
     * 10^18 is a partial of its own. */
-  final class DecimalSum(t: DecimalTerm, slots: Int) extends PartialAcc {
+  final class DecimalSum(t: DecimalTerm, slots: Int) extends OfTerm(t) {
     private val (p, sc) = (t.dt.precision, t.dt.scale)
     private val limit = DecimalCast.pow10(math.min(p, DecimalCast.MaxPrecision))
     private val s = new Array[Long](slots)
     private val seen = new Array[Boolean](slots)
     private val done = Array.fill(slots)(Seq.empty[Any])
-    private def plus(k: Int, u: Long): Unit =
+    // every fast value lies inside 10^p when p <= 18
+    private val inside = p <= DecimalCast.MaxPrecision
+    def fast(k: Int, u: Long): Unit = {
+      // s(k) is 0 while unseen, and |s| < 10^18: the add overflows only
+      // when |u| >= 10^18, which spills whatever n is
+      val n = s(k) + u
+      if ((inside || (u > -limit && u < limit)) && n > -limit && n < limit) {
+        s(k) = n; seen(k) = true
+      } else spill(k, u)
+    }
+    private def spill(k: Int, u: Long): Unit =
       if (u <= -limit || u >= limit) done(k) :+= Decimal(u, p, sc)
-      else if (!seen(k)) { s(k) = u; seen(k) = true }
-      else {
-        val n = s(k) + u // |s|, |u| < 10^18: no long overflow
-        if (n <= -limit || n >= limit) { done(k) :+= Decimal(s(k), p, sc); s(k) = u }
-        else s(k) = n
-      }
+      else { done(k) :+= Decimal(s(k), p, sc); s(k) = u; seen(k) = true }
 
-    def scan(in: ObjectRows): Unit = terms(in, t)(plus) { (k, d) =>
+    def slow(k: Int, d: Decimal): Unit = {
       val b = d.toJavaBigDecimal.unscaledValue
-      if (b.bitLength < 63) plus(k, b.longValue) else done(k) :+= d
+      if (b.bitLength < 63) fast(k, b.longValue) else done(k) :+= d
     }
     def partials(k: Int): Seq[Any] =
       done(k) :+ (if (seen(k)) Decimal(s(k), p, sc) else null)
@@ -3864,7 +3961,7 @@ private[sources] object PartialAcc {
     * `SQLOrderingUtil` does (-0.0 equals 0.0, NaN is greatest), and of
     * equal values the first row's is kept. */
   final class MinMax(col: String, dt: DataType, max: Boolean, slots: Int)
-      extends PartialAcc {
+      extends OfColumn {
     import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
     private val best = new Array[Any](slots)
     @inline private def wins(c: Int): Boolean = if (max) c > 0 else c < 0
@@ -3954,7 +4051,7 @@ private[sources] object PartialAcc {
     * TIMESTAMP_NTZ, read in UTC): there the extreme micros convert
     * once, at the end; other zones convert every row. */
   final class DateBound(col: String, tsType: DataType, zone: String,
-      max: Boolean, slots: Int) extends PartialAcc {
+      max: Boolean, slots: Int) extends OfColumn {
     private val zid =
       if (tsType == TimestampNTZType) java.time.ZoneOffset.UTC
       else org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(zone)
@@ -4068,9 +4165,10 @@ class GraftPartialAggReaderFactory(fullSchema: StructType,
   /** One object's partial rows from one walk over the segments the
     * aggregation reads. The row-fate mask (the deletion vector and the
     * filters the footer leaves open) and the group columns give each row
-    * its slot ([[GraftPartialAggReaderFactory.slots]]). Each aggregate
-    * then folds its column, or its decimal term, into the slots in one
-    * typed loop. A global aggregate has one slot, so its loops box
+    * its slot ([[GraftPartialAggReaderFactory.slots]]). Each column
+    * aggregate then folds its column into the slots in one typed loop,
+    * and the term aggregates fold their terms together, a block of rows
+    * at a time. A global aggregate has one slot, so its loops box
     * nothing and look nothing up per row. */
   private def walk(path: String): Seq[Array[Any]] = ObjectFile.using(path) { obj =>
     val cols = (groups ++ aggs.flatMap(_.cols)).distinct
@@ -4094,9 +4192,8 @@ class GraftPartialAggReaderFactory(fullSchema: StructType,
     val (slot, first) = GraftPartialAggReaderFactory.slots(keep, keys)
     val segs = cols.flatMap(c => obj.fieldIdx.get(c).map(i =>
       c -> new ObjectFormat.Segment(bytes(i), obj.rowCount, obj.schema(i).dataType))).toMap
-    val in = new ObjectRows(segs, slot, fullSchema, tableValues)
     val accs = aggs.map(PartialAcc(_, fullSchema, first.length))
-    accs.foreach(_.scan(in))
+    PartialAcc.scan(accs, new ObjectRows(segs, slot, fullSchema, tableValues))
     first.indices.flatMap { k =>
       PartialAcc.rows(keys.map(col => if (col == null) null else col(first(k))), accs, k)
     }

@@ -38,16 +38,25 @@ class DecimalCastSpec extends AnyFunSuite {
   /** Values the fast path answered, over the whole spec. */
   private var fastHits = 0
 
-  /** The fast path agrees with Spark on `v`, read from a segment-like
-    * buffer as the reader reads it. */
-  private def agrees(v: Any, from: DataType, to: DecimalType): Prop = {
+  /** The fast path's answer for `v`, read from a segment-like buffer as
+    * the reader reads it. */
+  private def fast(v: Any, from: DataType, to: DecimalType): Long = {
     val bb = java.nio.ByteBuffer.allocate(8)
     v match {
       case d: java.lang.Double => bb.putDouble(0, d)
       case l: java.lang.Long => bb.putLong(0, l)
       case i: Integer => bb.putInt(0, i)
     }
-    val u = new DecimalCast(from, to, from).at(bb, 0)
+    new DecimalCast(from, to, from).at(bb, 0)
+  }
+
+  /** The fast path leaves `v` to Spark's `Cast`. */
+  private def leftToSpark(v: Any, from: DataType, to: DecimalType): Unit =
+    assert(fast(v, from, to) == DecimalTerm.Slow, s"CAST($v AS $to) must be Slow")
+
+  /** The fast path agrees with Spark on `v`. */
+  private def agrees(v: Any, from: DataType, to: DecimalType): Prop = {
+    val u = fast(v, from, to)
     val ref = outcome(spark(v, from, to))
     if (u != DecimalTerm.Slow) fastHits += 1
     val got = if (u == DecimalTerm.Slow) ref else Right(Some((
@@ -97,7 +106,11 @@ class DecimalCastSpec extends AnyFunSuite {
       Double.NaN, java.lang.Double.longBitsToDouble(0x7ff8000000000123L),
       Double.PositiveInfinity, Double.NegativeInfinity, Double.MaxValue, -Double.MaxValue)
     types.foreach { case (p, s) =>
-      specials.foreach(d => holds(1)(agrees(Double.box(d), DoubleType, DecimalType(p, s))))
+      val to = DecimalType(p, s)
+      specials.foreach(d => holds(1)(agrees(Double.box(d), DoubleType, to)))
+      // NaN and the infinities are null or an error in Spark, and no
+      // finite double this large has an exact short decimal
+      specials.drop(6).foreach(d => leftToSpark(Double.box(d), DoubleType, to))
     }
   }
 
@@ -125,6 +138,24 @@ class DecimalCastSpec extends AnyFunSuite {
       Gen.oneOf(Gen.choose(-top, top), Gen.choose(Int.MinValue, Int.MaxValue),
         Gen.oneOf(top - 1, top, -top, Int.MinValue, Int.MaxValue, 0))
         .map(Int.box)
+    }
+    // past 10^(p-s) Spark's cast raises, and the fast path never answers
+    val overflow = "NUMERIC_VALUE_OUT_OF_RANGE"
+    types.foreach { case (p, s) =>
+      val to = DecimalType(p, s)
+      val outOfRange = (v: Any, from: DataType) => {
+        leftToSpark(v, from, to)
+        val err = outcome(spark(v, from, to))
+        assert(err.left.exists(_.contains(overflow)), s"CAST($v AS $to): $err")
+      }
+      if (p - s <= 18) {
+        val top = math.pow(10, p - s).toLong
+        Seq(top, -top, Long.MaxValue, Long.MinValue).foreach(v => outOfRange(Long.box(v), LongType))
+      }
+      if (p - s <= 9) {
+        val top = math.pow(10, p - s).toInt
+        Seq(top, -top, Int.MaxValue, Int.MinValue).foreach(v => outOfRange(Int.box(v), IntegerType))
+      }
     }
   }
 }

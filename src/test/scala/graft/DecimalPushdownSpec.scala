@@ -184,6 +184,32 @@ class DecimalPushdownSpec extends SparkSpec {
       "dp_err", "k = 1") == Right(Seq("[12.50]")))
   }
 
+  test("a Long or Int column's cast past its precision raises the unpushed read's error") {
+    val dir = tmp("graft-decint") + "/t"
+    spark.sql("SELECT * FROM VALUES (1L, 5L, 7, 0.5D, 0.1D), " +
+      "(2L, 123L, 456, 0.5D, CAST(NULL AS DOUBLE)) AS v(k, l, i, d, z)").coalesce(1)
+      .write.format("graft-objects").mode("overwrite").save(dir)
+    objectViews("dp_int", dir)
+    val err = Left("NUMERIC_VALUE_OUT_OF_RANGE.WITH_SUGGESTION")
+    for (c <- Seq("l", "i")) {
+      val alone = s"SELECT SUM(CAST($c AS DECIMAL(4,2))) FROM {t} WHERE {pred}"
+      val term = s"SELECT SUM(CAST(d AS DECIMAL(4,2)) * CAST($c AS DECIMAL(4,2))) " +
+        "FROM {t} WHERE {pred}"
+      assert(samePushed(alone, "dp_int", "TRUE") == err, c)
+      assert(samePushed(term, "dp_int", "TRUE") == err, c)
+      // a pushed filter that drops the bad row drops its error too
+      assert(samePushed(term, "dp_int", "k = 1").isRight, c)
+      // Spark evaluates a product's left operand first: an overflow
+      // there raises whatever the right, and a null there is null
+      // without the right's overflow
+      val (leftBad, leftNull) = (s"CAST($c AS DECIMAL(4,2)) * CAST(z AS DECIMAL(4,2))",
+        s"CAST(z AS DECIMAL(4,2)) * CAST($c AS DECIMAL(4,2))")
+      assert(samePushed(s"SELECT SUM($leftBad) FROM {t} WHERE {pred}", "dp_int", "TRUE") == err)
+      assert(samePushed(s"SELECT SUM($leftNull) FROM {t} WHERE {pred}", "dp_int", "TRUE") ==
+        Right(Seq(if (c == "l") "[0.5000]" else "[0.7000]")), c)
+    }
+  }
+
   test("a deletion vector, an added column, a widened column and VERSION AS OF") {
     val root = tmp("graft-deccat")
     spark.conf.set("spark.sql.catalog.gdec", "graft.sources.GraftCatalog")
