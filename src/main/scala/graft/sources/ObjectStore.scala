@@ -4208,7 +4208,13 @@ private[sources] object GraftPartialAggReaderFactory {
     * hash lookup), and the pair (slot so far, code) a fresh slot number
     * (one long-keyed lookup). No row allocates. */
   def slots(keep: Array[Boolean], keys: Seq[Array[Any]]): (Array[Int], Array[Int]) = {
-    val slot = keep.map(k => if (k) 0 else -1)
+    val slot = new Array[Int](keep.length)
+    var n = 0 // slots numbered so far
+    var r = 0
+    while (r < slot.length) {
+      if (keep(r)) n = 1 else slot(r) = -1
+      r += 1
+    }
     keys.filter(_ != null).foreach { col =>
       val codes = new util.HashMap[Any, Integer]()
       val pairs = new scala.collection.mutable.LongMap[Int]()
@@ -4224,11 +4230,13 @@ private[sources] object GraftPartialAggReaderFactory {
         }
         r += 1
       }
+      n = pairs.size
     }
-    val first = Array.fill(if (slot.isEmpty) 0 else slot.max + 1)(-1)
-    var r = 0
+    val first = Array.fill(n)(-1)
+    r = 0
     while (r < slot.length) {
-      if (slot(r) >= 0 && first(slot(r)) < 0) first(slot(r)) = r
+      val k = slot(r)
+      if (k >= 0 && first(k) < 0) first(k) = r
       r += 1
     }
     (slot, first)
