@@ -3791,10 +3791,9 @@ private[sources] object ObjectRows {
   * are read as stored: a column an older object stores narrower (an int
   * under a bigint, a float under a double) is read at its stored width,
   * and partials are in the table's type. A column the object predates
-  * reads as all null. Every
-  * aggregate merges associatively in Spark's final aggregate, so a slot
-  * may emit several partials: a decimal SUM does, to keep each one
-  * inside its field's precision. */
+  * reads as all null. Every aggregate merges associatively in Spark's
+  * final aggregate, so a slot may emit several partials: a decimal SUM
+  * does, to keep each one inside its field's precision. */
 private[sources] sealed abstract class PartialAcc {
   /** Slot k's partials, oldest first; at least one. */
   def partials(k: Int): Seq[Any]
